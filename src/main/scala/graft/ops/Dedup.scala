@@ -816,19 +816,6 @@ object Dedup {
       .filter(col("cosine") >= minCosine)
   }
 
-  /** [[nearDupGroups]] over [[tfidfCosinePairs]]: TF-IDF cosine pairs →
-    * connected components → whole-corpus labeling; `filter(col("keep"))`
-    * is the deduplicated corpus under the rare-term-weighted metric.
-    * Same scale shape as the other group forms: guarded inverted-index
-    * pairs, O(log diameter) pointer-jump clustering, id-only labeling
-    * join. */
-  def tfidfNearDupGroups(df: DataFrame, idCol: String, textCol: String,
-                         minCosine: Double = 0.8,
-                         maxDocFreq: Option[Long] = None): DataFrame =
-    labelGroups(df, idCol,
-      tfidfCosinePairs(df, idCol, textCol, minCosine, maxDocFreq)
-        .select(col("id1"), col("id2")))
-
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by spherical k-means clustering, then pairwise cosine
     * ONLY within a cluster. Where [[embeddingNearDup]]'s LSH buckets

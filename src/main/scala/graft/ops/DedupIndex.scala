@@ -74,12 +74,11 @@ object DedupIndex {
     // bands are derived from the PERSISTED signatures — the minhash
     // kernel (the dominant build cost) runs once, and the banded form
     // can never drift from the signatures it summarizes
-    Dedup.bandedFromSigs(spark.read.parquet(s"$path/sigs"), "id",
-        numHashes, bands, "id", "sig")
-      .select(col("band"), col("bh"), col("id"))
-      .repartition(col("band"), col("bh"))
-      .sortWithinPartitions("band", "bh", "id")
-      .write.mode("overwrite").parquet(s"$path/bands")
+    IndexLayout.bands.write(
+      Dedup.bandedFromSigs(spark.read.parquet(s"$path/sigs"), "id",
+          numHashes, bands, "id", "sig")
+        .select(col("band"), col("bh"), col("id")),
+      path, "overwrite")
     graft.store.MetaIO.writeRow(spark.sparkContext.hadoopConfiguration,
       s"$path/_meta", Seq(
         "n" -> n, "num_hashes" -> numHashes, "bands" -> bands,
@@ -116,38 +115,27 @@ object DedupIndex {
                        path: String, skipIdCheck: Boolean = false): Unit = {
     val spark = df.sparkSession
     val meta = loadMeta(spark, path)
-    val deltaIds = df.select(col(idCol).cast(LongType).as("id"))
-    val deltaCount = IndexIds.guardAndMerge(spark, path, "appendDedupIndex",
-      spark.read.parquet(s"$path/sigs").select("id"), deltaIds, skipIdCheck)
     val idL = when(col(idCol).cast(LongType).isNotNull, col(idCol).cast(LongType))
       .otherwise(raise_error(concat(
         lit(s"appendDedupIndex: id column '$idCol' must be non-null and numeric, got: "),
         coalesce(col(idCol).cast(StringType), lit("NULL")))))
-    val obs = org.apache.spark.sql.Observation()
-    val base = df
-      .select(idL.as("id"), col(textCol).as("text"))
-      .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
     val staging = s"$path/_staging-${java.util.UUID.randomUUID().toString.take(8)}"
-    base.filter(col("text").isNotNull)
-      .select(col("id"),
-        graft.functions.native.minhash_sig_tokens(
-          TextStats.tokens(col("text")), meta.n, meta.numHashes).as("sig"))
-      .write.mode("overwrite").parquet(staging)
-    val delta = Similarity.stampObserved(obs.get, df, idCol)
-    val staged = spark.read.parquet(staging)
-    staged.write.mode("append").parquet(s"$path/sigs")
-    Dedup.bandedFromSigs(staged, "id", meta.numHashes, meta.bands, "id", "sig")
-      .select(col("band"), col("bh"), col("id"))
-      .repartition(col("band"), col("bh"))
-      .sortWithinPartitions("band", "bh", "id")
-      .write.mode("append").parquet(s"$path/bands")
-    graft.store.MetaIO.writeRow(spark.sparkContext.hadoopConfiguration,
-      s"$path/_meta", Seq(
-        "n" -> meta.n, "num_hashes" -> meta.numHashes,
-        "bands" -> meta.bands,
-        "n_rows" -> (meta.stamp.nRows + delta.nRows),
-        "id_hash_sum" -> meta.stamp.idHashSum.add(delta.idHashSum)
-          .setScale(0)))
+    IndexLayout.Dedup.append(df, idCol, path, skipIdCheck) { obs =>
+      df.select(idL.as("id"), col(textCol).as("text"))
+        .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
+        .filter(col("text").isNotNull)
+        .select(col("id"),
+          graft.functions.native.minhash_sig_tokens(
+            TextStats.tokens(col("text")), meta.n, meta.numHashes).as("sig"))
+        .write.mode("overwrite").parquet(staging)
+      val staged = spark.read.parquet(staging)
+      staged.write.mode("append").parquet(s"$path/sigs")
+      IndexLayout.bands.write(
+        Dedup.bandedFromSigs(staged, "id", meta.numHashes, meta.bands, "id", "sig")
+          .select(col("band"), col("bh"), col("id")),
+        path, "append")
+      Nil
+    }
     // staging cleanup is best-effort: an underscore dir is invisible to
     // parquet listings, so a leftover can never corrupt a probe
     try {
@@ -157,8 +145,7 @@ object DedupIndex {
     } catch { case _: Exception => () }
   }
 
-  private[ops] final case class DiMeta(n: Int, numHashes: Int, bands: Int,
-                                  stamp: Similarity.IvfStamp)
+  private[ops] final case class DiMeta(n: Int, numHashes: Int, bands: Int)
 
   private[ops] def loadMeta(spark: SparkSession, path: String): DiMeta = {
     val m = graft.store.MetaIO.readRow(
@@ -166,9 +153,7 @@ object DedupIndex {
       .getOrElse(throw new IllegalStateException(
         s"dedup index at $path has no readable _meta"))
     DiMeta(m("n").asInstanceOf[Int], m("num_hashes").asInstanceOf[Int],
-      m("bands").asInstanceOf[Int],
-      Similarity.IvfStamp(m("n_rows").asInstanceOf[Long],
-        m("id_hash_sum").asInstanceOf[java.math.BigDecimal]))
+      m("bands").asInstanceOf[Int])
   }
 
   /** Freshness contract: the index's build stamp vs the live reference
@@ -176,9 +161,7 @@ object DedupIndex {
     * `IllegalStateException` on mismatch; rebuilding clears it. */
   def requireDedupIndexFresh(spark: SparkSession, path: String,
                              ref: DataFrame, idCol: String): Unit =
-    Similarity.requireStampFresh("dedup index", path,
-      loadMeta(spark, path).stamp, Similarity.sourceStamp(ref, idCol),
-      "buildDedupIndex")
+    IndexLayout.Dedup.requireFresh(spark, path, ref, idCol)
 
   /** Candidate near-dup pairs between `dfNew` (an incoming batch) and
     * the indexed corpus: (`id_new`, `id_ref`, `est_jaccard`), one row

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -129,69 +129,8 @@ private[graft] object IndexIds {
                  fpp: Double = DefaultFpp): Unit =
     write(spark, indexPath, bloomOf(ids, expected, fpp), expected, fpp, nIds)
 
-  /** The append-path novelty guard. Throws `IllegalArgumentException`
-    * naming the offending id on violation; returns the delta's
-    * (non-null) id count on success so callers can fold it into their
-    * additive stamps without a second scan.
-    *
-    * Checks, in order:
-    *  1. duplicate ids WITHIN the batch itself (one O(delta) agg —
-    *     count vs distinct): a batch that repeats an id would double
-    *     its rows just as surely as a re-append of old ids, and the
-    *     ids-vs-index scan alone cannot see it;
-    *  2. delta ids vs the index: Bloom probe (O(delta), zero index
-    *     reads on a clean pass) with precise fallback on suspects;
-    *     without a sidecar, the legacy full `indexIds` scan.
-    *
-    * `indexIds` is by-name: the Bloom fast path never evaluates it. */
-  def guardAppend(spark: SparkSession, indexPath: String, op: String,
-                  indexIds: => DataFrame, deltaIds: DataFrame): Long = {
-    val agg = deltaIds.agg(
-      count(col("id")).as("n"), count_distinct(col("id")).as("nd")).head()
-    val (n, nd) = (agg.getLong(0), agg.getLong(1))
-    require(n == nd,
-      s"$op: the batch itself contains duplicate ids ($n rows, $nd " +
-        "distinct) — appending it would double their entries exactly " +
-        "like a re-append of already-indexed ids; de-duplicate the " +
-        "batch first")
-    def refuse(dupId: Long): Nothing = throw new IllegalArgumentException(
-      s"$op: id $dupId is already indexed at $indexPath — re-appending " +
-        "would double its entries; rebuild the index (or pass " +
-        "skipIdCheck only when ids are guaranteed new)")
-    load(spark, indexPath) match {
-      case Some(ib) =>
-        val bc = spark.sparkContext.broadcast(ib.bloom)
-        try {
-          // codegen'd primitive-long probe (graft.functions
-          // .BloomMightContain) — no per-row boxing on the hot guard
-          val suspects = deltaIds
-            .filter(graft.functions.native.bloom_might_contain(col("id"), bc))
-            .distinct()
-          // emptiness probe first: in the all-novel common case this is
-          // the ONLY work — the index is never opened
-          if (suspects.limit(1).collect().nonEmpty) {
-            val dup = indexIds.join(suspects, Seq("id"), "left_semi")
-              .limit(1).collect()
-            if (dup.nonEmpty) refuse(dup(0).getLong(0))
-          }
-        } finally bc.destroy()
-      case None =>
-        // legacy / unreadable sidecar: the old precise full scan, then
-        // SELF-HEAL — write a Bloom of the index's CURRENT ids (the
-        // caller's mergeAppend folds the delta in, same as every other
-        // append), making every later append O(delta)
-        val dup = indexIds.join(deltaIds.distinct(), Seq("id"), "left_semi")
-          .limit(1).collect()
-        if (dup.nonEmpty) refuse(dup(0).getLong(0))
-        val cur = indexIds.select(col("id")).distinct()
-        write(spark, indexPath, bloomOf(cur, DefaultExpectedIds, DefaultFpp),
-          DefaultExpectedIds, DefaultFpp, cur.count())
-    }
-    nd
-  }
-
   /** The subset of `ids` (single LongType `id` column) already present
-    * in the index — the membership QUERY twin of [[guardAppend]]'s
+    * in the index — the membership QUERY twin of [[guardAndMerge]]'s
     * refusal, used by the streaming ingest sink to detect a replayed
     * batch. Bloom-prefiltered: when no id hits the Bloom the answer is
     * the empty frame with ZERO index reads (no false negatives);
@@ -239,7 +178,7 @@ private[graft] object IndexIds {
     * the replay signal for an append whose data footprint may be EMPTY
     * (a token-free document batch indexes no postings, so membership
     * against the index itself cannot see its replay). Sound in one
-    * direction: Blooms have no false negatives, and [[mergeAppend]]
+    * direction: Blooms have no false negatives, and [[guardAndMerge]]
     * runs BEFORE the data append, so a batch whose append ever STARTED
     * has all its ids in the Bloom — a `false` here proves the batch
     * was never appended. A `true` over-approximates (all-ids-false-
@@ -259,109 +198,104 @@ private[graft] object IndexIds {
       case None => false
     }
 
-  /** Small-delta cutoff for [[mergeAppend]]: up to this many ids are
-    * collected and folded into the loaded Bloom on the driver (≤ 800 KB
-    * of longs). Above it, the distributed build runs. The distributed
-    * path allocates one FULL-SIZE bitset per input partition and merges
-    * them (`BloomFilterAggregate` partials — ~5 MB each at the default
-    * sizing), so for the streaming-append common case (a micro-batch of
-    * thousands of ids) the driver fold is strictly cheaper: one
-    * limit-collect job instead of a bitset-per-partition aggregate. */
+  /** Small-delta cutoff for [[guardAndMerge]]: up to this many ids are
+    * collected once and every check and the merge fold run on the
+    * driver (≤ 800 KB of longs). Above it, Spark jobs run the checks and
+    * the distributed Bloom build merges — which allocates one FULL-SIZE
+    * bitset per input partition (`BloomFilterAggregate` partials, ~5 MB
+    * each at the default sizing), so for the streaming-append common
+    * case (a micro-batch of thousands of ids) the driver fold is strictly
+    * cheaper. */
   private val MaxLocalMergeIds = 100000
 
-  /** Fold a delta's ids into the sidecar (call BEFORE the data append —
-    * see the crash-ordering note in the class doc). A missing sidecar
-    * stays missing: without one the guard's legacy scan is still
-    * correct, and [[guardAppend]]'s self-heal (or the next rebuild)
-    * creates it with the index's full id set.
+  /** The append-path novelty guard FUSED with the Bloom merge — call it
+    * BEFORE the data append (see the crash-ordering note in the class
+    * doc). Throws `IllegalArgumentException` naming the offending id on
+    * violation; returns the delta's (non-null) distinct id count so
+    * callers can fold it into their additive stamps without a second
+    * scan.
     *
-    * The small/large split gates on `deltaCount` — already measured by
-    * every caller ([[guardAppend]]'s return) — so the delta's lineage is
-    * never evaluated twice (the old limit-probe collect was discarded
-    * and recomputed inside the distributed build just past the
-    * threshold). Duplicate ids (possible only under a violated
-    * `skipIdCheck` contract) merely inflate the small path's collect;
-    * folding an id twice sets the same bits.
+    * Checks, in order:
+    *  1. duplicate ids WITHIN the batch itself (count vs distinct): a
+    *     batch that repeats an id would double its rows just as surely
+    *     as a re-append of old ids, and the ids-vs-index check alone
+    *     cannot see it;
+    *  2. delta ids vs the index: Bloom probe (zero index reads on a
+    *     clean pass — Blooms have no false negatives) with a precise
+    *     verify of just the suspects against `indexIds`; without a
+    *     sidecar, the legacy full `indexIds` scan, after which the
+    *     sidecar SELF-HEALS from the index's current ids, making every
+    *     later append O(delta).
     *
-    * Bit-identical either way: `putLong` into the loaded filter sets
-    * exactly the bits a same-sized delta filter's `mergeInPlace` would
-    * OR in (same `expected`/`fpp` ⇒ same bit count and hash family). */
-  def mergeAppend(spark: SparkSession, indexPath: String,
-                  deltaIds: DataFrame, deltaCount: Long): Unit =
-    load(spark, indexPath).foreach { ib =>
-      val nn = deltaIds.filter(col("id").isNotNull)
-      if (deltaCount <= MaxLocalMergeIds) {
-        nn.collect().foreach(r => ib.bloom.putLong(r.getLong(0)))
-      } else {
-        val add = bloomOf(nn, ib.expected, ib.fpp)
-        ib.bloom.mergeInPlace(add)
-      }
-      write(spark, indexPath, ib.bloom, ib.expected, ib.fpp,
-        ib.nIds + deltaCount)
-    }
-
-  /** [[guardAppend]] + [[mergeAppend]] FUSED for the append hot path:
-    * the unfused pair costs three delta-sized jobs per append (the
-    * dup-check aggregate, the Bloom suspect probe, the merge collect) —
-    * a streaming micro-batch pays all three per batch for a few
-    * thousand ids. Here one bounded collect serves every check: the
-    * within-batch duplicate test, the Bloom membership probe (same
-    * filter, same `mightContainLong` bits), and the merge fold, all
-    * driver-side. Semantics are [[guardAppend]]'s exactly — same
-    * refusal messages, same precise fallback verify against `indexIds`
-    * on Bloom hits, same self-heal for sidecar-less legacy trees (which
-    * takes the unfused path, as does any delta past the local-merge
-    * bound). Returns the delta's (non-null) distinct id count.
-    *
-    * `skipIdCheck` skips the duplicate/membership checks but never the
-    * Bloom bookkeeping — identical to the unfused contract. */
+    * A delta of up to [[MaxLocalMergeIds]] ids costs ONE bounded
+    * collect: the duplicate test, the Bloom probe and the merge fold
+    * all run on the driver against the loaded filter. Bit-identical to
+    * the distributed path: `putLong` into the loaded filter sets exactly
+    * the bits a same-sized delta filter's `mergeInPlace` would OR in.
+    * `skipIdCheck` skips the checks but never the Bloom bookkeeping; a
+    * legacy tree then stays sidecar-less (its guard scan stays correct).
+    * `indexIds` is by-name: the all-novel Bloom path never evaluates it. */
   def guardAndMerge(spark: SparkSession, indexPath: String, op: String,
                     indexIds: => DataFrame, deltaIds: DataFrame,
                     skipIdCheck: Boolean): Long = {
-    def unfused(): Long = {
-      val nd =
-        if (!skipIdCheck) guardAppend(spark, indexPath, op, indexIds, deltaIds)
-        else deltaIds.filter(col("id").isNotNull).distinct().count()
-      mergeAppend(spark, indexPath, deltaIds, nd)
-      nd
+    val nn = deltaIds.filter(col("id").isNotNull)
+    val live = load(spark, indexPath)
+    val local = live
+      .map(_ => nn.limit(MaxLocalMergeIds + 1).collect().map(_.getLong(0)))
+      .filter(_.length <= MaxLocalMergeIds)
+    val (n, nd) = local.fold {
+      val r = deltaIds.agg(count(col("id")), count_distinct(col("id"))).head()
+      (r.getLong(0), r.getLong(1))
+    }(ids => (ids.length.toLong, ids.distinct.length.toLong))
+    if (!skipIdCheck) {
+      require(n == nd,
+        s"$op: the batch itself contains duplicate ids ($n rows, $nd " +
+          "distinct) — appending it would double their entries exactly " +
+          "like a re-append of already-indexed ids; de-duplicate the " +
+          "batch first")
+      // precise verify, only for the suspect ids (real dups about to be
+      // refused, or the ~fpp false-positive fraction)
+      def verify(suspects: DataFrame) =
+        indexIds.join(suspects, Seq("id"), "left_semi").limit(1).collect()
+      val dup = (live, local) match {
+        case (None, _) => verify(nn.distinct())
+        case (Some(ib), Some(ids)) =>
+          val suspects = ids.distinct.filter(ib.bloom.mightContainLong)
+          import spark.implicits._
+          if (suspects.isEmpty) Array.empty[Row]
+          else verify(broadcast(suspects.toSeq.toDF("id")))
+        case (Some(ib), None) =>
+          val bc = spark.sparkContext.broadcast(ib.bloom)
+          try {
+            // codegen'd primitive-long probe (graft.functions
+            // .BloomMightContain) — no per-row boxing on the hot guard
+            val suspects = nn
+              .filter(graft.functions.native.bloom_might_contain(col("id"), bc))
+              .distinct()
+            if (suspects.limit(1).collect().isEmpty) Array.empty[Row]
+            else verify(suspects)
+          } finally bc.destroy()
+      }
+      if (dup.nonEmpty) throw new IllegalArgumentException(
+        s"$op: id ${dup(0).getLong(0)} is already indexed at $indexPath — " +
+          "re-appending would double its entries; rebuild the index (or " +
+          "pass skipIdCheck only when ids are guaranteed new)")
     }
-    load(spark, indexPath) match {
-      case None => unfused() // legacy tree: full-scan guard + self-heal
-      case Some(ib) =>
-        val local = deltaIds.filter(col("id").isNotNull)
-          .limit(MaxLocalMergeIds + 1).collect()
-        if (local.length > MaxLocalMergeIds) unfused()
-        else {
-          val ids = local.map(_.getLong(0))
-          val distinctIds = ids.distinct
-          if (!skipIdCheck) {
-            require(ids.length == distinctIds.length,
-              s"$op: the batch itself contains duplicate ids " +
-                s"(${ids.length} rows, ${distinctIds.length} distinct) — " +
-                "appending it would double their entries exactly like a " +
-                "re-append of already-indexed ids; de-duplicate the batch " +
-                "first")
-            val suspects = distinctIds.filter(ib.bloom.mightContainLong)
-            if (suspects.nonEmpty) {
-              // precise verify, only for the suspect ids (real dups about
-              // to be refused, or the ~fpp false-positive fraction)
-              import spark.implicits._
-              val dup = indexIds
-                .join(broadcast(suspects.toSeq.toDF("id")), Seq("id"),
-                  "left_semi")
-                .limit(1).collect()
-              if (dup.nonEmpty) throw new IllegalArgumentException(
-                s"$op: id ${dup(0).getLong(0)} is already indexed at " +
-                  s"$indexPath — re-appending would double its entries; " +
-                  "rebuild the index (or pass skipIdCheck only when ids " +
-                  "are guaranteed new)")
-            }
-          }
-          ids.foreach(ib.bloom.putLong)
-          write(spark, indexPath, ib.bloom, ib.expected, ib.fpp,
-            ib.nIds + distinctIds.length)
-          distinctIds.length.toLong
-        }
+    val target = live.orElse(if (skipIdCheck) None else {
+      val cur = indexIds.select(col("id")).distinct()
+      Some(IdBloom(bloomOf(cur, DefaultExpectedIds, DefaultFpp),
+        DefaultExpectedIds, DefaultFpp, cur.count()))
+    })
+    target.foreach { ib =>
+      local match {
+        case Some(ids) => ids.foreach(ib.bloom.putLong)
+        // bounded by nd even when a skipIdCheck batch repeats ids
+        case None if nd <= MaxLocalMergeIds =>
+          nn.distinct().collect().foreach(r => ib.bloom.putLong(r.getLong(0)))
+        case None => ib.bloom.mergeInPlace(bloomOf(nn, ib.expected, ib.fpp))
+      }
+      write(spark, indexPath, ib.bloom, ib.expected, ib.fpp, ib.nIds + nd)
     }
+    nd
   }
 }

@@ -231,59 +231,51 @@ object Quantize {
       .write.mode("overwrite").parquet(path)
     val stamp = Similarity.stampObserved(obs.get, df, idCol)
     Similarity.requireIndexNonEmpty(spark, path, "buildPqIndex", stamp.nRows)
-    writeCodebook(spark, path, cbs, stamp)
+    writeCodewords(spark, s"$path/_codebook", cbs, Some(stamp))
     IndexIds.writeFresh(spark, path,
       df.select(col(idCol).cast(LongType).as("id")), stamp.nRows,
       expectedIds, idFpp)
   }
 
-  private[ops] def writeCodebook(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, cbs: Seq[Seq[Seq[Double]]],
-                                 stamp: Similarity.IvfStamp): Unit =
-    // driver-direct (MetaIO): m×k driver-held rows — the old coalesce(1)
-    // Spark write paid a full job per (re)write, once per PQ append batch
-    graft.store.MetaIO.writeRows(spark.sparkContext.hadoopConfiguration,
-      s"$path/_codebook",
-      Seq("s" -> (0L: Any), "j" -> (0L: Any),
-        "codeword" -> (Seq(0.0d): Any), "n_rows" -> (0L: Any),
-        "id_hash_sum" -> (java.math.BigDecimal.ZERO: Any)),
-      (for { (cb, s) <- cbs.iterator.zipWithIndex; (c, j) <- cb.iterator.zipWithIndex }
-        yield Seq[Any](s.toLong, j.toLong, c, stamp.nRows,
-          stamp.idHashSum.setScale(0))))
+  /** PQ codebooks as `(s, j, codeword)` rows at `dir`, plus the
+    * constant stamp columns when `stamp` is set — driver-direct
+    * (MetaIO): m×k driver-held rows never needed a Spark job. */
+  private def writeCodewords(spark: org.apache.spark.sql.SparkSession,
+                             dir: String, cbs: Seq[Seq[Seq[Double]]],
+                             stamp: Option[Similarity.IvfStamp]): Unit =
+    graft.store.MetaIO.writeRows(spark.sparkContext.hadoopConfiguration, dir,
+      Seq("s" -> (0L: Any), "j" -> (0L: Any), "codeword" -> (Seq(0.0d): Any)) ++
+        stamp.map(_ => Seq("n_rows" -> (0L: Any),
+          "id_hash_sum" -> (java.math.BigDecimal.ZERO: Any))).getOrElse(Nil),
+      for { (cb, s) <- cbs.iterator.zipWithIndex; (c, j) <- cb.iterator.zipWithIndex }
+        yield Seq[Any](s.toLong, j.toLong, c) ++
+          stamp.map(st => Seq[Any](st.nRows, st.idHashSum.setScale(0))).getOrElse(Nil))
 
-  /** The codebooks a [[buildPqIndex]] index was built with. */
-  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Seq[Seq[Seq[Double]]] = {
-    // driver-direct read (MetaIO): m×k small rows, collected whole anyway
-    val rows = graft.store.MetaIO.readRows(
-      spark.sparkContext.hadoopConfiguration, s"$path/_codebook")
-    rows.groupBy(_("s").asInstanceOf[Long]).toSeq.sortBy(_._1)
+  /** The codebooks of a [[writeCodewords]] sidecar at `dir`. */
+  private def loadCodewords(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Seq[Seq[Seq[Double]]] =
+    graft.store.MetaIO.readRows(spark.sparkContext.hadoopConfiguration, dir)
+      .groupBy(_("s").asInstanceOf[Long]).toSeq.sortBy(_._1)
       .map { case (_, rs) =>
         rs.sortBy(_("j").asInstanceOf[Long])
           .map(_("codeword").asInstanceOf[Seq[Any]]
             .map(_.asInstanceOf[Double]).toSeq).toSeq }
-  }
+
+  /** The codebooks a [[buildPqIndex]] index was built with. */
+  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
+                      path: String): Seq[Seq[Seq[Double]]] =
+    loadCodewords(spark, s"$path/_codebook")
 
   /** The stamp a [[buildPqIndex]] index was built with. */
   def loadPqStamp(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Similarity.IvfStamp = {
-    // driver-direct projected read — the stamp scalars ride every
-    // codebook row; the codeword arrays are never materialized
-    val m = graft.store.MetaIO.readRowColumns(
-        spark.sparkContext.hadoopConfiguration, s"$path/_codebook",
-        Seq("n_rows", "id_hash_sum"))
-      .getOrElse(throw new IllegalStateException(
-        s"PQ index at $path has no readable _codebook"))
-    Similarity.IvfStamp(m("n_rows").asInstanceOf[Long],
-      m("id_hash_sum").asInstanceOf[java.math.BigDecimal])
-  }
+                  path: String): Similarity.IvfStamp =
+    IndexLayout.Pq.loadStamp(spark, path)
 
   /** Freshness contract ([[Similarity.requireIvfFresh]] shape): the
     * live source's id-only stamp must equal the one built. */
   def requirePqFresh(spark: org.apache.spark.sql.SparkSession, path: String,
                      df: DataFrame, idCol: String): Unit =
-    Similarity.requireStampFresh("PQ index", path, loadPqStamp(spark, path),
-      Similarity.sourceStamp(df, idCol), "buildPqIndex")
+    IndexLayout.Pq.requireFresh(spark, path, df, idCol)
 
   /** INCREMENTAL build: encode NEW vectors with the index's OWN
     * codebooks (read from `_codebook` — build/append assignment can
@@ -298,18 +290,13 @@ object Quantize {
                     path: String, skipIdCheck: Boolean = false): Unit = {
     val spark = df.sparkSession
     val cbs = loadPqCodebooks(spark, path)
-    val stamp0 = loadPqStamp(spark, path)
-    val deltaIds = df.select(col(idCol).cast(LongType).as("id"))
-    val deltaCount = IndexIds.guardAndMerge(spark, path, "appendPqIndex",
-      spark.read.parquet(path).select("id"), deltaIds, skipIdCheck)
-    val obs = org.apache.spark.sql.Observation()
-    pqEncode(df, idCol, vecCol, cbs)
-      .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
-      .sortWithinPartitions(col("id"))
-      .write.mode("append").parquet(path)
-    val delta = Similarity.stampObserved(obs.get, df, idCol)
-    writeCodebook(spark, path, cbs, Similarity.IvfStamp(
-      stamp0.nRows + delta.nRows, stamp0.idHashSum.add(delta.idHashSum)))
+    IndexLayout.Pq.append(df, idCol, path, skipIdCheck) { obs =>
+      pqEncode(df, idCol, vecCol, cbs)
+        .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
+        .sortWithinPartitions(col("id"))
+        .write.mode("append").parquet(path)
+      Nil
+    }
   }
 
   // ---------------------------------------------------------------- //
@@ -342,76 +329,40 @@ object Quantize {
     val dyy = Similarity.centroidNorms(spark, coarseCb)
     val cc = codewordNorms(spark, cbs)
     val obs = org.apache.spark.sql.Observation()
-    df.select(col(idCol).cast(LongType).as("id"),
-        graft.functions.native.pq_codes(col(vecCol), cbs, cc).as("codes"),
-        Similarity.nearestCentroid(col(vecCol), coarseCb, dyy).as("list"))
-      .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
-      .repartition(col("list"))
-      .sortWithinPartitions(col("list"), col("id"))
-      .write.partitionBy("list").mode("overwrite").parquet(path)
+    IndexLayout.lists.write(
+      df.select(col(idCol).cast(LongType).as("id"),
+          graft.functions.native.pq_codes(col(vecCol), cbs, cc).as("codes"),
+          Similarity.nearestCentroid(col(vecCol), coarseCb, dyy).as("list"))
+        .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*),
+      path, "overwrite")
     val stamp = Similarity.stampObserved(obs.get, df, idCol)
     Similarity.requireIndexNonEmpty(spark, path, "buildIvfPqIndex", stamp.nRows)
-    writeCoarse(spark, path, coarseCb, stamp)
-    writePqcb(spark, path, cbs)
+    Similarity.writeIvfCodebook(spark, s"$path/_coarse", coarseCb, stamp)
+    writeCodewords(spark, s"$path/_pqcb", cbs, None)
     IndexIds.writeFresh(spark, path,
       df.select(col(idCol).cast(LongType).as("id")), stamp.nRows,
       expectedIds, idFpp)
   }
 
-  private[ops] def writeCoarse(spark: org.apache.spark.sql.SparkSession,
-                               path: String, coarseCb: Seq[Seq[Double]],
-                               stamp: Similarity.IvfStamp): Unit =
-    // driver-direct — the IVF codebook writer's rationale verbatim
-    Similarity.writeIvfCodebook(spark, s"$path/_coarse", coarseCb, stamp)
-
-  private def writePqcb(spark: org.apache.spark.sql.SparkSession,
-                        path: String, cbs: Seq[Seq[Seq[Double]]]): Unit =
-    graft.store.MetaIO.writeRows(spark.sparkContext.hadoopConfiguration,
-      s"$path/_pqcb",
-      Seq("s" -> (0L: Any), "j" -> (0L: Any),
-        "codeword" -> (Seq(0.0d): Any)),
-      (for { (cb, s) <- cbs.iterator.zipWithIndex; (c, j) <- cb.iterator.zipWithIndex }
-        yield Seq[Any](s.toLong, j.toLong, c)))
-
   /** The coarse codebook an IVF+PQ index was built with, in list order. */
   def loadIvfPqCoarse(spark: org.apache.spark.sql.SparkSession,
                       path: String): Seq[Seq[Double]] =
-    graft.store.MetaIO.readRows(
-        spark.sparkContext.hadoopConfiguration, s"$path/_coarse")
-      .sortBy(m => m("j").asInstanceOf[Long])
-      .map(m => m("centroid").asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[Double]))
+    Similarity.loadCentroids(spark, s"$path/_coarse")
 
   /** The PQ codebooks an IVF+PQ index was built with. */
   def loadIvfPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Seq[Seq[Seq[Double]]] = {
-    val rows = graft.store.MetaIO.readRows(
-      spark.sparkContext.hadoopConfiguration, s"$path/_pqcb")
-    rows.groupBy(_("s").asInstanceOf[Long]).toSeq.sortBy(_._1)
-      .map { case (_, rs) =>
-        rs.sortBy(_("j").asInstanceOf[Long])
-          .map(_("codeword").asInstanceOf[Seq[Any]]
-            .map(_.asInstanceOf[Double]).toSeq).toSeq }
-  }
+                         path: String): Seq[Seq[Seq[Double]]] =
+    loadCodewords(spark, s"$path/_pqcb")
 
   /** The stamp an IVF+PQ index was built with (rides `_coarse`). */
   def loadIvfPqStamp(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Similarity.IvfStamp = {
-    val m = graft.store.MetaIO.readRowColumns(
-        spark.sparkContext.hadoopConfiguration, s"$path/_coarse",
-        Seq("n_rows", "id_hash_sum"))
-      .getOrElse(throw new IllegalStateException(
-        s"IVF+PQ index at $path has no readable _coarse"))
-    Similarity.IvfStamp(m("n_rows").asInstanceOf[Long],
-      m("id_hash_sum").asInstanceOf[java.math.BigDecimal])
-  }
+                     path: String): Similarity.IvfStamp =
+    IndexLayout.IvfPq.loadStamp(spark, path)
 
   /** Freshness contract for the composed index. */
   def requireIvfPqFresh(spark: org.apache.spark.sql.SparkSession,
                         path: String, df: DataFrame, idCol: String): Unit =
-    Similarity.requireStampFresh("IVF+PQ index", path,
-      loadIvfPqStamp(spark, path), Similarity.sourceStamp(df, idCol),
-      "buildIvfPqIndex")
+    IndexLayout.IvfPq.requireFresh(spark, path, df, idCol)
 
   /** INCREMENTAL build for the composed index: NEW vectors are assigned
     * with the index's OWN coarse codebook and encoded with its OWN PQ
@@ -423,23 +374,17 @@ object Quantize {
     val spark = df.sparkSession
     val coarseCb = loadIvfPqCoarse(spark, path)
     val cbs = loadIvfPqCodebooks(spark, path)
-    val stamp0 = loadIvfPqStamp(spark, path)
-    val deltaIds = df.select(col(idCol).cast(LongType).as("id"))
-    val deltaCount = IndexIds.guardAndMerge(spark, path, "appendIvfPqIndex",
-      spark.read.parquet(path).select("id"), deltaIds, skipIdCheck)
-    val dyy = Similarity.centroidNorms(spark, coarseCb)
-    val cc = codewordNorms(spark, cbs)
-    val obs = org.apache.spark.sql.Observation()
-    df.select(col(idCol).cast(LongType).as("id"),
-        graft.functions.native.pq_codes(col(vecCol), cbs, cc).as("codes"),
-        Similarity.nearestCentroid(col(vecCol), coarseCb, dyy).as("list"))
-      .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
-      .repartition(col("list"))
-      .sortWithinPartitions(col("list"), col("id"))
-      .write.partitionBy("list").mode("append").parquet(path)
-    val delta = Similarity.stampObserved(obs.get, df, idCol)
-    writeCoarse(spark, path, coarseCb, Similarity.IvfStamp(
-      stamp0.nRows + delta.nRows, stamp0.idHashSum.add(delta.idHashSum)))
+    IndexLayout.IvfPq.append(df, idCol, path, skipIdCheck) { obs =>
+      val dyy = Similarity.centroidNorms(spark, coarseCb)
+      val cc = codewordNorms(spark, cbs)
+      IndexLayout.lists.write(
+        df.select(col(idCol).cast(LongType).as("id"),
+            graft.functions.native.pq_codes(col(vecCol), cbs, cc).as("codes"),
+            Similarity.nearestCentroid(col(vecCol), coarseCb, dyy).as("list"))
+          .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*),
+        path, "append")
+      Nil
+    }
   }
 
   /** Top-k over the composed index: rank coarse lists by the query's

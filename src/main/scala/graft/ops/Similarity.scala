@@ -899,15 +899,11 @@ object Similarity {
     // the build STAMP (source row count + exact-decimal id-hash sum) rides the
     // write job itself via Observation — no second scan of the source
     val obs = org.apache.spark.sql.Observation()
-    df.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("vec"),
-        nearestCentroid(col(vecCol), codebook, dyy).as("list"))
-      .observe(obs, stampExprs.head, stampExprs.tail: _*)
-      .repartition(col("list"))
-      // list leads the sort: it satisfies the partitionBy writer's
-      // required ordering, so no second writer-side sort and the id
-      // order inside each list directory is guaranteed
-      .sortWithinPartitions(col("list"), col("id"))
-      .write.partitionBy("list").mode("overwrite").parquet(path)
+    IndexLayout.lists.write(
+      df.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("vec"),
+          nearestCentroid(col(vecCol), codebook, dyy).as("list"))
+        .observe(obs, stampExprs.head, stampExprs.tail: _*),
+      path, "overwrite")
     val stamp = stampObserved(obs.get, df, idCol)
     requireIndexNonEmpty(spark, path, "buildIvfIndex", stamp.nRows)
     // the index is SELF-DESCRIBING: the codebook AND the build stamp ride
@@ -947,22 +943,15 @@ object Similarity {
                      path: String, skipIdCheck: Boolean = false): Unit = {
     val spark = df.sparkSession
     val codebook = loadIvfCodebook(spark, path)
-    val stamp0 = loadIvfStamp(spark, path)
-    val deltaIds = df.select(col(idCol).cast(LongType).as("id"))
-    val deltaCount = IndexIds.guardAndMerge(spark, path, "appendIvfIndex",
-      spark.read.parquet(path).select("id"), deltaIds, skipIdCheck)
-    val dyy = centroidNorms(spark, codebook)
-    val obs = org.apache.spark.sql.Observation()
-    df.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("vec"),
-        nearestCentroid(col(vecCol), codebook, dyy).as("list"))
-      .observe(obs, stampExprs.head, stampExprs.tail: _*)
-      .repartition(col("list"))
-      .sortWithinPartitions(col("list"), col("id"))
-      .write.partitionBy("list").mode("append").parquet(path)
-    val delta = stampObserved(obs.get, df, idCol)
-    writeIvfCodebook(spark, s"$path/_codebook", codebook,
-      IvfStamp(stamp0.nRows + delta.nRows,
-        stamp0.idHashSum.add(delta.idHashSum)))
+    IndexLayout.Ivf.append(df, idCol, path, skipIdCheck) { obs =>
+      val dyy = centroidNorms(spark, codebook)
+      IndexLayout.lists.write(
+        df.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("vec"),
+            nearestCentroid(col(vecCol), codebook, dyy).as("list"))
+          .observe(obs, stampExprs.head, stampExprs.tail: _*),
+        path, "append")
+      Nil
+    }
   }
 
   /** The `_codebook` sidecar (k centroid rows + the constant stamp
@@ -1021,16 +1010,18 @@ object Similarity {
     * reduce even unpartitioned empty writes to nothing), so the tree
     * would throw "unable to infer schema" on every later read — fail
     * here instead, and remove the stillborn tree. Appends are exempt:
-    * an existing tree already has readable files. */
+    * an existing tree already has readable files. `n` is whatever
+    * count decides emptiness (rows, or postings); `why` the refusal. */
   private[ops] def requireIndexNonEmpty(spark: org.apache.spark.sql.SparkSession,
-                                        path: String, op: String,
-                                        nRows: Long): Unit =
-    if (nRows == 0L) {
+                                        path: String, op: String, n: Long,
+                                        why: String = "the corpus is empty — " +
+                                          "an index with zero rows has no data " +
+                                          "files and cannot be read back; build " +
+                                          "from a non-empty corpus"): Unit =
+    if (n == 0L) {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      throw new IllegalArgumentException(
-        s"$op: the corpus is empty — an index with zero rows has no " +
-          "data files and cannot be read back; build from a non-empty corpus")
+      throw new IllegalArgumentException(s"$op: $why")
     }
 
   private[ops] def stampOf(m: Map[String, Any]): IvfStamp =
@@ -1042,29 +1033,8 @@ object Similarity {
 
   /** The stamp a [[buildIvfIndex]] index was built with. */
   def loadIvfStamp(spark: org.apache.spark.sql.SparkSession,
-                   path: String): IvfStamp = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val cols = graft.store.MetaIO.columnsOf(conf, s"$path/_codebook")
-      .getOrElse(throw new IllegalStateException(
-        s"IVF index at $path has no readable _codebook"))
-    // a pre-hashed-stamp index (raw `id_sum` column) is INCOMPATIBLE,
-    // not unresolvable: the probe-many contract spans jobs, so on-disk
-    // indexes outlive code — name the remedy instead of erroring on a
-    // missing column
-    if (!cols.contains("id_hash_sum"))
-      throw new IllegalStateException(
-        s"IVF index at $path predates the hashed freshness stamp " +
-          s"(columns: ${cols.mkString(", ")}); rebuild with buildIvfIndex")
-    // driver-direct projected read: the stamp scalars ride every
-    // codebook row (constant), so the first row suffices and the
-    // centroid arrays are never materialized
-    val m = graft.store.MetaIO.readRowColumns(conf, s"$path/_codebook",
-        Seq("n_rows", "id_hash_sum"))
-      .getOrElse(throw new IllegalStateException(
-        s"IVF index at $path has no readable _codebook"))
-    IvfStamp(m("n_rows").asInstanceOf[Long],
-      m("id_hash_sum").asInstanceOf[java.math.BigDecimal])
-  }
+                   path: String): IvfStamp =
+    IndexLayout.Ivf.loadStamp(spark, path)
 
   /** The (row count, id-hash-sum) stamp of a live source table — the
     * SAME stampExprs the builds observe, as a column-pruned id-only
@@ -1084,8 +1054,7 @@ object Similarity {
     * silently serve stale neighbors. Rebuilding clears it. */
   def requireIvfFresh(spark: org.apache.spark.sql.SparkSession, path: String,
                       df: DataFrame, idCol: String): Unit =
-    requireStampFresh("IVF index", path, loadIvfStamp(spark, path),
-      sourceStamp(df, idCol), "buildIvfIndex")
+    IndexLayout.Ivf.requireFresh(spark, path, df, idCol)
 
   /** The staleness comparison shared by every persisted-index freshness
     * contract (IVF, text) — one message shape, one compare. */
@@ -1103,9 +1072,13 @@ object Similarity {
     * order. */
   def loadIvfCodebook(spark: org.apache.spark.sql.SparkSession,
                       path: String): Seq[Seq[Double]] =
-    // driver-direct read (MetaIO): k small rows, collected whole anyway
-    graft.store.MetaIO.readRows(
-        spark.sparkContext.hadoopConfiguration, s"$path/_codebook")
+    loadCentroids(spark, s"$path/_codebook")
+
+  /** The centroids of a [[writeIvfCodebook]] sidecar at `dir`, in `j`
+    * order — driver-direct (MetaIO): k small rows, collected whole. */
+  private[ops] def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String): Seq[Seq[Double]] =
+    graft.store.MetaIO.readRows(spark.sparkContext.hadoopConfiguration, dir)
       .sortBy(m => m("j").asInstanceOf[Long])
       .map(m => m("centroid").asInstanceOf[Seq[Any]]
         .map(_.asInstanceOf[Double]))

@@ -147,29 +147,20 @@ object TextIndex {
     // required ordering, so the writer inserts NO second sort and the
     // (token, id) order inside each bucket is guaranteed (a writer-side
     // re-sort by bucket alone is not stable once spilled runs merge)
-    postings.repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "token", "id")
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    IndexLayout.postings.write(postings, path, "overwrite")
     val stamp = Similarity.stampObserved(obs.get, df, idCol)
     // getOrElse: an all-token-free corpus writes zero postings and AQE
     // empty-relation propagation can drop the CollectMetrics node (the
     // stampObserved hazard) — zero tokens is then the true total
     val totalTokens = tokObs.get.getOrElse("total_tokens", 0L).asInstanceOf[Long]
-    if (totalTokens == 0L) {
-      // a zero-posting build (empty corpus, or every document
-      // token-free) leaves the partitionBy writer with NO data files —
-      // the tree would throw 'unable to infer schema' on every later
-      // read. Refuse at build time and remove the stillborn tree.
-      // (Token-free documents are fine as an append DELTA — the tree
-      // already has readable files then.)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      throw new IllegalArgumentException(
-        s"buildTextIndex: the corpus produced ZERO postings (empty, or " +
-          "all documents token-free) — an index with no data files " +
-          "cannot be read back; validate/filter the corpus upstream")
-    }
+    // a zero-posting build (empty corpus, or every document token-free)
+    // leaves the partitionBy writer with NO data files. (Token-free
+    // documents are fine as an append DELTA — the tree already has
+    // readable files then.)
+    Similarity.requireIndexNonEmpty(spark, path, "buildTextIndex", totalTokens,
+      "the corpus produced ZERO postings (empty, or all documents " +
+        "token-free) — an index with no data files cannot be read back; " +
+        "validate/filter the corpus upstream")
     // token-free ids (counted in the stamp, zero postings) — recorded
     // BEFORE _meta so a complete `_meta` implies a complete sidecar.
     // Computed as an anti-join of the corpus ids against the id column
@@ -231,80 +222,67 @@ object TextIndex {
                       path: String, skipIdCheck: Boolean = false): Unit = {
     val spark = df.sparkSession
     val meta = loadMeta(spark, path)
-    val totalTokens0 = meta.totalTokens.getOrElse(throw new IllegalStateException(
-      s"text index at $path predates the BM25 posting columns " +
-        "(no total_tokens in _meta); rebuild with buildTextIndex"))
-    val deltaIds = df.select(col(idCol).cast(LongType).as("id"))
-    // fused guard + Bloom merge (one delta-sized job, not three); the
-    // precise fallback verifies against posting ids PLUS the token-free
-    // sidecar: posting membership alone would re-admit a token-free id
-    // and double-count it in `_meta`
-    val deltaCount = IndexIds.guardAndMerge(spark, path, "appendTextIndex",
-      indexedIds(spark, path), deltaIds, skipIdCheck)
-    val obs = org.apache.spark.sql.Observation()
-    val tokObs = org.apache.spark.sql.Observation()
-    val tfObs = org.apache.spark.sql.Observation()
-    val postings = df
-      .select(col(idCol).cast(LongType).as("id"), col(textCol).as("text"))
-      .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
-      // token-free presence rides the postings pass (one extra per-row
-      // tokenization in a stage that tokenizes anyway) so the common
-      // all-tokened batch skips the separate detection scan below;
-      // size(null) is -1, so <= 0 covers NULL text, and the id-notnull
-      // guard makes this the EXACT predicate of the sidecar frame (a
-      // null-id token-free row must not trigger a pointless write)
-      // pre-explode doc_len — the buildTextIndex rewrite's rationale:
-      // identical value (size of the non-empty token array == sum(tf)),
-      // one fewer exchange+sort per append. The token-free observation
-      // moves onto the materialized array (size(null) is -1, so <= 0
-      // still covers NULL text) — the tokenizer now runs once per row,
-      // not once for the metric and again for the explode.
-      .select(col("id"), postingTokens(col("text")).as("_tt"))
-      .observe(tfObs, coalesce(sum(
-          when(col("id").isNotNull && size(col("_tt")) <= 0, lit(1L))
-            .otherwise(lit(0L))), lit(0L)).as("n_tokenfree"))
-      .select(col("id"), size(col("_tt")).cast(LongType).as("doc_len"),
-        posexplode(col("_tt")))
-      .withColumnRenamed("col", "token")
-      .groupBy("id", "doc_len", "token").agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .observe(tokObs, coalesce(sum(col("tf")), lit(0L)).as("total_tokens"))
-      .withColumn("bucket",
-        pmod(TextStats.hash60(col("token")), lit(meta.nBuckets.toLong)))
-    postings.repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "token", "id")
-      .write.partitionBy("bucket").mode("append").parquet(path)
-    // the delta's token-free ids land AFTER the postings append (a
-    // sidecar id must never precede its batch's postings — a mixed
-    // batch's replay detection keys on posting membership) and BEFORE
-    // the _meta rewrite (complete `_meta` implies complete sidecar).
-    // The observed count decides whether the delta-sized detection
-    // scan runs at all; a LOST metrics node (an empty postings write —
-    // exactly the all-token-free batch, see the stampObserved note)
-    // must fall back to the scan, never to "none": skipping the
-    // sidecar there would break that batch's replay detection.
-    val nTokenFree = tfObs.get.getOrElse("n_tokenfree", -1L)
-      .asInstanceOf[Long]
-    if (nTokenFree != 0L) {
-      val tokenFree = df
-        .select(col(idCol).cast(LongType).as("id"),
-          size(postingTokens(col(textCol))).as("_ntok"))
-        .filter(col("id").isNotNull && col("_ntok") <= 0)
-        .select("id").distinct()
-      if (nTokenFree > 0L || tokenFree.limit(1).collect().nonEmpty)
-        tokenFree.coalesce(1).write.mode("append")
-          .parquet(tokenFreePath(path))
+    requireTokenTotal(meta, path)
+    // the guard's precise fallback verifies against posting ids PLUS the
+    // token-free sidecar ([[IndexLayout.Text]]): posting membership alone
+    // would re-admit a token-free id and double-count it in `_meta`
+    IndexLayout.Text.append(df, idCol, path, skipIdCheck) { obs =>
+      val tokObs = org.apache.spark.sql.Observation()
+      val tfObs = org.apache.spark.sql.Observation()
+      val postings = df
+        .select(col(idCol).cast(LongType).as("id"), col(textCol).as("text"))
+        .observe(obs, Similarity.stampExprs.head, Similarity.stampExprs.tail: _*)
+        // token-free presence rides the postings pass (one extra per-row
+        // tokenization in a stage that tokenizes anyway) so the common
+        // all-tokened batch skips the separate detection scan below;
+        // size(null) is -1, so <= 0 covers NULL text, and the id-notnull
+        // guard makes this the EXACT predicate of the sidecar frame (a
+        // null-id token-free row must not trigger a pointless write)
+        // pre-explode doc_len — the buildTextIndex rewrite's rationale:
+        // identical value (size of the non-empty token array == sum(tf)),
+        // one fewer exchange+sort per append. The token-free observation
+        // moves onto the materialized array (size(null) is -1, so <= 0
+        // still covers NULL text) — the tokenizer now runs once per row,
+        // not once for the metric and again for the explode.
+        .select(col("id"), postingTokens(col("text")).as("_tt"))
+        .observe(tfObs, coalesce(sum(
+            when(col("id").isNotNull && size(col("_tt")) <= 0, lit(1L))
+              .otherwise(lit(0L))), lit(0L)).as("n_tokenfree"))
+        .select(col("id"), size(col("_tt")).cast(LongType).as("doc_len"),
+          posexplode(col("_tt")))
+        .withColumnRenamed("col", "token")
+        .groupBy("id", "doc_len", "token").agg(count(lit(1)).as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions"))
+        .observe(tokObs, coalesce(sum(col("tf")), lit(0L)).as("total_tokens"))
+        .withColumn("bucket",
+          pmod(TextStats.hash60(col("token")), lit(meta.nBuckets.toLong)))
+      IndexLayout.postings.write(postings, path, "append")
+      // the delta's token-free ids land AFTER the postings append (a
+      // sidecar id must never precede its batch's postings — a mixed
+      // batch's replay detection keys on posting membership) and BEFORE
+      // the _meta rewrite (complete `_meta` implies complete sidecar).
+      // The observed count decides whether the delta-sized detection
+      // scan runs at all; a LOST metrics node (an empty postings write —
+      // exactly the all-token-free batch, see the stampObserved note)
+      // must fall back to the scan, never to "none": skipping the
+      // sidecar there would break that batch's replay detection.
+      val nTokenFree = tfObs.get.getOrElse("n_tokenfree", -1L)
+        .asInstanceOf[Long]
+      if (nTokenFree != 0L) {
+        val tokenFree = df
+          .select(col(idCol).cast(LongType).as("id"),
+            size(postingTokens(col(textCol))).as("_ntok"))
+          .filter(col("id").isNotNull && col("_ntok") <= 0)
+          .select("id").distinct()
+        if (nTokenFree > 0L || tokenFree.limit(1).collect().nonEmpty)
+          tokenFree.coalesce(1).write.mode("append")
+            .parquet(tokenFreePath(path))
+      }
+      // getOrElse: see the stampObserved note — an empty postings write
+      // can lose the metrics node; zero delta tokens is then correct
+      Seq("total_tokens" -> tokObs.get.getOrElse("total_tokens", 0L)
+        .asInstanceOf[Long])
     }
-    val delta = Similarity.stampObserved(obs.get, df, idCol)
-    // getOrElse: see the stampObserved note — an empty postings write
-    // can lose the metrics node; zero delta tokens is then correct
-    val deltaTokens = tokObs.get.getOrElse("total_tokens", 0L).asInstanceOf[Long]
-    graft.store.MetaIO.writeRow(spark.sparkContext.hadoopConfiguration,
-      s"$path/_meta", Seq(
-        "n_buckets" -> meta.nBuckets,
-        "n_rows" -> (meta.stamp.nRows + delta.nRows),
-        "id_hash_sum" -> meta.stamp.idHashSum.add(delta.idHashSum).setScale(0),
-        "total_tokens" -> (totalTokens0 + deltaTokens)))
   }
 
   /** Query tokens, mirroring [[TextStats.tokens]] + the build's
@@ -337,6 +315,13 @@ object TextIndex {
         m("id_hash_sum").asInstanceOf[java.math.BigDecimal]),
       m.get("total_tokens").map(_.asInstanceOf[Long]))
   }
+
+  /** Appends and deletes keep `total_tokens` additive, so a tree built
+    * before the BM25 columns existed cannot take either. */
+  private[ops] def requireTokenTotal(meta: TiMeta, path: String): Unit =
+    if (meta.totalTokens.isEmpty) throw new IllegalStateException(
+      s"text index at $path predates the BM25 posting columns " +
+        "(no total_tokens in _meta); rebuild with buildTextIndex")
 
   /** Probe: top-`k` documents by distinct-query-token overlap,
     * (`id`, `overlap`), ordered by (overlap desc, id) so the cut is
@@ -800,7 +785,5 @@ object TextIndex {
   def requireTextIndexFresh(spark: org.apache.spark.sql.SparkSession,
                             path: String, df: DataFrame,
                             idCol: String): Unit =
-    Similarity.requireStampFresh("text index", path,
-      loadMeta(spark, path).stamp, Similarity.sourceStamp(df, idCol),
-      "buildTextIndex")
+    IndexLayout.Text.requireFresh(spark, path, df, idCol)
 }

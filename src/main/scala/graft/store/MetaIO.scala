@@ -221,14 +221,18 @@ object MetaIO {
   def columnsOf(conf: Configuration, dir: String): Option[Seq[String]] =
     try {
       resolveFile(conf, dir).map { file =>
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-          HadoopInputFile.fromPath(file, conf))
-        try {
-          val s = footer.getFooter.getFileMetaData.getSchema
-          (0 until s.getFieldCount).map(i => s.getType(i).getName)
-        } finally footer.close()
+        val s = footer(conf, file)(_.getFooter.getFileMetaData.getSchema)
+        (0 until s.getFieldCount).map(i => s.getType(i).getName)
       }
     } catch { case _: Exception => None }
+
+  /** One footer read of `file`, closed whatever `f` does. */
+  private def footer[T](conf: Configuration, file: Path)
+                       (f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, conf))
+    try f(r) finally r.close()
+  }
 
   /** [[readRow]] restricted to `columns` — a projected read: parquet is
     * columnar, so unrequested columns (e.g. a GBs Bloom binary beside
@@ -239,11 +243,7 @@ object MetaIO {
                      columns: Seq[String]): Option[Map[String, Any]] =
     try {
       resolveFile(conf, dir).flatMap { file =>
-        val in = HadoopInputFile.fromPath(file, conf)
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val full =
-          try footer.getFooter.getFileMetaData.getSchema
-          finally footer.close()
+        val full = footer(conf, file)(_.getFooter.getFileMetaData.getSchema)
         val b = Types.buildMessage()
         columns.foreach(c => b.addField(full.getType(full.getFieldIndex(c))))
         val rconf = new Configuration(conf)
@@ -254,7 +254,8 @@ object MetaIO {
     } catch { case _: Exception => None }
 
   /** Read the single row of the parquet dir (or file) at `dir` as a
-    * name → value map; `None` when missing/empty/unreadable. Accepts
+    * name → value map in schema column order; `None` when
+    * missing/empty/unreadable. Accepts
     * any writer's file (Spark's included). Only the first row of the
     * first data file is read — the sidecar contract. */
   def readRow(conf: Configuration, dir: String): Option[Map[String, Any]] =
@@ -269,14 +270,8 @@ object MetaIO {
   def readRows(conf: Configuration, dir: String): Vector[Map[String, Any]] = {
     val dp = new Path(dir)
     val fs = dp.getFileSystem(conf)
-    val st = fs.getFileStatus(dp) // throws FileNotFoundException when missing
-    val files =
-      if (st.isFile) Vector(dp)
-      else fs.listStatus(dp).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }.map(_.getPath).sortBy(_.getName).toVector
-    files.flatMap { file =>
+    fs.getFileStatus(dp) // throws FileNotFoundException when missing
+    dataFiles(fs, dp).flatMap { file =>
       val reader = ParquetReader
         .builder(new GroupReadSupport(), file).withConf(conf).build()
       try {
@@ -291,18 +286,34 @@ object MetaIO {
     }
   }
 
+  /** Total row count of every data file under `dir`, summed from the
+    * parquet footers — no data page is read and no Spark job runs (a
+    * `spark.read.parquet(dir).count()` is a full job for the same
+    * number). 0 when `dir` is missing. */
+  def rowCount(conf: Configuration, dir: String): Long = {
+    val dp = new Path(dir)
+    val fs = dp.getFileSystem(conf)
+    if (!fs.exists(dp)) 0L
+    else dataFiles(fs, dp).map(footer(conf, _)(_.getRecordCount)).sum
+  }
+
+  /** The data files of an existing `dp` in name order (`dp` itself when
+    * it IS a file) — hidden and underscore names (`_SUCCESS`, temp
+    * parts) excluded. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dp: Path): Vector[Path] =
+    if (fs.getFileStatus(dp).isFile) Vector(dp)
+    else fs.listStatus(dp).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith(".") && !n.startsWith("_")
+    }.map(_.getPath).sortBy(_.getName).toVector
+
   /** The dir's first data file (or `dir` itself when it IS a file);
     * `None` when missing/empty. */
   private def resolveFile(conf: Configuration, dir: String): Option[Path] = {
     val dp = new Path(dir)
     val fs = dp.getFileSystem(conf)
-    if (!fs.exists(dp)) return None
-    if (fs.getFileStatus(dp).isFile) return Some(dp)
-    val parts = fs.listStatus(dp).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith(".") && !n.startsWith("_")
-    }.map(_.getPath).sortBy(_.getName)
-    parts.headOption
+    if (!fs.exists(dp)) None else dataFiles(fs, dp).headOption
   }
 
   private def readFirstGroup(conf: Configuration,
@@ -383,7 +394,7 @@ object MetaIO {
             }
           }
         name -> v
-      }.toMap
+      }.to(scala.collection.immutable.VectorMap)
       m
     }
   }

@@ -287,7 +287,7 @@ object EventStream {
     * case (and ONLY that case — when the batch has any token, absent
     * postings prove the append never completed) the replay decision
     * falls back to the Bloom sidecar, which [[graft.ops.IndexIds
-    * .mergeAppend]] writes BEFORE any data lands: all-ids-in-Bloom ⇒
+    * .guardAndMerge]] writes BEFORE any data lands: all-ids-in-Bloom ⇒
     * replayed, skip. Residual windows, both bounded to `_meta`'s
     * `n_rows`/BM25 statistics (token-free docs are unsearchable either
     * way): a fresh token-free batch whose every id false-positives

@@ -1,7 +1,6 @@
 package graft.table
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * Dense, deterministic 0-based row-id assignment — the load-bearing design
@@ -29,15 +28,4 @@ object RowIds {
     * parquet read keeps sorted-file order). */
   def attach(df: DataFrame, startAt: Long = 0L): DataFrame =
     org.apache.spark.sql.graftx.Bridge.zipWithRowIds(df, Col, startAt)
-
-  /** Attach `_rowid` by a user-chosen total order: range-partition on the
-    * sort key (shuffle proportional to data, balanced ranges via sampling),
-    * sort within partitions, then prefix-sum ids. This is the scalable way
-    * to get `row_number() OVER (ORDER BY keys)` semantics. */
-  def attachSorted(df: DataFrame, sortCols: Seq[String], startAt: Long = 0L): DataFrame = {
-    val cols = sortCols.map(col)
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val arranged = df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
-    attach(arranged, startAt)
-  }
 }
