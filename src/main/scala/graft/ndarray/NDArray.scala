@@ -191,7 +191,7 @@ final class NDArray private[ndarray] (
     // name sees the new extents), like all other mutation paths — put()
     // here would re-create under the OPENED name and strand any alias.
     val b = table.baseName
-    val seg = store.writeSegment(b, RowIds.attach(out), meta.chunkSize, meta.codec)
+    val seg = store.writeSegment(b, RowIds.attach(table.conform(out)), meta.chunkSize, meta.codec)
     store.manifest.tables += b -> meta.copy(segments = Vector(seg),
       shape = newShape.toVector,
       maxShape = if (mx.isEmpty) newShape.toVector else mx)

@@ -219,7 +219,7 @@ object Contamination {
     // the cap guards the PROBE-side localization contract (the postings
     // broadcast to every executor per probe); enforced at build so an
     // oversized suite fails here, once, not in every probe job
-    val nPostings = spark.read.parquet(s"$path/postings").count()
+    val nPostings = IndexMaintenance.readTree(spark, s"$path/postings").count()
     require(nPostings <= maxBenchGrams,
       s"buildBenchIndex: benchmark explodes to $nPostings (bench_id, gram) " +
         s"rows past maxBenchGrams=$maxBenchGrams — the index broadcasts its " +
@@ -229,7 +229,7 @@ object Contamination {
     val numBits = math.ceil(
       -expectedGrams * math.log(fpp) / (math.log(2) * math.log(2))).toLong
     // bloom over the persisted postings — the shingle kernel ran once
-    val bfBytes = spark.read.parquet(s"$path/postings")
+    val bfBytes = IndexMaintenance.readTree(spark, s"$path/postings")
       .agg(bloomAgg(col("h"), expectedGrams, numBits).as("bf"))
       .collect()(0).getAs[Array[Byte]](0)
     // driver-direct metadata write (MetaIO); writeRows form because the
@@ -285,7 +285,7 @@ object Contamination {
     val meta = loadBenchMeta(spark, path)
     verifyAgainst.foreach { case (bench, benchId) =>
       requireBenchIndexFresh(spark, path, bench, benchId) }
-    val b = spark.read.parquet(s"$path/postings")
+    val b = IndexMaintenance.readTree(spark, s"$path/postings")
     if (meta.bloom == null)  // empty suite: zero postings — same schema,
       return joinAndCount(   // no corpus scan (limit(0) prunes it)
         shingled(corpus.limit(0), idCol, textCol, meta.n)

@@ -75,7 +75,7 @@ object DedupIndex {
     // kernel (the dominant build cost) runs once, and the banded form
     // can never drift from the signatures it summarizes
     IndexLayout.bands.write(
-      Dedup.bandedFromSigs(spark.read.parquet(s"$path/sigs"), "id",
+      Dedup.bandedFromSigs(IndexMaintenance.readTree(spark, s"$path/sigs"), "id",
           numHashes, bands, "id", "sig")
         .select(col("band"), col("bh"), col("id")),
       path, "overwrite")
@@ -128,7 +128,7 @@ object DedupIndex {
           graft.functions.native.minhash_sig_tokens(
             TextStats.tokens(col("text")), meta.n, meta.numHashes).as("sig"))
         .write.mode("overwrite").parquet(staging)
-      val staged = spark.read.parquet(staging)
+      val staged = IndexMaintenance.readTree(spark, staging)
       staged.write.mode("append").parquet(s"$path/sigs")
       IndexLayout.bands.write(
         Dedup.bandedFromSigs(staged, "id", meta.numHashes, meta.bands, "id", "sig")
@@ -195,11 +195,11 @@ object DedupIndex {
     // filtered on the bands side, so they can never generate a
     // candidate pair — the sigs join below then never sees them either
     val idx = IndexMaintenance.minusTombstones(spark, path,
-        spark.read.parquet(s"$path/bands"), "id")
+        IndexMaintenance.readTree(spark, s"$path/bands"), "id")
       .select(col("band"), col("bh"), col("id").as("id_ref"))
     val cand = newBanded.join(idx, Seq("band", "bh"))
       .select(col("id_new"), col("id_ref"), col("sig_new"))
-    val sigs = spark.read.parquet(s"$path/sigs")
+    val sigs = IndexMaintenance.readTree(spark, s"$path/sigs")
       .select(col("id").as("id_ref"), col("sig").as("sig_ref"))
     cand.join(sigs, "id_ref")
       .select(col("id_new"), col("id_ref"),

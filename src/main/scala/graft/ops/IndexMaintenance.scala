@@ -57,7 +57,7 @@ private[ops] sealed abstract class IndexLayout(val name: String,
   private def builder = s"build${name}Index"
 
   def memberIds(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(data.head.at(path)).select("id")
+    IndexMaintenance.readTree(spark, data.head.at(path)).select("id")
 
   /** A stamp sidecar without the hashed stamp columns (a raw `id_sum`
     * era tree) is INCOMPATIBLE, not unresolvable: on-disk indexes
@@ -183,7 +183,7 @@ private[ops] object IndexLayout {
     override def deleteDeltas(spark: SparkSession,
                               path: String): DataFrame => Seq[(String, Long)] = {
       TextIndex.requireTokenTotal(TextIndex.loadMeta(spark, path), path)
-      del => Seq("total_tokens" -> -spark.read.parquet(path)
+      del => Seq("total_tokens" -> -IndexMaintenance.readTree(spark, path)
         .join(del, Seq("id"), "left_semi")
         .agg(coalesce(sum(col("tf")), lit(0L))).head().getLong(0))
     }
@@ -344,6 +344,18 @@ object IndexMaintenance {
 
   private def tombstones(path: String) = s"$path/_tombstones"
 
+  /** The one reader of index trees — data subtrees and sidecars alike.
+    * The schema comes from one data file's footer on the driver
+    * ([[graft.store.MetaIO.sparkSchemaOf]]), so planning the read runs
+    * no Spark job; partition columns (`bucket`, `list`) are still
+    * discovered from the paths, and a column a tree predates (text
+    * `positions`) is absent exactly as inference would leave it. A dir
+    * without data files takes the inferring read, which raises Spark's
+    * own error for it. */
+  private[graft] def readTree(spark: SparkSession, dir: String): DataFrame =
+    graft.store.MetaIO.sparkSchemaOf(spark.sparkContext.hadoopConfiguration, dir)
+      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
   /** DATA files under `root` — underscore sidecars (`_meta`,
     * `_idbloom`, `_tombstones`), `_SUCCESS` markers and hidden files
     * excluded, wherever they sit in the tree. ONE recursive listing
@@ -416,39 +428,37 @@ object IndexMaintenance {
     * filter — no scan job, no broadcast, no join in the probe's plan;
     * mid-sized sets (past either local cap) keep the broadcast
     * anti-join, and sets past `maxBroadcastBytes` fall back to the
-    * shuffle anti-join (the size checks are one namenode summary call
-    * and the sidecar's parquet footers, no data read). Zero cost when
-    * no delete has ever run. NULL ids are kept on every path (an
-    * anti-join never matches NULL — the filter preserves that). */
+    * shuffle anti-join. The sidecar is listed once (its byte size is
+    * the listing's file lengths) and each of its files opened once (the
+    * id cap is checked from the footers before any id is read). Zero
+    * cost when no delete has ever run. NULL ids are kept on every path
+    * (an anti-join never matches NULL — the filter preserves that). */
   private[graft] def minusTombstones(spark: SparkSession, indexPath: String,
                                      df: DataFrame, idCol: String,
                                      maxBroadcastBytes: Long =
                                        TombstoneBroadcastBytes,
                                      maxLocalBytes: Long =
                                        TombstoneLocalBytes): DataFrame = {
-    val fs = fsOf(spark, indexPath)
-    val p = new Path(tombstones(indexPath))
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (!fs.exists(p)) df
-    else {
-      val bytes = fs.getContentSummary(p).getLength
-      if (bytes <= maxLocalBytes &&
-          graft.store.MetaIO.rowCount(conf, tombstones(indexPath)) <=
-            TombstoneLocalIds) {
-        val ids = graft.store.MetaIO.readRows(conf, tombstones(indexPath))
-          .iterator.flatMap(m => Option(m("id")))
-          .map(_.asInstanceOf[Long]).toSeq
-        if (ids.isEmpty) df
+    val dir = tombstones(indexPath)
+    val listing =
+      try Some(fsOf(spark, indexPath).listStatus(new Path(dir)).toSeq)
+      catch { case _: java.io.FileNotFoundException => None }
+    listing.fold(df) { files =>
+      val bytes = files.filter(_.isFile).map(_.getLen).sum
+      val local =
+        if (bytes > maxLocalBytes) None
+        else graft.store.MetaIO.readLongColumn(
+          spark.sparkContext.hadoopConfiguration, files, "id", TombstoneLocalIds)
+      local match {
+        case Some(ids) if ids.isEmpty => df
         // coalesce(..., true): InSet(NULL) is NULL, and a bare NOT NULL
         // filter would drop null-id rows the anti-join keeps
-        else df.filter(coalesce(!col(idCol).isInCollection(ids), lit(true)))
-      } else {
-        val ts = spark.read.parquet(tombstones(indexPath))
-          .select(col("id").as(idCol))
-        val side =
-          if (bytes <= maxBroadcastBytes) broadcast(ts)
-          else ts
-        df.join(side, Seq(idCol), "left_anti")
+        case Some(ids) =>
+          df.filter(coalesce(!col(idCol).isInCollection(ids), lit(true)))
+        case None =>
+          val ts = readTree(spark, dir).select(col("id").as(idCol))
+          df.join(if (bytes <= maxBroadcastBytes) broadcast(ts) else ts,
+            Seq(idCol), "left_anti")
       }
     }
   }
@@ -569,7 +579,7 @@ object IndexMaintenance {
             new Path(TextIndex.tokenFreePath(path)))) autoResize
       else {
         val live = minusTombstones(spark, path,
-          spark.read.parquet(path).select("id").distinct(), "id").count()
+          readTree(spark, path).select("id").distinct(), "id").count()
         if (layout.loadStamp(spark, path).nRows <= live) autoResize
         else None
       }
@@ -754,7 +764,7 @@ object IndexMaintenance {
     * old tree) means the tombstone filter is never re-paid and the read
     * is the id column of a fresh ~1-file-per-partition tree. */
   private[ops] def stagedIds(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select("id").distinct().localCheckpoint(true)
+    readTree(spark, dir).select("id").distinct().localCheckpoint(true)
 
   /** Write a fresh [[IndexIds]] Bloom of `ids` (`n` distinct) at
     * `tmpPath`. Compaction is the natural RESIZE point: `resize` adopts
@@ -784,7 +794,7 @@ object IndexMaintenance {
                       resize: Option[(Long, Double)]): Unit =
     stagedSwap(spark, path) { tmp =>
       layout.data.foreach(t => t.write(minusTombstones(spark, path,
-        spark.read.parquet(t.at(path)), "id"), tmp, "overwrite"))
+        readTree(spark, t.at(path)), "id"), tmp, "overwrite"))
       requireStagedReadable(spark, s"compact${layout.name}Index", path,
         layout.data.head.at(tmp))
       val fs = fsOf(spark, path)

@@ -416,7 +416,7 @@ object Quantize {
     val cc = codewordNorms(spark, cbs)
     val (lut, qq) = adcTables(spark, query, cbs)
     IndexMaintenance.minusTombstones(spark, path,
-        spark.read.parquet(path).filter(col("list").isin(probes: _*)), "id")
+        IndexMaintenance.readTree(spark, path).filter(col("list").isin(probes: _*)), "id")
       .select(col("id"), adcScore(col("codes"), lut, cc, qq).as("score"),
         col("list").cast(LongType).as("list"))
       .orderBy(col("score").desc, col("id"))
@@ -461,7 +461,7 @@ object Quantize {
         .as("id")).distinct()
     def survivors(p: Int): DataFrame =
       IndexMaintenance.minusTombstones(spark, path,
-          spark.read.parquet(path)
+          IndexMaintenance.readTree(spark, path)
             .filter(col("list").isin(ranked.take(p): _*)), "id")
         .join(allowedIds, Seq("id"), "left_semi")
     var p = math.min(nprobe, ranked.size)
@@ -681,7 +681,7 @@ object Quantize {
     // the probe ranking + LUT projection): right for small/clustered
     // batches, skippable (pruneLists = false) for batches that would
     // probe most lists anyway
-    val base = spark.read.parquet(path)
+    val base = IndexMaintenance.readTree(spark, path)
     val pruned = if (pruneLists) {
       val usedLists = querySide.select(col("_list")).distinct()
         .collect().map(_.getLong(0)) // ≤ nlist values by construction
@@ -806,7 +806,7 @@ object Quantize {
     val cc = codewordNorms(spark, cbs)
     val (lut, qq) = adcTables(spark, query, cbs)
     IndexMaintenance.minusTombstones(spark, path,
-        spark.read.parquet(path), "id")
+        IndexMaintenance.readTree(spark, path), "id")
       .select(col("id"), adcScore(col("codes"), lut, cc, qq).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)

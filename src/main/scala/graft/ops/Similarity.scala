@@ -815,7 +815,7 @@ object Similarity {
     // re-evaluates the per-row probe ranking) — a win for small or
     // clustered batches; a batch probing most lists anyway should pass
     // pruneLists = false and pay one scan of every list instead
-    val base = spark.read.parquet(path)
+    val base = IndexMaintenance.readTree(spark, path)
     val pruned = if (pruneLists) {
       val usedLists = querySide.select(col("_list")).distinct()
         .collect().map(_.getLong(0)) // ≤ nlist values by construction
@@ -1126,7 +1126,7 @@ object Similarity {
     // (IndexMaintenance.deleteFromIvfIndex) are anti-joined away over
     // the probed candidates only
     IndexMaintenance.minusTombstones(spark, path,
-        spark.read.parquet(path).filter(col("list").isin(probes: _*)), "id")
+        IndexMaintenance.readTree(spark, path).filter(col("list").isin(probes: _*)), "id")
       .select(col("id"), cosineFixed(col("vec"), qc).as("score"),
         col("list").cast(LongType).as("list"))
       .orderBy(col("score").desc, col("id"))
@@ -1186,7 +1186,7 @@ object Similarity {
       .distinct()
     def survivors(p: Int): DataFrame =
       IndexMaintenance.minusTombstones(spark, path,
-          spark.read.parquet(path)
+          IndexMaintenance.readTree(spark, path)
             .filter(col("list").isin(ranked.take(p): _*)), "id")
         .join(allowedIds, Seq("id"), "left_semi")
     var p = math.min(nprobe, ranked.size)

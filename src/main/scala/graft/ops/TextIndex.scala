@@ -58,7 +58,7 @@ object TextIndex {
                                     path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(tokenFreePath(path))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(tokenFreePath(path))
+    if (fs.exists(p)) Some(IndexMaintenance.readTree(spark, tokenFreePath(path))
       .select(col("id")).distinct())
     else None
   }
@@ -70,7 +70,7 @@ object TextIndex {
     * (the [[graft.ops.IndexIds]] class doc's enumeration caveat). */
   private[graft] def indexedIds(spark: org.apache.spark.sql.SparkSession,
                                 path: String): DataFrame = {
-    val postings = spark.read.parquet(path).select(col("id"))
+    val postings = IndexMaintenance.readTree(spark, path).select(col("id"))
     loadTokenFreeIds(spark, path).fold(postings)(tf => postings.union(tf))
   }
 
@@ -168,7 +168,7 @@ object TextIndex {
     // tokenize pass over the corpus.
     val tokenFree = df.select(col(idCol).cast(LongType).as("id"))
       .filter(col("id").isNotNull).distinct()
-      .join(spark.read.parquet(path).select("id"), Seq("id"), "left_anti")
+      .join(IndexMaintenance.readTree(spark, path).select("id"), Seq("id"), "left_anti")
     if (tokenFree.limit(1).collect().nonEmpty)
       tokenFree.coalesce(1).write.mode("overwrite")
         .parquet(tokenFreePath(path))
@@ -396,9 +396,10 @@ object TextIndex {
     *   w(t, d)    = idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·len(d)/avgdl))
     *   score(d)   = Σ_t w(t, d)
     *
-    * with N and avgdl from `_meta`. The df side of the join is one row
-    * per query token — broadcast — so probe cost stays O(matched
-    * postings) with no corpus-sized side anywhere. */
+    * with N and avgdl from `_meta`. df is `count(*) over (partition by
+    * token)` on the one pruned scan — no second postings scan and no
+    * broadcast job — so probe cost stays O(matched postings) with no
+    * corpus-sized side anywhere. */
   def searchIndexBM25(spark: org.apache.spark.sql.SparkSession,
                       path: String, query: String, k: Int,
                       k1: Double = 1.2, b: Double = 0.75,
@@ -411,23 +412,11 @@ object TextIndex {
       case Some(va) => verifiedMeta(spark, path, va)
       case None     => loadMeta(spark, path)
     }
-    val totalTokens = meta.totalTokens.getOrElse(throw new IllegalStateException(
-      s"text index at $path predates the BM25 posting columns " +
-        "(no total_tokens in _meta); rebuild with buildTextIndex"))
-    val n = meta.stamp.nRows
-    require(n > 0, s"text index at $path was built over an empty corpus")
-    val avgdl = totalTokens.toDouble / n
-    val matched = matchedPostings(spark, path, meta.nBuckets, query)
-    // df per probed token from the matched postings themselves: one row
-    // per (id, token), so count(*) per token IS the document frequency
-    val dfreq = matched.groupBy("token").agg(count(lit(1)).as("dfq"))
-    val idf = log(lit(1.0) +
-      (lit(n.toDouble) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)))
-    val tfNorm = col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("doc_len") / lit(avgdl)))
-    matched.join(broadcast(dfreq), "token")
+    val (n, avgdl) = bm25Corpus(meta, path)
+    matchedPostings(spark, path, meta.nBuckets, query)
+      .withColumn("dfq", count(lit(1)).over(Window.partitionBy("token")))
       .groupBy(col("id"))
-      .agg(sum(idf * tfNorm).as("score"))
+      .agg(sum(bm25Weight(n, avgdl, k1, b)).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
   }
@@ -437,11 +426,14 @@ object TextIndex {
     * top-`k` as (`query_idx` into the input suite, `id`, `score`),
     * ordered (query_idx, score desc, id). The retrieval-evaluation /
     * "score a day's queries against the corpus" shape — Q separate
-    * probe jobs collapse into one scan + one per-query window.
+    * probe jobs collapse into one scan + one per-query cut.
     *
-    * df per token is counted once from the union's matched postings
-    * (each token's posting set is the same whichever query asked), the
-    * query→token relation is a driver literal joined broadcast, and
+    * Each posting's weight is the single-query kernel's
+    * ([[bm25Weight]]); df per token is counted once from the union's
+    * matched postings (each token's posting set is the same whichever
+    * query asked) and joined broadcast — an aggregate, not the
+    * single-query window, so the plan keeps no window operator at all;
+    * the query→token relation is a driver literal joined broadcast, and
     * the per-query cut is the BOUNDED top-k aggregate
     * ([[graft.functions.TopKByScore]]) — a stopword-ish token can match
     * most of the corpus, and a rank-filtered window would sort that
@@ -460,33 +452,45 @@ object TextIndex {
       case Some(va) => verifiedMeta(spark, path, va)
       case None     => loadMeta(spark, path)
     }
-    val totalTokens = meta.totalTokens.getOrElse(throw new IllegalStateException(
-      s"text index at $path predates the BM25 posting columns " +
-        "(no total_tokens in _meta); rebuild with buildTextIndex"))
-    val n = meta.stamp.nRows
-    require(n > 0, s"text index at $path was built over an empty corpus")
-    val avgdl = totalTokens.toDouble / n
+    val (n, avgdl) = bm25Corpus(meta, path)
     val tokLists = queries.map(q => queryTokens(q))
     tokLists.zipWithIndex.foreach { case (t, i) =>
       require(t.nonEmpty, s"query $i contains no tokens") }
-    val allToks = tokLists.flatten.distinct
-    val matched = matchedPostingsFor(spark, path, meta.nBuckets, allToks)
-    val dfreq = matched.groupBy("token").agg(count(lit(1)).as("dfq"))
+    val matched = matchedPostingsFor(spark, path, meta.nBuckets,
+      tokLists.flatten.distinct)
     import spark.implicits._
     val qrel = tokLists.zipWithIndex
       .flatMap { case (ts, i) => ts.map(t => (i.toLong, t)) }
       .toDF("query_idx", "token")
+    val dfreq = matched.groupBy("token").agg(count(lit(1)).as("dfq"))
+    val perQueryDoc = matched.join(broadcast(dfreq), "token")
+      .join(broadcast(qrel), "token")
+      .groupBy(col("query_idx"), col("id"))
+      .agg(sum(bm25Weight(n, avgdl, k1, b)).as("score"))
+    TopK.topKPerGroup(perQueryDoc, "query_idx", "score", "id", lit(0L), k)
+      .select("query_idx", "id", "score")
+      .orderBy(col("query_idx"), col("score").desc, col("id"))
+  }
+
+  /** `_meta`'s BM25 corpus constants `(N, avgdl)`, behind the refusals
+    * both scorers share: a tree built before the BM25 columns, and an
+    * empty corpus. */
+  private def bm25Corpus(meta: TiMeta, path: String): (Long, Double) = {
+    requireTokenTotal(meta, path)
+    val n = meta.stamp.nRows
+    require(n > 0, s"text index at $path was built over an empty corpus")
+    (n, meta.totalTokens.get.toDouble / n)
+  }
+
+  /** The BM25 kernel both scorers sum, per posting row carrying `tf`,
+    * `doc_len` and its token's document frequency `dfq`:
+    * idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·len(d)/avgdl)). */
+  private def bm25Weight(n: Long, avgdl: Double, k1: Double, b: Double): Column = {
     val idf = log(lit(1.0) +
       (lit(n.toDouble) - col("dfq") + lit(0.5)) / (col("dfq") + lit(0.5)))
     val tfNorm = col("tf") * lit(k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("doc_len") / lit(avgdl)))
-    val perQueryDoc = matched.join(broadcast(dfreq), "token")
-      .join(broadcast(qrel), "token")
-      .groupBy(col("query_idx"), col("id"))
-      .agg(sum(idf * tfNorm).as("score"))
-    TopK.topKPerGroup(perQueryDoc, "query_idx", "score", "id", lit(0L), k)
-      .select("query_idx", "id", "score")
-      .orderBy(col("query_idx"), col("score").desc, col("id"))
+    idf * tfNorm
   }
 
   /** Ordered phrase tokens: [[queryTokens]] WITHOUT the distinct —
@@ -761,7 +765,7 @@ object TextIndex {
         org.apache.spark.unsafe.types.UTF8String.fromString(t)) % nBuckets)
       .distinct
     IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path)
+      IndexMaintenance.readTree(spark, path)
         .filter(col("bucket").isin(buckets: _*))
         .filter(col("token").isin(toks: _*)),
       "id")

@@ -1,14 +1,19 @@
 package graft.store
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Driver-direct parquet I/O for ONE-ROW metadata sidecars (`_meta`,
@@ -297,16 +302,89 @@ object MetaIO {
     else dataFiles(fs, dp).map(footer(conf, _)(_.getRecordCount)).sum
   }
 
+  /** The non-null values of the Long column `column` over the data files
+    * in `listing` (one flat directory's `listStatus`), or `None` when the
+    * footers' row counts sum past `maxRows` — checked before any data
+    * page is read. Each file is opened exactly once: its footer gives the
+    * count, and the same reader then reads the projected column. */
+  def readLongColumn(conf: Configuration, listing: Seq[FileStatus],
+                     column: String, maxRows: Long): Option[Vector[Long]] = {
+    val readers = listing.filter(isDataFile).sortBy(_.getPath.getName)
+      .map(s => ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf)))
+    try {
+      if (readers.map(_.getRecordCount).sum > maxRows) None
+      else Some(readers.toVector.flatMap { r =>
+        val full = r.getFooter.getFileMetaData.getSchema
+        val proj = Types.buildMessage()
+          .addField(full.getType(full.getFieldIndex(column))).named("c")
+        r.setRequestedSchema(proj)
+        val io = new ColumnIOFactory().getColumnIO(proj)
+        val out = Vector.newBuilder[Long]
+        var pages = r.readNextRowGroup()
+        while (pages != null) {
+          val rows = io.getRecordReader(pages, new GroupRecordConverter(proj))
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = rows.read()
+            if (g.getFieldRepetitionCount(0) > 0) out += g.getLong(0, 0)
+            i += 1
+          }
+          pages = r.readNextRowGroup()
+        }
+        out.result()
+      })
+    } finally readers.foreach(_.close())
+  }
+
+  /** The Spark schema `spark.read.parquet(dir)` infers, from ONE footer
+    * read on the driver instead of the Spark job inference runs: the
+    * first data file under `dir` (depth first, skipping what Spark's
+    * listing skips — `_` and `.` names that are not `k=v` partition
+    * directories), then the schema Spark recorded under its row-metadata
+    * key, else Spark's parquet→Catalyst conversion of the file schema
+    * (non-Spark writers such as [[writeRows]]). Partition columns are not
+    * in it; a read still discovers them from the paths. `None` when `dir`
+    * holds no data file. */
+  def sparkSchemaOf(conf: Configuration, dir: String): Option[StructType] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    }
+    def firstFile(p: Path): Option[Path] = {
+      val children =
+        try fs.listStatus(p).filter(visible).sortBy(_.getPath.getName)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      children.find(_.isFile).map(_.getPath).orElse(children.iterator
+        .filter(_.isDirectory).flatMap(s => firstFile(s.getPath)).nextOption())
+    }
+    firstFile(root).map(footer(conf, _) { r =>
+      val meta = r.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get)
+          .convert(meta.getSchema))
+    })
+  }
+
+  /** The footer key Spark writes its own schema JSON under. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def isDataFile(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    s.isFile && !n.startsWith(".") && !n.startsWith("_")
+  }
+
   /** The data files of an existing `dp` in name order (`dp` itself when
     * it IS a file) — hidden and underscore names (`_SUCCESS`, temp
     * parts) excluded. */
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
                         dp: Path): Vector[Path] =
     if (fs.getFileStatus(dp).isFile) Vector(dp)
-    else fs.listStatus(dp).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith(".") && !n.startsWith("_")
-    }.map(_.getPath).sortBy(_.getName).toVector
+    else fs.listStatus(dp).filter(isDataFile)
+      .map(_.getPath).sortBy(_.getName).toVector
 
   /** The dir's first data file (or `dir` itself when it IS a file);
     * `None` when missing/empty. */

@@ -174,7 +174,7 @@ object EventStream {
         val ids = batch.select(col(idCol).cast(LongType).as("id"))
         val replayed = graft.Labels.labeled(spark, "ingest: replay probe") {
           val present = graft.ops.IndexIds.presentIds(spark, indexPath, ids,
-            spark.read.parquet(s"$indexPath/sigs").select("id"))
+            graft.ops.IndexMaintenance.readTree(spark, s"$indexPath/sigs").select("id"))
           if (present.limit(1).collect().nonEmpty) Some(present) else None
         }
         replayed match {
@@ -240,7 +240,7 @@ object EventStream {
         val ids = batch.select(col(idCol).cast(LongType).as("id"))
         val replayed = graft.Labels.labeled(spark, "ingest: replay probe") {
           val present = graft.ops.IndexIds.presentIds(spark, indexPath, ids,
-            spark.read.parquet(indexPath).select("id"))
+            graft.ops.IndexMaintenance.readTree(spark, indexPath).select("id"))
           if (present.limit(1).collect().nonEmpty) Some(present) else None
         }
         replayed match {

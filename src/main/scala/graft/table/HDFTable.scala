@@ -3,7 +3,8 @@ package graft.table
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.graftx.Bridge.asNullable
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.store.{HDFStore, SegmentMeta, TableMeta}
 
@@ -54,8 +55,28 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     * (`nimtables.nim:235-236`); never a `df.count()` scan. */
   def nrows: Long = meta.rows
 
+  /** The schema every segment is read with: the catalog's data schema
+    * with `_rowid` last — the column order and types every segment write
+    * keeps ([[conform]]). Reading with it plans without the Spark job
+    * schema inference would run per segment. */
+  private[graft] def readSchema: StructType = schema.add(Col, LongType)
+
   private def segDf(seg: SegmentMeta): DataFrame =
-    spark.read.parquet(new Path(store.rootPath, seg.dir).toString)
+    spark.read.schema(readSchema).parquet(new Path(store.rootPath, seg.dir).toString)
+
+  /** `d` in the layout every segment is written in — the table schema's
+    * columns and types in its order, then `_rowid` when `d` carries it —
+    * so the manifest schema stays the one reads plan with. A frame
+    * already in that layout passes through untouched; otherwise each
+    * column is cast. Nullability is left to the rows (file reads are
+    * nullable anyway), so the cast target is each type's nullable form. */
+  private[graft] def conform(d: DataFrame): DataFrame = {
+    val target = if (d.columns.contains(Col)) readSchema else schema
+    def layout(s: StructType) = s.fields.toSeq.map(f => (f.name, asNullable(f.dataType)))
+    if (layout(d.schema) == layout(target)) d
+    else d.select(target.fields.toSeq.map(f =>
+      col(f.name).cast(asNullable(f.dataType)).as(f.name)): _*)
+  }
 
   /** Stored ids run `[idBase, idBase+rows)`; global view shifts them to
     * `[off, off+rows)`. */
@@ -147,7 +168,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
         segs.forall(!_.dir.endsWith(".parquet")) &&
         bases.distinct.size == bases.size) {
       val paths = segs.map(s => new Path(store.rootPath, s.dir).toString)
-      val raw = spark.read.parquet(paths: _*)
+      val raw = spark.read.schema(readSchema).parquet(paths: _*)
         .withColumn("_run", regexp_extract(col("_metadata.file_path"), "/([^/]+)/[^/]+$", 1))
       val shifts = bases.lazyZip(segs).lazyZip(offs).map {
         case (b, seg, off) => (b, off - seg.idBase)
@@ -286,8 +307,8 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     * own deterministic partition order is the contract (createDataset /
     * freshly sorted inputs). */
   private def withLocalIds(data: DataFrame): DataFrame =
-    if (data.columns.contains(Col)) RowIds.attach(data.sort(Col).drop(Col))
-    else RowIds.attach(data)
+    if (data.columns.contains(Col)) RowIds.attach(conform(data.sort(Col).drop(Col)))
+    else RowIds.attach(conform(data))
 
   private def swapSegments(newSegs: Vector[SegmentMeta]): Unit = {
     val b = baseName
@@ -320,7 +341,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     val sorted =
       if (rows <= 4L * chunk) d.coalesce(1).sortWithinPartitions(Col)
       else d.sort(Col)
-    store.writeSegment(baseName, sorted, m.chunkSize, m.codec)
+    store.writeSegment(baseName, conform(sorted), m.chunkSize, m.codec)
   }
 
   /** Append ≙ `append` (`nimtables.nim:173-175`): one new segment, nothing
@@ -428,8 +449,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
             .withColumn(Col, col(Col) - lit(off))
           val base = segDf(seg).withColumn(Col, col(Col) - lit(seg.idBase))
           val kept = base.join(local.select(Col), Seq(Col), "left_anti")
-          val rewritten = writeSorted(
-            kept.unionByName(local.select(base.columns.map(col): _*)), seg.rows)
+          val rewritten = writeSorted(kept.unionByName(conform(local)), seg.rows)
           if (rewritten.rows != seg.rows)
             throw new IllegalStateException(
               s"coordinate update changed segment row count ${seg.rows} -> ${rewritten.rows} (duplicate or out-of-range ids?)")

@@ -13,6 +13,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `t` with every nested field, element and value nullable (Spark's
+    * own `asNullable`): a cast target rows of any nullability reach,
+    * since a cast may widen nullability but never narrow it. */
+  def asNullable(t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
+    t.asNullable
+
   /** Dense 0-based row-index column appended WITHOUT leaving the internal
     * row format: `df.rdd.zipWithIndex` materializes every row as an
     * external `Row` (per-field boxing + `CatalystTypeConverters` back on

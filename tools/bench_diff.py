@@ -1,14 +1,24 @@
 #!/usr/bin/env python3
-"""Per-query bench regression diff between two committed bench records.
+"""Regression diff between two bench records of the same kind.
 
-Usage: python3 tools/bench_diff.py bench_r08.json bench_r09.json [min_delta_sec]
+Usage: python3 tools/bench_diff.py OLD.json NEW.json [min_delta]
 
-Prints queries present in both (sorted by delta, worst first), then
+Gate records (`bench_rNN*.json`, min_delta in seconds, default 0.3):
+prints queries present in both (sorted by delta, worst first), then
 queries only in one record (added/removed). Medians are already
 warmed-up per-query medians, so a delta here is a plan change, not
 noise — but treat sub-0.3 s deltas as within host jitter anyway.
+
+perfbench records (`.bench_build/records/<workload>-s<seed>-t<trace>.json`,
+min_delta in ms, default 20): prints the end-to-end metrics, then the
+per-call COUNTER movers (`jobs`, `tasks` p50 over the run's calls, and
+the store/index gauges) apart from the per-call `ms` p50 movers. Counters
+repeat exactly on one seed, so a counter mover is a code change while an
+ms mover may be host noise. Counters need traced (`-t1`) records on
+both sides.
 """
 import json
+import statistics
 import sys
 
 
@@ -69,9 +79,76 @@ def main(old_path, new_path, min_delta=0.3):
             print(f"         {old[q]:7.2f}           {q}")
 
 
+def is_perfbench(rec):
+    return "end_to_end" in rec and "workload" in rec
+
+
+def call_p50(call, key):
+    vals = call.get(key) or []
+    return statistics.median(vals) if vals else None
+
+
+def perfbench_main(old_path, new_path, min_delta_ms=20.0):
+    old = json.load(open(old_path))
+    new = json.load(open(new_path))
+    print(f"# {old_path} -> {new_path}")
+    if old["workload"] != new["workload"]:
+        print(f"WARNING: workloads differ ({old['workload']} vs "
+              f"{new['workload']})")
+    print(f"workload={new['workload']} seed {old['seed']} -> {new['seed']} "
+          f"trace {int(old['trace'])} -> {int(new['trace'])} "
+          f"correct {old['correct']} -> {new['correct']} "
+          f"failed {old['failed']} -> {new['failed']}")
+
+    print("\n## end-to-end")
+    e_old, e_new = old["end_to_end"], new["end_to_end"]
+    for m in sorted(set(e_old) & set(e_new)):
+        a, b = e_old[m]["value"], e_new[m]["value"]
+        rel = f"{(b - a) / a:+.1%}" if a else "n/a"
+        print(f"{m:22s} {a:12.3f} -> {b:12.3f} {e_new[m]['unit']:6s} {rel}")
+
+    c_old, c_new = old.get("calls") or {}, new.get("calls") or {}
+    print("\n## counter movers (jobs, tasks: p50 per call; gauges)")
+    if not (c_old and c_new):
+        print("(needs traced -t1 records on both sides)")
+    else:
+        moved = 0
+        for name in sorted(set(c_old) | set(c_new)):
+            a, b = c_old.get(name, {}), c_new.get(name, {})
+            for key in ("jobs", "tasks"):
+                va, vb = call_p50(a, key), call_p50(b, key)
+                if va != vb:
+                    moved += 1
+                    print(f"{name + '.' + key:44s} {va} -> {vb}  "
+                          f"(calls {a.get('n', 0)} -> {b.get('n', 0)})")
+        g_old, g_new = old.get("gauges", {}), new.get("gauges", {})
+        for g in sorted(set(g_old) | set(g_new)):
+            if g_old.get(g) != g_new.get(g):
+                moved += 1
+                print(f"{g:44s} {g_old.get(g)} -> {g_new.get(g)}")
+        if not moved:
+            print("(none)")
+
+    o_old, o_new = old.get("ops_by_call", {}), new.get("ops_by_call", {})
+    print(f"\n## ms movers (p50 per call, |delta| >= {min_delta_ms:g} ms)")
+    rows = []
+    for name in set(o_old) & set(o_new):
+        a, b = o_old[name]["ms_p50"], o_new[name]["ms_p50"]
+        if abs(b - a) >= min_delta_ms:
+            rows.append((b - a, a, b, name))
+    for d, a, b, name in sorted(rows, reverse=True):
+        print(f"{d:+9.1f} ms  {a:9.1f} -> {b:9.1f}  {name}")
+    if not rows:
+        print("(none)")
+
+
 if __name__ == "__main__":
     if len(sys.argv) < 3:
         print(__doc__.strip(), file=sys.stderr)
         sys.exit(2)
-    main(sys.argv[1], sys.argv[2],
-         float(sys.argv[3]) if len(sys.argv) > 3 else 0.3)
+    if is_perfbench(json.load(open(sys.argv[1]))):
+        perfbench_main(sys.argv[1], sys.argv[2],
+                       float(sys.argv[3]) if len(sys.argv) > 3 else 20.0)
+    else:
+        main(sys.argv[1], sys.argv[2],
+             float(sys.argv[3]) if len(sys.argv) > 3 else 0.3)
