@@ -48,11 +48,27 @@ object SparkEntry {
     case graft.store.AttrValue.StrSeq(v) => v.mkString("[", ", ", "]")
   }
 
-  // One query-store per scale-factor dir, built once per JVM.
-  private val stores = new ConcurrentHashMap[String, HDFStore]()
+  /** One build-once cell: `computeIfAbsent` inserts only the cell and
+    * the build runs when the cell is forced, outside the map — so a
+    * build may itself force other fixtures. */
+  private final class Cell[T](build: () => T) { lazy val value: T = build() }
 
+  private val fixtures = new ConcurrentHashMap[(String, String), Cell[_]]()
+
+  /** The gate fixture `kind` over sf dir `sfDir`, built once per JVM.
+    * Concurrent callers of one key share one build; a build that throws
+    * leaves nothing cached, so the next call builds again. */
+  private[graft] def fixture[T](kind: String, sfDir: String)(build: => T): T = {
+    val key = (kind, sfDir)
+    val cell = fixtures.computeIfAbsent(key, _ => new Cell(() => build))
+      .asInstanceOf[Cell[T]]
+    try cell.value
+    catch { case e: Throwable => fixtures.remove(key, cell); throw e }
+  }
+
+  // One query-store per scale-factor dir.
   private def store(spark: SparkSession, sfDir: String): HDFStore =
-    stores.computeIfAbsent(sfDir, { _ =>
+    fixture("store", sfDir) {
       val dir = "/tmp/graft-qstore/" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
       val st = HDFStore.open(spark, dir, StoreMode.Overwrite)
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet").sort(LI.map(col): _*)
@@ -70,7 +86,7 @@ object SparkEntry {
       st.put("geo/raw/region",
         spark.read.parquet(s"$sfDir/region.parquet").sort("r_regionkey"))
       st
-    })
+    }
 
   private def li(spark: SparkSession, sfDir: String): HDFTable =
     store(spark, sfDir).table("lineitem")
@@ -117,20 +133,27 @@ object SparkEntry {
     }
   }
 
-  /** A fresh mutable copy of the base lineitem table (file-level copy) so
-    * mutation queries never disturb shared state; idempotent per call. */
-  private def mutCopy(spark: SparkSession, sfDir: String, name: String)
-                     (mut: HDFTable => Unit): HDFTable = {
+  /** Replace `dst` with a fresh file-level copy of `src`, then run `f`
+    * on the store under its lock — so mutation queries never disturb
+    * shared state; idempotent per call. */
+  private def copyFresh[T](spark: SparkSession, sfDir: String, src: String,
+                           dst: String)(f: HDFStore => T): T = {
     val st = store(spark, sfDir)
-    val full = "mut/" + name
     st.synchronized {
-      if (st.isTable(full)) st.drop(full)
-      st.copy("lineitem", full)
-      val t = st.table(full)
+      if (st.contains(dst)) st.drop(dst)
+      st.copy(src, dst)
+      f(st)
+    }
+  }
+
+  /** [[copyFresh]] of the base lineitem table to `mut/<name>`. */
+  private def mutCopy(spark: SparkSession, sfDir: String, name: String)
+                     (mut: HDFTable => Unit): HDFTable =
+    copyFresh(spark, sfDir, "lineitem", "mut/" + name) { st =>
+      val t = st.table("mut/" + name)
       mut(t)
       t
     }
-  }
 
   // ------------------------------------------------------------- contract
 
@@ -162,10 +185,7 @@ object SparkEntry {
 
     // S6: drop table (create copy, drop it, observe catalog)
     "s6_drop" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.isTable("mut/dropme")) st.drop("mut/dropme")
-        st.copy("lineitem", "mut/dropme")
+      copyFresh(s, d, "lineitem", "mut/dropme") { st =>
         val before = if (st.isTable("mut/dropme")) 1L else 0L
         st.drop("mut/dropme")
         st.drop("mut/dropme") // second drop must silently no-op (nimtables.nim:106-109)
@@ -281,10 +301,7 @@ object SparkEntry {
 
     // M6: coordinate write on the 2-D grid (value += 1000 at 3 points)
     "m6_coord_write" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.contains("mut/grid")) st.drop("mut/grid")
-        st.copy("grid", "mut/grid")
+      copyFresh(s, d, "grid", "mut/grid") { st =>
         val nd = NDArray.open(st, "mut/grid")
         nd.writePoints(Seq(Seq(0L, 0L), Seq(3L, 7L), Seq(19L, 19L)), id => id.toDouble + 1000.0)
         nd.df.filter(col("i0").isin(0, 3, 19))
@@ -361,10 +378,7 @@ object SparkEntry {
     // applyUpdates (nimhdf5/datasets.nim:1468-1504), same positional path
     // as scalar coordinate writes; only intersecting segments rewrite
     "v3_vlen_slab_write" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.contains("mut/embslab")) st.drop("mut/embslab")
-        st.copy("embeddings", "mut/embslab")
+      copyFresh(s, d, "embeddings", "mut/embslab") { st =>
         val t = st.table("mut/embslab")
         val vals = s.range(20).select(
           col("id").as("pos"),
@@ -392,10 +406,7 @@ object SparkEntry {
     // M6 broadcast variant: set an entire row of the 2-D grid (distributed
     // update-set construction, only intersecting segments rewritten)
     "m6_broadcast_row" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.contains("mut/gridrow")) st.drop("mut/gridrow")
-        st.copy("grid", "mut/gridrow")
+      copyFresh(s, d, "grid", "mut/gridrow") { st =>
         val nd = NDArray.open(st, "mut/gridrow")
         nd.writeBroadcast(0, 5, j => lit(9000L) + j)
         nd.df.filter(col("i0").between(4, 6))
@@ -406,10 +417,7 @@ object SparkEntry {
     // M6 strided-slab variant: write 48 values into an off/count/stride/
     // block selection; observe every touched axis-0 line
     "m6_hyperslab_write" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.contains("mut/gridslab")) st.drop("mut/gridslab")
-        st.copy("grid", "mut/gridslab")
+      copyFresh(s, d, "grid", "mut/gridslab") { st =>
         val nd = NDArray.open(st, "mut/gridslab")
         nd.writeHyperslab(Seq(0, 2), Seq(4, 3), Seq(5, 6), Seq(2, 2),
           (0 until 48).map(p => (100000 + p).toDouble))
@@ -421,10 +429,7 @@ object SparkEntry {
     // M5 on N-D: per-axis resize — grow axis 0 to 25 (zero-filled),
     // shrink axis 1 to 12 (drops columns); full relayout of strides
     "m5_nd_resize" -> ((s, d) => {
-      val st = store(s, d)
-      st.synchronized {
-        if (st.contains("mut/gridresize")) st.drop("mut/gridresize")
-        st.copy("grid", "mut/gridresize")
+      copyFresh(s, d, "grid", "mut/gridresize") { st =>
         val nd = NDArray.open(st, "mut/gridresize")
         nd.resize(Seq(25L, 12L))
         NDArray.open(st, "mut/gridresize").read()
@@ -729,7 +734,7 @@ object SparkEntry {
 
   // ----------------------------------------------- extensions: LLM-pipeline ops
 
-  import graft.ops.{AsOfJoin, Bpe, Cluster, Contamination, Dedup, Multimodal, RangeJoin, Sample, Sessionize, Similarity, TextStats}
+  import graft.ops.{AsOfJoin, Bpe, Cluster, Contamination, Dedup, DedupIndex, IndexMaintenance, Multimodal, Quantize, RangeJoin, Sample, Sessionize, Similarity, TextIndex, TextStats}
 
   private def docs(s: SparkSession, d: String) = s.read.parquet(s"$d/documents.parquet")
   private def embs(s: SparkSession, d: String) = s.read.parquet(s"$d/embeddings.parquet")
@@ -821,12 +826,9 @@ object SparkEntry {
     * cannot diverge — and CACHED per sf dir: the merges and corpus are
     * fixed, so each gate run must not re-pay the wordFreqs + alphabet
     * derivation (two jobs + two bounded collects) the first run made. */
-  private val bpeGateVocabCache =
-    new scala.collection.concurrent.TrieMap[(String, Boolean), Seq[String]]()
   private def bpeGateVocab(s: SparkSession, d: String): Seq[String] =
-    bpeGateVocabCache.getOrElseUpdate((d, false),
-      Bpe.vocabTable(s, docs(s, d), "text", bpeGateMerges)
-        .orderBy("token_id").collect().map(_.getString(1)).toSeq)
+    fixture("bpe_vocab", d)(Bpe.vocabTable(s, docs(s, d), "text", bpeGateMerges)
+      .orderBy("token_id").collect().map(_.getString(1)).toSeq)
 
   /** Reserved control tokens of the fallback fixture model — ids 0 and
     * 1, ahead of the byte block (the shard-writer convention the
@@ -837,10 +839,9 @@ object SparkEntry {
     * tokens, then the corpus alphabet and merge products — the total-
     * encoding fixture of `x_bpe_fallback`. Same cache discipline. */
   private def bpeGateVocabFb(s: SparkSession, d: String): Seq[String] =
-    bpeGateVocabCache.getOrElseUpdate((d, true),
-      Bpe.vocabTable(s, docs(s, d), "text", bpeGateMerges,
-          byteFallback = true, specials = bpeGateSpecials)
-        .orderBy("token_id").collect().map(_.getString(1)).toSeq)
+    fixture("bpe_vocab_fb", d)(Bpe.vocabTable(s, docs(s, d), "text",
+        bpeGateMerges, byteFallback = true, specials = bpeGateSpecials)
+      .orderBy("token_id").collect().map(_.getString(1)).toSeq)
 
   /** The non-fallback fixture model as a BpeModel VALUE, mass stats
     * included: total mass = every whitespace-token occurrence of the
@@ -850,32 +851,28 @@ object SparkEntry {
     * id-emitting stream gate and the card gate share one instance, so
     * repeated gate runs re-pay neither the wordFreqs jobs nor a model
     * save. */
-  private val bpeGateModelCache =
-    new scala.collection.concurrent.TrieMap[String, Bpe.BpeModel]()
   private def bpeGateModel(s: SparkSession, d: String): Bpe.BpeModel =
-    bpeGateModelCache.getOrElseUpdate(d, {
+    fixture("bpe_model", d) {
       val wf = Bpe.wordFreqs(docs(s, d), "text").localCheckpoint(true)
       val total = wf.agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
       val covered = wf.orderBy(col("cnt").desc, col("word")).limit(1000)
         .agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
       wf.unpersist()
       Bpe.BpeModel(bpeGateMerges, covered, total, bpeGateVocab(s, d))
-    })
+    }
 
   /** [[bpeGateModel]] PERSISTED once per sf dir (merges + vocab + card
     * parquet tree under a fresh tmp path) — the saved-artifact fixture
     * of `x_bpe_card` and `x_stream_token_ingest`. Cached so each gate
     * invocation stops re-paying a 3-table save + reload (the stream
     * gate alone was one more ~1 s of pure harness floor per run). */
-  private val bpeGateModelPathCache =
-    new scala.collection.concurrent.TrieMap[String, String]()
   private def bpeGateModelPath(s: SparkSession, d: String): String =
-    bpeGateModelPathCache.getOrElseUpdate(d, {
+    fixture("bpe_model_path", d) {
       val path = "/tmp/graft-bpe-gate-model-" +
         java.util.UUID.randomUUID().toString.take(8)
       Bpe.saveBpeModel(s, bpeGateModel(s, d), path)
       path
-    })
+    }
 
   /** Words the documents corpus cannot contain (Greek, a 4-byte-UTF-8
     * emoji) appended to every document — the out-of-training-alphabet
@@ -1071,12 +1068,6 @@ object SparkEntry {
     Dedup.minhashPairs(plantedDocs(s, d), "doc_id", "text", 3, 32, 8)
       .filter(col("est_jaccard") >= 0.5)
 
-  /** Persisted IVF index fixture (built once per JVM per sf dir): the
-    * 1-Lloyd-iteration spherical-k-means codebook plus a
-    * [[Similarity.buildIvfIndex]] parquet tree partitioned by list.
-    * Returns (index path, codebook). */
-  private val ivfIndexes =
-    new ConcurrentHashMap[String, (String, Seq[Seq[Double]])]()
   private lazy val ivfRoot: String = {
     val root = s"/tmp/graft-ivf-${ProcessHandle.current().pid()}"
     sys.addShutdownHook {
@@ -1087,85 +1078,79 @@ object SparkEntry {
     }
     root
   }
-  /** Per-process on-disk index path for sf dir `d`: the per-PROCESS
-    * root avoids cross-JVM build/probe races on a shared path, and the
-    * md5 of the RAW dir disambiguates (sanitization alone can map
-    * distinct sf dirs to the same name); the root is removed on JVM
-    * exit. Shared by the IVF and text indexes. */
-  private def indexPath(prefix: String, d: String): String = {
+  /** Per-process on-disk path of fixture `kind` for sf dir `d`: the
+    * per-PROCESS root avoids cross-JVM build/probe races on a shared
+    * path, and the md5 of the RAW dir disambiguates (sanitization alone
+    * can map distinct sf dirs to the same name); the root is removed on
+    * JVM exit. */
+  private def indexPath(kind: String, d: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$ivfRoot/$prefix${h}_" + d.replaceAll("[^A-Za-z0-9.]", "_")
+    s"$ivfRoot/$kind${h}_" + d.replaceAll("[^A-Za-z0-9.]", "_")
   }
 
-  private val jsonlDumps = new ConcurrentHashMap[String, String]()
-  /** Build-once JSONL dump of the documents table per sf dir — the
-    * ingestion gates read this tree back through [[graft.sources
-    * .CorpusIngest]], so the round trip (JSON escaping, unicode, NULL
-    * source omission) is what the oracle checks against the parquet
-    * originals. */
+  /** [[fixture]] whose value is the tree `build` writes at
+    * `indexPath(kind, d)` — the kind is the path prefix, so two tree
+    * fixtures cannot share a path. */
+  private def tree(kind: String, d: String)(build: String => Unit): String =
+    fixture(kind, d) { val p = indexPath(kind, d); build(p); p }
+
+  /** Persisted IVF index fixture: the 1-Lloyd-iteration
+    * spherical-k-means codebook plus a [[Similarity.buildIvfIndex]]
+    * parquet tree partitioned by list. Returns (index path, codebook). */
+  private def ivfIndex(s: SparkSession, d: String): (String, Seq[Seq[Double]]) =
+    fixture("ivf_", d) {
+      val path = indexPath("ivf_", d)
+      val cb = Similarity.kmeansCodebook(
+        embs(s, d), "vec_id", "embedding", k = 8, iters = 1)
+      Similarity.buildIvfIndex(embs(s, d), "vec_id", "embedding", cb, path)
+      (path, cb)
+    }
+
+  /** JSONL dump of the documents table — the ingestion gates read this
+    * tree back through [[graft.sources.CorpusIngest]], so the round trip
+    * (JSON escaping, unicode, NULL source omission) is what the oracle
+    * checks against the parquet originals. */
   private def jsonlDump(s: SparkSession, d: String): String =
-    jsonlDumps.computeIfAbsent(d, { _ =>
-      val path = indexPath("jsonl_", d)
-      graft.sources.CorpusIngest.writeJsonl(
-        docs(s, d).select("doc_id", "text", "source"), path)
-      path
-    })
+    tree("jsonl_", d)(graft.sources.CorpusIngest.writeJsonl(
+      docs(s, d).select("doc_id", "text", "source"), _))
 
-  private val wetDumps = new ConcurrentHashMap[String, String]()
-  /** Build-once WET-style crawl dump per sf dir (uri derived from
-    * source + doc id; the gate reads it back through the crawl-record
-    * parser). */
+  /** WET-style crawl dump (uri derived from source + doc id; the gate
+    * reads it back through the crawl-record parser). */
   private def wetDump(s: SparkSession, d: String): String =
-    wetDumps.computeIfAbsent(d, { _ =>
-      val path = indexPath("wet_", d)
-      graft.sources.CorpusIngest.writeWet(
-        docs(s, d).select(
-          concat(lit("https://"), col("source"), lit(".example/"),
-            col("doc_id").cast("string")).as("uri"),
-          col("text")),
-        "uri", "text", path)
-      path
-    })
+    tree("wet_", d)(graft.sources.CorpusIngest.writeWet(
+      docs(s, d).select(
+        concat(lit("https://"), col("source"), lit(".example/"),
+          col("doc_id").cast("string")).as("uri"),
+        col("text")),
+      "uri", "text", _))
 
-  private val csvDumps = new ConcurrentHashMap[String, String]()
-  /** Build-once CSV dump (RFC-4180 quoting) per sf dir. */
+  /** CSV dump (RFC-4180 quoting). */
   private def csvDump(s: SparkSession, d: String): String =
-    csvDumps.computeIfAbsent(d, { _ =>
-      val path = indexPath("csv_", d)
-      docs(s, d).select("doc_id", "text", "source")
-        .write.mode("overwrite").option("header", "true").csv(path)
-      path
-    })
+    tree("csv_", d)(docs(s, d).select("doc_id", "text", "source")
+      .write.mode("overwrite").option("header", "true").csv(_))
 
-  private val textIndexes = new ConcurrentHashMap[String, String]()
-  /** Build-once text index per sf dir (same discipline as [[ivfIndex]]). */
   private def textIndex(s: SparkSession, d: String): String =
-    textIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("ti_", d)
-      graft.ops.TextIndex.buildTextIndex(docs(s, d), "doc_id", "text", path,
-        nBuckets = 64)
-      path
-    })
+    tree("ti_", d)(TextIndex.buildTextIndex(docs(s, d), "doc_id", "text", _,
+      nBuckets = 64))
 
   /** Byte-for-byte clone of an index tree to a fresh path — the
     * mutable-ingest stream gates' amortization: their base snapshot
-    * index is built ONCE per process (the build-once discipline of
-    * every other fixture index) and each invocation mutates a CLONE,
+    * index is a build-once fixture and each invocation mutates a CLONE,
     * so repeated bench passes pay a local file copy instead of a
     * distributed rebuild. Oracle-safe by construction (identical
     * bytes). */
   private def cloneTree(s: SparkSession, src: String, dst: String): String = {
     val sp = java.nio.file.Paths.get(src)
     if (java.nio.file.Files.exists(sp)) {
-      // local tree: HARD-LINK clone (metadata-only, byte-identical) —
-      // safe because every file in an index tree is immutable by
-      // construction (parquet part files are never modified in place;
-      // MetaIO sidecars write a fresh tmp file and rename over, never
-      // rewrite content; deletes only unlink). The old recursive
-      // FileUtil byte copy walked a 64-bucket text index file by file
-      // on the driver. Cross-device/link-refusing filesystems fall
-      // back to a per-file copy.
+      // local tree: HARD-LINK clone (metadata-only, byte-identical). It
+      // relies on the never-rewrite-in-place rule (MetaIO.writeRows):
+      // no writer opens an existing index file for writing — parquet
+      // part files are written once, MetaIO sidecars write a fresh tmp
+      // file and rename over it, deletes only unlink. A writer that
+      // truncated a file in place would corrupt the shared base through
+      // every link. Cross-device/link-refusing filesystems fall back to
+      // a per-file copy.
       val dp = java.nio.file.Paths.get(dst)
       val walk = java.nio.file.Files.walk(sp)
       try walk.parallel().forEach { p =>
@@ -1193,81 +1178,67 @@ object SparkEntry {
     dst
   }
 
-  private val ingBaseDedupIdx = new ConcurrentHashMap[String, String]()
-  /** Build-once BASE dedup index for `x_stream_index_ingest` (each
-    * invocation clones it before the sink mutates the clone). */
+  /** BASE dedup index for `x_stream_index_ingest` (each invocation
+    * clones it before the sink mutates the clone). */
   private def ingBaseDedupIndex(s: SparkSession, d: String): String =
-    ingBaseDedupIdx.computeIfAbsent(d, { _ =>
-      val path = indexPath("ingb_", d)
-      graft.ops.DedupIndex.buildDedupIndex(crossRefCorpus(s, d),
-        "doc_id", "text", path, 3, 32, 8)
-      path
-    })
+    tree("ingb_", d)(DedupIndex.buildDedupIndex(crossRefCorpus(s, d),
+      "doc_id", "text", _, 3, 32, 8))
 
-  private val ingBaseTextIdx = new ConcurrentHashMap[String, String]()
-  /** Build-once BASE text index for `x_stream_text_ingest`. */
+  /** BASE text index for `x_stream_text_ingest`. */
   private def ingBaseTextIndex(s: SparkSession, d: String): String =
-    ingBaseTextIdx.computeIfAbsent(d, { _ =>
-      val path = indexPath("stib_", d)
-      graft.ops.TextIndex.buildTextIndex(
-        docs(s, d).filter(col("doc_id") < 200).select("doc_id", "text"),
-        "doc_id", "text", path, nBuckets = 64)
-      path
-    })
+    tree("stib_", d)(TextIndex.buildTextIndex(
+      docs(s, d).filter(col("doc_id") < 200).select("doc_id", "text"),
+      "doc_id", "text", _, nBuckets = 64))
 
-  private val ingBaseIvfIdx = new ConcurrentHashMap[String, String]()
-  /** Build-once BASE IVF index for `x_stream_embed_ingest`. */
+  /** The 16 smallest-id vectors of `df`, verbatim — a seed codebook
+    * the oracle mirrors as a `vec_id` order. */
+  private def first16(df: DataFrame): Seq[Seq[Double]] =
+    df.select(col("vec_id"), col("embedding"))
+      .orderBy("vec_id").limit(16).collect()
+      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
+
+  /** BASE IVF index for `x_stream_embed_ingest`. */
   private def ingBaseIvfIndex(s: SparkSession, d: String): String =
-    ingBaseIvfIdx.computeIfAbsent(d, { _ =>
-      val path = indexPath("eingb_", d)
+    tree("eingb_", d) { path =>
       val corpus = embs(s, d).filter(col("vec_id") >= 100)
-      val cb = corpus.select(col("vec_id"), col("embedding"))
-        .orderBy("vec_id").limit(16).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-      graft.ops.Similarity.buildIvfIndex(corpus, "vec_id", "embedding",
-        cb, path)
-      path
-    })
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", first16(corpus),
+        path)
+    }
 
-  private val shardTrees = new ConcurrentHashMap[String, String]()
-  /** Build-once physical shard tree for the `x_shard_*` gates: the
-    * composed select(4096 tokens/source) → shuffle(salt "shard",
-    * 32 buckets) → write(8 shards, 64-row files) recipe over the
-    * documents table — the same parameters `x_pipeline_shard` pins
-    * logically, now MATERIALIZED so the gates replay what is
-    * physically on disk. The 64-row file cap deliberately forces
-    * multi-file shards so the per-file manifest laws are exercised
-    * (and the file count is oracle-replayable as ceil(rows/64)). */
+  /** The documents table as the shard writers' doc-level input. */
+  private def shardBase(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      coalesce(col("source"), lit("")).as("source"),
+      col("n_chars").cast(LongType).as("score"),
+      size(TextStats.tokens(col("text"))).cast(LongType).as("n_tok"))
+
+  /** Physical shard tree for the `x_shard_*` gates: the composed
+    * select(4096 tokens/source) → shuffle(salt "shard", 32 buckets) →
+    * write(8 shards, 64-row files) recipe over the documents table — the
+    * same parameters `x_pipeline_shard` pins logically, MATERIALIZED so
+    * the gates replay what is physically on disk. The 64-row file cap
+    * forces multi-file shards so the per-file manifest laws are
+    * exercised (and the file count is oracle-replayable as
+    * ceil(rows/64)). */
   private def shardTree(s: SparkSession, d: String): String =
-    shardTrees.computeIfAbsent(d, { _ =>
-      val path = indexPath("shard_", d)
-      val base = docs(s, d).select(col("doc_id"),
-        coalesce(col("source"), lit("")).as("source"),
-        col("n_chars").cast(LongType).as("score"),
-        size(TextStats.tokens(col("text"))).cast(LongType).as("n_tok"))
-      graft.ops.ShardWriter.writeShardRecipe(base, "source", "doc_id",
-        "score", "n_tok", budget = 4096L, numShards = 8, path = path,
-        salt = "shard", buckets = 32, maxRowsPerFile = 64L)
-      path
-    })
+    tree("shard_", d) { path =>
+      graft.ops.ShardWriter.writeShardRecipe(shardBase(s, d), "source",
+        "doc_id", "score", "n_tok", budget = 4096L, numShards = 8,
+        path = path, salt = "shard", buckets = 32, maxRowsPerFile = 64L)
+    }
 
-  private val shardEpochTrees = new ConcurrentHashMap[String, String]()
-  /** Build-once epoch LINEAGE for the `x_shard_epoch*` / `x_shard_resume`
-    * gates: three selection identities (budgets 4096 → 2048 → 1024 over
-    * the same recipe, same salt/buckets) published as epochs 0..2 under
-    * one root, then epoch 0 retired via `pruneEpochsBefore` — the gates
+  /** Epoch LINEAGE for the `x_shard_epoch*` / `x_shard_resume` gates:
+    * three selection identities (budgets 4096 → 2048 → 1024 over the
+    * same recipe, same salt/buckets) published as epochs 0..2 under one
+    * root, then epoch 0 retired via `pruneEpochsBefore` — the gates
     * replay the two LIVE epochs' manifests and resume inside the latest.
     * 8-row files force several files per shard, so the resume cut at
     * position 64 (= one full file stripe of 8 shards × 8 rows) prunes
     * each shard's FIRST file and keeps the rest — manifest pruning is
     * what the oracle actually exercises, not a whole-tree scan. */
   private def shardEpochTree(s: SparkSession, d: String): String =
-    shardEpochTrees.computeIfAbsent(d, { _ =>
-      val root = indexPath("shardep_", d)
-      val base = docs(s, d).select(col("doc_id"),
-        coalesce(col("source"), lit("")).as("source"),
-        col("n_chars").cast(LongType).as("score"),
-        size(TextStats.tokens(col("text"))).cast(LongType).as("n_tok"))
+    tree("shardep_", d) { root =>
+      val base = shardBase(s, d)
       Seq(4096L, 2048L, 1024L).foreach { budget =>
         val sel = Sample.selectByBudget(base, "source", "doc_id", "score",
           "n_tok", budget).drop("cum_tokens", "sel_rank")
@@ -1278,43 +1249,37 @@ object SparkEntry {
       }
       val gone = graft.ops.ShardWriter.pruneEpochsBefore(s, root, 1)
       require(gone == Seq(0), s"expected to retire epoch 0, got $gone")
-      root
-    })
+    }
 
-  private val tokenShardTrees = new ConcurrentHashMap[String, String]()
-  /** Build-once TOKENIZED shard tree for the `x_token_shards*` gates:
-    * the training-artifact composition end to end — whitespace-token
-    * arrays, the deterministic doc shuffle (salt "tw", 32 buckets),
-    * the token stream sliced into 64-token context windows (partial
-    * tail dropped, the training convention), then the windows
-    * THEMSELVES written as a physical shard tree: `window_id` is the
-    * dense position of the window stream, so the writer's density and
+  /** TOKENIZED shard tree for the `x_token_shards*` gates: the
+    * training-artifact composition end to end — whitespace-token
+    * arrays, the deterministic doc shuffle (salt "tw", 32 buckets), the
+    * token stream sliced into 64-token context windows (partial tail
+    * dropped, the training convention), then the windows THEMSELVES
+    * written as a physical shard tree: `window_id` is the dense
+    * position of the window stream, so the writer's density and
     * contiguity laws apply verbatim one level up — files of 32 packed
     * fixed-length sequences in consumption order. */
   private def tokenShardTree(s: SparkSession, d: String): String =
-    tokenShardTrees.computeIfAbsent(d, { _ =>
-      val path = indexPath("tokshard_", d)
+    tree("tokshard_", d) { path =>
       val toks = docs(s, d).select(col("doc_id"),
         TextStats.tokens(col("text")).as("ts"))
       val pos = Sample.shuffleRank(toks, "doc_id", salt = "tw", buckets = 32)
       graft.ops.TokenStream.writeContextShards(pos, "shuffle_pos", "ts",
         ctxLen = 64, numShards = 4, path = path, salt = "tw",
         buckets = 32, blocks = 16, maxWindowsPerFile = 32L)
-      path
-    })
+    }
 
-  private val tokenEpochTrees = new ConcurrentHashMap[String, (String, String)]()
-  /** Build-once doc + window epoch LINEAGE for `x_token_resume_epoch`:
-    * the cross-epoch TOKEN-level resume needs BOTH halves of the
-    * trainer lifecycle on disk — doc-level epochs that CARRY the token
-    * arrays (selection budgets 4096 → 2048 under one salt, so epoch 1
-    * is a strict re-selection), and the ctx-64 window tree sliced from
-    * epoch 0's permutation (4-window files force manifest pruning on
-    * the consumed-prefix read). */
-  private def tokenEpochTree(s: SparkSession, d: String): (String, String) =
-    tokenEpochTrees.computeIfAbsent(d, { _ =>
-      val docRoot = indexPath("tokep_", d)
-      val winRoot = indexPath("tokepw_", d)
+  /** Doc + window epoch LINEAGE for `x_token_resume_epoch`: the
+    * cross-epoch TOKEN-level resume needs BOTH halves of the trainer
+    * lifecycle on disk — doc-level epochs that CARRY the token arrays
+    * (selection budgets 4096 → 2048 under one salt, so epoch 1 is a
+    * strict re-selection), and the ctx-64 window tree sliced from epoch
+    * 0's permutation (4-window files force manifest pruning on the
+    * consumed-prefix read). Returns (doc root, window root). */
+  private def tokenEpochTree(s: SparkSession, d: String): (String, String) = {
+    val winRoot = indexPath("tokepw_", d)
+    val docRoot = tree("tokep_", d) { docRoot =>
       val base = docs(s, d).select(col("doc_id"),
         coalesce(col("source"), lit("")).as("source"),
         col("n_chars").cast(LongType).as("score"),
@@ -1335,8 +1300,9 @@ object SparkEntry {
       graft.ops.ShardWriter.writeShardEpoch(pos1, "doc_id", "n_tok", 4,
         docRoot, salt = "te", buckets = 32, budget = 2048L,
         maxRowsPerFile = 8L)
-      (docRoot, winRoot)
-    })
+    }
+    (docRoot, winRoot)
+  }
 
   /** The planted quality corpus shared by the NB classifier gates:
     * every doc_id % 3 == 0 document carries an appended "premium"
@@ -1349,18 +1315,17 @@ object SparkEntry {
           lit(" premium curated encyclopedic exemplar prose")))
         .otherwise(col("text")).as("text"))
 
-  private val nbModels = new ConcurrentHashMap[String, graft.ops.Classifier.NbModel]()
-  /** Build-once NB quality model over the planted even-doc training
-    * set — shared by `x_classify_nb` and `x_stream_classify` (training
-    * is deterministic, so per-process caching is oracle-invisible). */
+  /** NB quality model over the planted even-doc training set — shared
+    * by `x_classify_nb` and `x_stream_classify` (training is
+    * deterministic, so per-process caching is oracle-invisible). */
   private def nbModel(s: SparkSession, d: String): graft.ops.Classifier.NbModel =
-    nbModels.computeIfAbsent(d, { _ =>
+    fixture("nb_model", d) {
       val train = plantedQualityDocs(s, d).filter(col("doc_id") % 2 === 0)
         .withColumn("label",
           when(col("doc_id") % 3 === 0, 1L).otherwise(0L))
       graft.ops.Classifier.trainNaiveBayes(train, "label", "text",
         nBuckets = 4096)
-    })
+    }
 
   /** The two sides of the cross-corpus dedup gates: the reference
     * snapshot (docs < 200) and the fresh batch (docs 200-299 plus 3
@@ -1376,365 +1341,172 @@ object SparkEntry {
         .select((col("doc_id") + 2000000L).as("doc_id"),
           concat(col("text"), lit(" zzz")).as("text")))
 
-  private val textIndexesApp = new ConcurrentHashMap[String, String]()
-  /** Incrementally-grown text index: built over the even docs, the odd
-    * docs APPENDED — exercises [[graft.ops.TextIndex.appendTextIndex]]
-    * under the same oracle as the one-shot build. */
-  private def textIndexAppended(s: SparkSession, d: String): String =
-    textIndexesApp.computeIfAbsent(d, { _ =>
-      val path = indexPath("tia_", d)
-      graft.ops.TextIndex.buildTextIndex(
-        docs(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), "doc_id", "text",
-        path, nBuckets = 64)
-      graft.ops.TextIndex.appendTextIndex(
-        docs(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1), "doc_id", "text",
-        path)
-      path
-    })
-
-  private val benchIndexes = new ConcurrentHashMap[String, String]()
-  /** Build-once decontamination index over the benchmark fixture
-    * (docs < 20) — same discipline as [[dedupIndex]]. */
+  /** Decontamination index over the benchmark fixture (docs < 20). */
   private def benchIndex(s: SparkSession, d: String): String =
-    benchIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("bi_", d)
-      graft.ops.Contamination.buildBenchIndex(
-        docs(s, d).filter(col("doc_id") < 20).select("doc_id", "text"),
-        "doc_id", "text", path, n = 3, expectedGrams = 1L << 16, fpp = 0.01)
-      path
-    })
+    tree("bi_", d)(Contamination.buildBenchIndex(
+      docs(s, d).filter(col("doc_id") < 20).select("doc_id", "text"),
+      "doc_id", "text", _, n = 3, expectedGrams = 1L << 16, fpp = 0.01))
 
-  private val textIndexesCpt = new ConcurrentHashMap[String, String]()
-  /** Append-grown text index COMPACTED in place: probe results must be
-    * byte-identical to the one-shot build (shared oracle), with the
-    * append-accumulated small files rewritten to ~1 per bucket. */
-  private def textIndexCompacted(s: SparkSession, d: String): String =
-    textIndexesCpt.computeIfAbsent(d, { _ =>
-      val path = indexPath("tic_", d)
-      graft.ops.TextIndex.buildTextIndex(
-        docs(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), "doc_id", "text",
-        path, nBuckets = 64)
-      graft.ops.TextIndex.appendTextIndex(
-        docs(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1), "doc_id", "text",
-        path)
-      graft.ops.IndexMaintenance.compactTextIndex(s, path)
-      path
-    })
-
-  private val textIndexesDel = new ConcurrentHashMap[String, String]()
-  /** Text index built over the corpus PLUS 3 planted docs made of the
-    * probe's own query tokens (guaranteed top-overlap hits), then
-    * tombstone-DELETED — the probe must match the plain-corpus oracle,
-    * which it can only do if the tombstones really filter and the
-    * subtractive stamp really verifies against the planted-free
-    * corpus. */
-  private def textIndexDeleted(s: SparkSession, d: String): String =
-    textIndexesDel.computeIfAbsent(d, { _ =>
-      val path = indexPath("tid_", d)
-      val planted = s.range(3).select((col("id") + 3000000L).as("doc_id"),
-        lit("the data quick join hash never-in-corpus the data quick join")
-          .as("text"))
-      graft.ops.TextIndex.buildTextIndex(
-        docs(s, d).select("doc_id", "text").unionByName(planted),
-        "doc_id", "text", path, nBuckets = 64)
-      graft.ops.IndexMaintenance.deleteFromTextIndex(s, path,
-        Seq(3000000L, 3000001L, 3000002L))
-      path
-    })
-
-  private val dedupIndexes = new ConcurrentHashMap[String, String]()
-  /** Build-once dedup index over the cross-corpus reference snapshot
-    * (same discipline as [[ivfIndex]]/[[textIndex]]). */
+  /** Dedup index over the cross-corpus reference snapshot. */
   private def dedupIndex(s: SparkSession, d: String): String =
-    dedupIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("di_", d)
-      graft.ops.DedupIndex.buildDedupIndex(crossRefCorpus(s, d),
-        "doc_id", "text", path, 3, 32, 8)
-      path
-    })
+    tree("di_", d)(DedupIndex.buildDedupIndex(crossRefCorpus(s, d),
+      "doc_id", "text", _, 3, 32, 8))
 
-  private val dedupIndexesApp = new ConcurrentHashMap[String, String]()
-  /** Incrementally-grown dedup index: built over docs < 100, docs
-    * 100-199 APPENDED — fingerprints are per-row, so the grown index
-    * equals the one-shot build over the full reference snapshot. */
-  private def dedupIndexAppended(s: SparkSession, d: String): String =
-    dedupIndexesApp.computeIfAbsent(d, { _ =>
-      val path = indexPath("dia_", d)
-      graft.ops.DedupIndex.buildDedupIndex(
-        crossRefCorpus(s, d).filter(col("doc_id") < 100),
-        "doc_id", "text", path, 3, 32, 8)
-      graft.ops.DedupIndex.appendDedupIndex(
-        crossRefCorpus(s, d).filter(col("doc_id") >= 100),
-        "doc_id", "text", path)
-      path
-    })
-
-  private val dedupIndexesCpt = new ConcurrentHashMap[String, String]()
-  /** Append-grown dedup index COMPACTED in place (shared oracle with
-    * the one-shot build). */
-  private def dedupIndexCompacted(s: SparkSession, d: String): String =
-    dedupIndexesCpt.computeIfAbsent(d, { _ =>
-      val path = indexPath("dic_", d)
-      graft.ops.DedupIndex.buildDedupIndex(
-        crossRefCorpus(s, d).filter(col("doc_id") < 100),
-        "doc_id", "text", path, 3, 32, 8)
-      graft.ops.DedupIndex.appendDedupIndex(
-        crossRefCorpus(s, d).filter(col("doc_id") >= 100),
-        "doc_id", "text", path)
-      graft.ops.IndexMaintenance.compactDedupIndex(s, path)
-      path
-    })
-
-  private val dedupIndexesDel = new ConcurrentHashMap[String, String]()
-  /** Dedup index over the reference snapshot PLUS 3 planted copies of
-    * the fresh batch's own planted variants (guaranteed est=1.0
-    * collisions), tombstone-DELETED — the probe matches the plain
-    * cross-corpus oracle only if deleted docs stop pairing. */
-  private def dedupIndexDeleted(s: SparkSession, d: String): String =
-    dedupIndexesDel.computeIfAbsent(d, { _ =>
-      val path = indexPath("did_", d)
-      val planted = docs(s, d).filter(col("doc_id") < 3)
-        .select((col("doc_id") + 7000000L).as("doc_id"),
-          concat(col("text"), lit(" zzz")).as("text"))
-      graft.ops.DedupIndex.buildDedupIndex(
-        crossRefCorpus(s, d).unionByName(planted), "doc_id", "text", path,
-        3, 32, 8)
-      graft.ops.IndexMaintenance.deleteFromDedupIndex(s, path,
-        Seq(7000000L, 7000001L, 7000002L))
-      path
-    })
-
-  private def ivfIndex(s: SparkSession, d: String): (String, Seq[Seq[Double]]) =
-    ivfIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("", d)
-      val cb = graft.ops.Similarity.kmeansCodebook(
-        embs(s, d), "vec_id", "embedding", k = 8, iters = 1)
-      graft.ops.Similarity.buildIvfIndex(embs(s, d), "vec_id", "embedding", cb, path)
-      (path, cb)
-    })
-
-  private val ivfIndexesCross = new ConcurrentHashMap[String, String]()
   /** IVF tree over the CORPUS side of the embedding cross-dedup gate
     * (vec_id >= 100), codebook = its 16 smallest-id vectors — list ids
     * are row_number-1 in vec_id order, which the oracle reproduces. */
   private def ivfIndexCross(s: SparkSession, d: String): String =
-    ivfIndexesCross.computeIfAbsent(d, { _ =>
-      val path = indexPath("ivfcross_", d)
+    tree("ivfcross_", d) { path =>
       val corpus = embs(s, d).filter(col("vec_id") >= 100)
-      val cb = corpus.select(col("vec_id"), col("embedding"))
-        .orderBy("vec_id").limit(16).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-      graft.ops.Similarity.buildIvfIndex(corpus, "vec_id", "embedding", cb, path)
-      path
-    })
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", first16(corpus),
+        path)
+    }
 
-  private val ivfIndexesSeeded = new ConcurrentHashMap[String, String]()
   /** IVF tree whose codebook is knnJoin's DEFAULT (the 16 smallest-id
     * corpus vectors — their vec_ids 0..15 coincide with codebook
     * indices, and floats widen exactly in the fixed-point kernel), so
     * the indexed batch probe shares x_knn_join's oracle verbatim. */
   private def ivfIndexSeeded(s: SparkSession, d: String): String =
-    ivfIndexesSeeded.computeIfAbsent(d, { _ =>
-      val path = indexPath("ivfseed_", d)
-      val cb = embs(s, d).select(col("vec_id"), col("embedding"))
-        .orderBy("vec_id").limit(16).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-      graft.ops.Similarity.buildIvfIndex(embs(s, d), "vec_id", "embedding", cb, path)
-      path
-    })
+    tree("ivfseed_", d)(Similarity.buildIvfIndex(embs(s, d), "vec_id",
+      "embedding", first16(embs(s, d)), _))
 
-  private val pqCodebooks = new ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
   /** Seeded PQ codebooks (m=8 subspaces, ksub=16, iters=0 — the fully
-    * oracle-mirrorable quantizer), trained once per sf dir. */
+    * oracle-mirrorable quantizer). */
   private def pqCbs(s: SparkSession, d: String): Seq[Seq[Seq[Double]]] =
-    pqCodebooks.computeIfAbsent(d, { _ =>
-      graft.ops.Quantize.pqCodebooks(embs(s, d), "vec_id", "embedding",
-        m = 8, ksub = 16, iters = 0)
-    })
+    fixture("pq_codebooks", d)(Quantize.pqCodebooks(embs(s, d), "vec_id",
+      "embedding", m = 8, ksub = 16, iters = 0))
 
-  private val pqIndexes = new ConcurrentHashMap[String, String]()
-  /** Build-once persisted PQ code table over the full fixture. */
+  /** Persisted PQ code table over the full fixture. */
   private def pqIndex(s: SparkSession, d: String): String =
-    pqIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("pq_", d)
-      graft.ops.Quantize.buildPqIndex(embs(s, d), "vec_id", "embedding",
-        pqCbs(s, d), path)
-      path
-    })
-
-  private val pqIndexesApp = new ConcurrentHashMap[String, String]()
-  /** Incrementally-grown PQ index: built over the even vec_ids, the odd
-    * vec_ids APPENDED (encoded with the index's own codebooks) — codes
-    * are per-row, so the grown index equals the one-shot build. */
-  private def pqIndexAppended(s: SparkSession, d: String): String =
-    pqIndexesApp.computeIfAbsent(d, { _ =>
-      val path = indexPath("pqa_", d)
-      graft.ops.Quantize.buildPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", pqCbs(s, d), path)
-      graft.ops.Quantize.appendPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      path
-    })
-
-  private val pqIndexesCpt = new ConcurrentHashMap[String, String]()
-  /** Append-grown PQ code table COMPACTED in place (shared oracle). */
-  private def pqIndexCompacted(s: SparkSession, d: String): String =
-    pqIndexesCpt.computeIfAbsent(d, { _ =>
-      val path = indexPath("pqc_", d)
-      graft.ops.Quantize.buildPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", pqCbs(s, d), path)
-      graft.ops.Quantize.appendPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      graft.ops.IndexMaintenance.compactPqIndex(s, path)
-      path
-    })
-
-  private val pqIndexesDel = new ConcurrentHashMap[String, String]()
-  /** PQ code table over the corpus PLUS 3 planted 1.001-scaled copies
-    * of the query vector — each plant's sub-vectors sit within 0.1% of
-    * the query's own codewords (the query is PQ seed 0), so they take
-    * its codes and tie its ADC score of 1.0 (top-k entrants) — then
-    * tombstone-DELETED: the probe matches the plain-corpus oracle only
-    * if tombstones really filter. */
-  private def pqIndexDeleted(s: SparkSession, d: String): String =
-    pqIndexesDel.computeIfAbsent(d, { _ =>
-      val path = indexPath("pqd_", d)
-      val planted = embs(s, d).filter(col("vec_id") < 3)
-        .select((col("vec_id") + 7000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.001f)).as("embedding"))
-      graft.ops.Quantize.buildPqIndex(
-        embs(s, d).select("vec_id", "embedding").unionByName(planted),
-        "vec_id", "embedding", pqCbs(s, d), path)
-      graft.ops.IndexMaintenance.deleteFromPqIndex(s, path,
-        Seq(7000000L, 7000001L, 7000002L))
-      path
-    })
-
-  private val ivfPqIndexesCpt = new ConcurrentHashMap[String, String]()
-  /** Append-grown IVF+PQ tree COMPACTED in place (shared oracle). */
-  private def ivfPqIndexCompacted(s: SparkSession, d: String): String =
-    ivfPqIndexesCpt.computeIfAbsent(d, { _ =>
-      val path = indexPath("ipc_", d)
-      graft.ops.Quantize.buildIvfPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", seedCoarse(s, d), pqCbs(s, d), path)
-      graft.ops.Quantize.appendIvfPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      graft.ops.IndexMaintenance.compactIvfPqIndex(s, path)
-      path
-    })
-
-  private val ivfPqIndexesDel = new ConcurrentHashMap[String, String]()
-  /** IVF+PQ tree with 3 planted 1.001-scaled query-vector copies (the
-    * cosine coarse assignment is scale-invariant, so they share the
-    * query's list; their sub-vectors take its codes as above)
-    * tombstone-DELETED. */
-  private def ivfPqIndexDeleted(s: SparkSession, d: String): String =
-    ivfPqIndexesDel.computeIfAbsent(d, { _ =>
-      val path = indexPath("ipd_", d)
-      val planted = embs(s, d).filter(col("vec_id") < 3)
-        .select((col("vec_id") + 7000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.001f)).as("embedding"))
-      graft.ops.Quantize.buildIvfPqIndex(
-        embs(s, d).select("vec_id", "embedding").unionByName(planted),
-        "vec_id", "embedding", seedCoarse(s, d), pqCbs(s, d), path)
-      graft.ops.IndexMaintenance.deleteFromIvfPqIndex(s, path,
-        Seq(7000000L, 7000001L, 7000002L))
-      path
-    })
+    tree("pq_", d)(Quantize.buildPqIndex(embs(s, d), "vec_id", "embedding",
+      pqCbs(s, d), _))
 
   /** Seed coarse codebook for the IVF+PQ gates: the 16 smallest-id
     * vectors verbatim (the `x_knn_ivf` seeding, fully oracle-mirrorable
     * as `vec_id < 16`). */
   private def seedCoarse(s: SparkSession, d: String): Seq[Seq[Double]] =
-    embs(s, d).select(col("vec_id").cast(org.apache.spark.sql.types.LongType),
-        col("embedding"))
-      .orderBy("vec_id").limit(16)
-      .collect().toSeq.map(_.getSeq[Float](1).map(_.toDouble).toSeq)
+    first16(embs(s, d))
 
-  private val ivfPqIndexes = new ConcurrentHashMap[String, String]()
-  /** Build-once IVF+PQ index: coarse seed lists × seeded PQ codes. */
+  /** IVF+PQ index: coarse seed lists × seeded PQ codes. */
   private def ivfPqIndex(s: SparkSession, d: String): String =
-    ivfPqIndexes.computeIfAbsent(d, { _ =>
-      val path = indexPath("ipq_", d)
-      graft.ops.Quantize.buildIvfPqIndex(embs(s, d), "vec_id", "embedding",
-        seedCoarse(s, d), pqCbs(s, d), path)
-      path
-    })
+    tree("ipq_", d)(Quantize.buildIvfPqIndex(embs(s, d), "vec_id",
+      "embedding", seedCoarse(s, d), pqCbs(s, d), _))
 
-  private val ivfPqIndexesApp = new ConcurrentHashMap[String, String]()
-  /** Incrementally-grown IVF+PQ index (evens built, odds appended with
-    * the index's own coarse + PQ codebooks). */
-  private def ivfPqIndexAppended(s: SparkSession, d: String): String =
-    ivfPqIndexesApp.computeIfAbsent(d, { _ =>
-      val path = indexPath("ipa_", d)
-      graft.ops.Quantize.buildIvfPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", seedCoarse(s, d), pqCbs(s, d), path)
-      graft.ops.Quantize.appendIvfPqIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      path
-    })
+  /** One index family's grown, compacted and deleted fixtures. The
+    * GROWN tree is built over the first half of `corpus` with the second
+    * half APPENDED; per-row assignment is batch-independent, so it
+    * serves the one-shot build's oracle. The COMPACTED tree is the grown
+    * one compacted in place (append-accumulated small files rewritten;
+    * shared oracle). The DELETED tree is built over `corpus` (its `cols`)
+    * plus `planted` rows that are guaranteed probe hits, then
+    * tombstone-deletes `deleteIds` (the planted ids): its probe matches
+    * the plain-corpus oracle only if tombstones really filter and the
+    * subtractive stamp verifies against the planted-free corpus. `build`
+    * takes (session, sf dir, rows, path). */
+  private final case class IndexFamily(
+      kind: String,
+      corpus: (SparkSession, String) => DataFrame,
+      halves: (Column, Column),
+      cols: Seq[String],
+      planted: (SparkSession, String) => DataFrame,
+      deleteIds: Seq[Long],
+      build: (SparkSession, String, DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      compact: (SparkSession, String) => Unit,
+      delete: (SparkSession, String, Seq[Long]) => Unit)
 
-  private val ivfIndexesApp = new ConcurrentHashMap[String, String]()
-  /** Incrementally-grown IVF index: built over the even vec_ids (same
-    * full-corpus codebook), the odd vec_ids APPENDED — per-row
-    * assignment is batch-independent, so the grown index serves the
-    * one-shot gate's oracle. */
-  private def ivfIndexAppended(s: SparkSession, d: String): String =
-    ivfIndexesApp.computeIfAbsent(d, { _ =>
-      val path = indexPath("iva_", d)
-      val cb = ivfIndex(s, d)._2
-      graft.ops.Similarity.buildIvfIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", cb, path)
-      graft.ops.Similarity.appendIvfIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      path
-    })
+  private def grownIndex(f: IndexFamily, s: SparkSession, d: String): String =
+    tree(f.kind + "a_", d)(grow(f, s, d, _))
 
-  private val ivfIndexesCpt = new ConcurrentHashMap[String, String]()
-  /** Append-grown IVF index COMPACTED in place (shared oracle). */
-  private def ivfIndexCompacted(s: SparkSession, d: String): String =
-    ivfIndexesCpt.computeIfAbsent(d, { _ =>
-      val path = indexPath("ivc_", d)
-      val cb = ivfIndex(s, d)._2
-      graft.ops.Similarity.buildIvfIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 0),
-        "vec_id", "embedding", cb, path)
-      graft.ops.Similarity.appendIvfIndex(
-        embs(s, d).filter(pmod(col("vec_id"), lit(2L)) === 1),
-        "vec_id", "embedding", path)
-      graft.ops.IndexMaintenance.compactIvfIndex(s, path)
-      path
-    })
+  private def compactedIndex(f: IndexFamily, s: SparkSession, d: String): String =
+    tree(f.kind + "c_", d) { path => grow(f, s, d, path); f.compact(s, path) }
 
-  private val ivfIndexesDel = new ConcurrentHashMap[String, String]()
-  /** IVF index over the corpus PLUS 3 planted scaled copies of the
-    * query vector (cosine 1.0 — guaranteed top-k entrants),
-    * tombstone-DELETED — the probe matches the plain-corpus oracle
-    * only if deleted vectors stop serving. */
-  private def ivfIndexDeleted(s: SparkSession, d: String): String =
-    ivfIndexesDel.computeIfAbsent(d, { _ =>
-      val path = indexPath("ivd_", d)
-      val cb = ivfIndex(s, d)._2
-      val planted = embs(s, d).filter(col("vec_id") < 3)
-        .select((col("vec_id") + 7000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.001f)).as("embedding"))
-      graft.ops.Similarity.buildIvfIndex(
-        embs(s, d).select("vec_id", "embedding").unionByName(planted),
-        "vec_id", "embedding", cb, path)
-      graft.ops.IndexMaintenance.deleteFromIvfIndex(s, path,
-        Seq(7000000L, 7000001L, 7000002L))
-      path
-    })
+  private def deletedIndex(f: IndexFamily, s: SparkSession, d: String): String =
+    tree(f.kind + "d_", d) { path =>
+      f.build(s, d, f.corpus(s, d).select(f.cols.map(col): _*)
+        .unionByName(f.planted(s, d)), path)
+      f.delete(s, path, f.deleteIds)
+    }
+
+  private def grow(f: IndexFamily, s: SparkSession, d: String, path: String): Unit = {
+    f.build(s, d, f.corpus(s, d).filter(f.halves._1), path)
+    f.append(f.corpus(s, d).filter(f.halves._2), path)
+  }
+
+  private val plantedIds = Seq(7000000L, 7000001L, 7000002L)
+
+  private def evenOdd(c: String): (Column, Column) =
+    (pmod(col(c), lit(2L)) === 0, pmod(col(c), lit(2L)) === 1)
+
+  /** 3 planted docs made of the text probe's own query tokens
+    * (guaranteed top-overlap hits). */
+  private val textFamily = IndexFamily("ti", docs, evenOdd("doc_id"),
+    Seq("doc_id", "text"),
+    (s, _) => s.range(3).select((col("id") + 3000000L).as("doc_id"),
+      lit("the data quick join hash never-in-corpus the data quick join")
+        .as("text")),
+    Seq(3000000L, 3000001L, 3000002L),
+    (_, _, df, p) => TextIndex.buildTextIndex(df, "doc_id", "text", p,
+      nBuckets = 64),
+    (df, p) => TextIndex.appendTextIndex(df, "doc_id", "text", p),
+    (s, p) => IndexMaintenance.compactTextIndex(s, p),
+    (s, p, ids) => IndexMaintenance.deleteFromTextIndex(s, p, ids))
+
+  /** Reference snapshot split at doc 100; plants 3 copies of the fresh
+    * batch's own planted variants (guaranteed est=1.0 collisions). */
+  private val dedupFamily = IndexFamily("di", crossRefCorpus,
+    (col("doc_id") < 100, col("doc_id") >= 100), Seq("doc_id", "text"),
+    (s, d) => docs(s, d).filter(col("doc_id") < 3)
+      .select((col("doc_id") + 7000000L).as("doc_id"),
+        concat(col("text"), lit(" zzz")).as("text")),
+    plantedIds,
+    (_, _, df, p) => DedupIndex.buildDedupIndex(df, "doc_id", "text", p,
+      3, 32, 8),
+    (df, p) => DedupIndex.appendDedupIndex(df, "doc_id", "text", p),
+    (s, p) => IndexMaintenance.compactDedupIndex(s, p),
+    (s, p, ids) => IndexMaintenance.deleteFromDedupIndex(s, p, ids))
+
+  /** 3 planted 1.001-scaled copies of the query vector: cosine 1.0 (and
+    * the cosine coarse assignment is scale-invariant, so they share the
+    * query's list); each plant's sub-vectors sit within 0.1% of the
+    * query's own PQ codewords (the query is PQ seed 0), so they take its
+    * codes and tie its ADC score of 1.0 — top-k entrants either way. */
+  private def plantedVecs(s: SparkSession, d: String): DataFrame =
+    embs(s, d).filter(col("vec_id") < 3)
+      .select((col("vec_id") + 7000000L).as("vec_id"),
+        transform(col("embedding"), x => x * lit(1.001f)).as("embedding"))
+
+  /** Vector family over the full embeddings fixture: evens built, odds
+    * appended with the index's own codebooks. */
+  private def vecFamily(kind: String,
+                        build: (SparkSession, String, DataFrame, String) => Unit,
+                        append: (DataFrame, String) => Unit,
+                        compact: (SparkSession, String) => Unit,
+                        delete: (SparkSession, String, Seq[Long]) => Unit) =
+    IndexFamily(kind, embs, evenOdd("vec_id"), Seq("vec_id", "embedding"),
+      plantedVecs, plantedIds, build, append, compact, delete)
+
+  /** IVF: the full-corpus k-means codebook of [[ivfIndex]]. */
+  private val ivfFamily = vecFamily("iv",
+    (s, d, df, p) => Similarity.buildIvfIndex(df, "vec_id", "embedding",
+      ivfIndex(s, d)._2, p),
+    (df, p) => Similarity.appendIvfIndex(df, "vec_id", "embedding", p),
+    (s, p) => IndexMaintenance.compactIvfIndex(s, p),
+    (s, p, ids) => IndexMaintenance.deleteFromIvfIndex(s, p, ids))
+
+  private val pqFamily = vecFamily("pq",
+    (s, d, df, p) => Quantize.buildPqIndex(df, "vec_id", "embedding",
+      pqCbs(s, d), p),
+    (df, p) => Quantize.appendPqIndex(df, "vec_id", "embedding", p),
+    (s, p) => IndexMaintenance.compactPqIndex(s, p),
+    (s, p, ids) => IndexMaintenance.deleteFromPqIndex(s, p, ids))
+
+  private val ivfPqFamily = vecFamily("ip",
+    (s, d, df, p) => Quantize.buildIvfPqIndex(df, "vec_id", "embedding",
+      seedCoarse(s, d), pqCbs(s, d), p),
+    (df, p) => Quantize.appendIvfPqIndex(df, "vec_id", "embedding", p),
+    (s, p) => IndexMaintenance.compactIvfPqIndex(s, p),
+    (s, p, ids) => IndexMaintenance.deleteFromIvfPqIndex(s, p, ids))
 
   /** Stage a batch DataFrame as a file-stream source in a fresh run dir
     * (input parquet + checkpoint), hand `(source, checkpointDir)` to `f`
@@ -1885,7 +1657,7 @@ object SparkEntry {
     // so the grown index shares the one-shot oracle; the probe still
     // verifies freshness against the full reference
     "x_dedup_cross_append" -> ((s, d) =>
-      graft.ops.DedupIndex.pairsAgainstIndex(s, dedupIndexAppended(s, d),
+      graft.ops.DedupIndex.pairsAgainstIndex(s, grownIndex(dedupFamily, s, d),
           crossFreshBatch(s, d), "doc_id", "text",
           verifyAgainst = Some((crossRefCorpus(s, d), "doc_id")))
         .filter(col("est_jaccard") >= 0.5)
@@ -1904,7 +1676,7 @@ object SparkEntry {
 
     // the same cross-corpus probe against a grown-then-COMPACTED index
     "x_dedup_cross_compact" -> ((s, d) =>
-      graft.ops.DedupIndex.pairsAgainstIndex(s, dedupIndexCompacted(s, d),
+      graft.ops.DedupIndex.pairsAgainstIndex(s, compactedIndex(dedupFamily, s, d),
           crossFreshBatch(s, d), "doc_id", "text",
           verifyAgainst = Some((crossRefCorpus(s, d), "doc_id")))
         .filter(col("est_jaccard") >= 0.5)
@@ -1915,7 +1687,7 @@ object SparkEntry {
     // generate vanish only if deleted docs stop pairing, and the
     // subtractive stamp verifies against the planted-free snapshot
     "x_dedup_cross_delete" -> ((s, d) =>
-      graft.ops.DedupIndex.pairsAgainstIndex(s, dedupIndexDeleted(s, d),
+      graft.ops.DedupIndex.pairsAgainstIndex(s, deletedIndex(dedupFamily, s, d),
           crossFreshBatch(s, d), "doc_id", "text",
           verifyAgainst = Some((crossRefCorpus(s, d), "doc_id")))
         .filter(col("est_jaccard") >= 0.5)
@@ -2226,7 +1998,7 @@ object SparkEntry {
     // shares its oracle; the probe still runs the freshness contract
     // against the full corpus
     "x_text_index_append" -> ((s, d) => {
-      val path = textIndexAppended(s, d)
+      val path = grownIndex(textFamily, s, d)
       graft.ops.TextIndex.searchIndex(s, path,
           "the data quick join hash never-in-corpus", 10,
           verifyAgainst = (docs(s, d), "doc_id"))
@@ -2236,7 +2008,7 @@ object SparkEntry {
     // the same probe against a grown-then-COMPACTED index: compaction
     // (file coalescing + staging/swap) must be invisible to results
     "x_text_index_compact" -> ((s, d) => {
-      val path = textIndexCompacted(s, d)
+      val path = compactedIndex(textFamily, s, d)
       graft.ops.TextIndex.searchIndex(s, path,
           "the data quick join hash never-in-corpus", 10,
           verifyAgainst = (docs(s, d), "doc_id"))
@@ -2249,7 +2021,7 @@ object SparkEntry {
     // top 3 hits) and the subtractive stamp verifies against the
     // planted-free corpus
     "x_text_index_delete" -> ((s, d) => {
-      val path = textIndexDeleted(s, d)
+      val path = deletedIndex(textFamily, s, d)
       graft.ops.TextIndex.searchIndex(s, path,
           "the data quick join hash never-in-corpus", 10,
           verifyAgainst = (docs(s, d), "doc_id"))
@@ -2369,7 +2141,7 @@ object SparkEntry {
     "x_knn_ivf_append" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.ivfTopKIndexed(s, ivfIndexAppended(s, d), q, 10, nprobe = 3,
+      Similarity.ivfTopKIndexed(s, grownIndex(ivfFamily, s, d), q, 10, nprobe = 3,
         verifyAgainst = (embs(s, d), "vec_id"))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))
@@ -2407,7 +2179,7 @@ object SparkEntry {
     "x_knn_pq_append" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.pqTopKIndexed(s, pqIndexAppended(s, d), q, 10,
+      graft.ops.Quantize.pqTopKIndexed(s, grownIndex(pqFamily, s, d), q, 10,
           verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     }),
@@ -2416,7 +2188,7 @@ object SparkEntry {
     "x_knn_pq_compact" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.pqTopKIndexed(s, pqIndexCompacted(s, d), q, 10,
+      graft.ops.Quantize.pqTopKIndexed(s, compactedIndex(pqFamily, s, d), q, 10,
           verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     }),
@@ -2428,7 +2200,7 @@ object SparkEntry {
     "x_knn_pq_delete" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.pqTopKIndexed(s, pqIndexDeleted(s, d), q, 10,
+      graft.ops.Quantize.pqTopKIndexed(s, deletedIndex(pqFamily, s, d), q, 10,
           verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"))
     }),
@@ -2523,7 +2295,7 @@ object SparkEntry {
     "x_knn_ivfpq_append" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.ivfPqTopKIndexed(s, ivfPqIndexAppended(s, d), q, 10,
+      graft.ops.Quantize.ivfPqTopKIndexed(s, grownIndex(ivfPqFamily, s, d), q, 10,
           nprobe = 4, verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))
@@ -2533,7 +2305,7 @@ object SparkEntry {
     "x_knn_ivfpq_compact" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.ivfPqTopKIndexed(s, ivfPqIndexCompacted(s, d), q, 10,
+      graft.ops.Quantize.ivfPqTopKIndexed(s, compactedIndex(ivfPqFamily, s, d), q, 10,
           nprobe = 4, verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))
@@ -2544,7 +2316,7 @@ object SparkEntry {
     "x_knn_ivfpq_delete" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      graft.ops.Quantize.ivfPqTopKIndexed(s, ivfPqIndexDeleted(s, d), q, 10,
+      graft.ops.Quantize.ivfPqTopKIndexed(s, deletedIndex(ivfPqFamily, s, d), q, 10,
           nprobe = 4, verifyAgainst = Some((embs(s, d), "vec_id")))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))
@@ -2554,7 +2326,7 @@ object SparkEntry {
     "x_knn_ivf_compact" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.ivfTopKIndexed(s, ivfIndexCompacted(s, d), q, 10, nprobe = 3,
+      Similarity.ivfTopKIndexed(s, compactedIndex(ivfFamily, s, d), q, 10, nprobe = 3,
         verifyAgainst = (embs(s, d), "vec_id"))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))
@@ -2567,7 +2339,7 @@ object SparkEntry {
     "x_knn_ivf_delete" -> ((s, d) => {
       val q = embs(s, d).filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.ivfTopKIndexed(s, ivfIndexDeleted(s, d), q, 10, nprobe = 3,
+      Similarity.ivfTopKIndexed(s, deletedIndex(ivfFamily, s, d), q, 10, nprobe = 3,
         verifyAgainst = (embs(s, d), "vec_id"))
         .select(col("id").as("vec_id"), round(col("score"), 6).as("score"),
           col("list"))

@@ -95,7 +95,14 @@ object TextIndex {
     * sum — [[Similarity.sourceStamp]]), and the corpus token total
     * (for BM25's avgdl); stamp and token total both ride the write job
     * itself via `Observation` — no second scan. NULL/empty tokens are
-    * never indexed; ids must cast to Long (the posting key type). */
+    * never indexed; ids must cast to Long (the posting key type).
+    *
+    * Precondition, not checked here: ids are UNIQUE in `df`. Postings
+    * group by (id, doc_len, token), so two documents sharing an id
+    * index as separate postings with separate lengths, and BM25, phrase
+    * and overlap results for that id are undefined. Checking would cost
+    * a job per build; [[appendTextIndex]] does refuse repeated ids, both
+    * within its batch and against the tree. */
   def buildTextIndex(df: DataFrame, idCol: String, textCol: String,
                      path: String, nBuckets: Int = 256,
                      expectedIds: Long = IndexIds.DefaultExpectedIds,

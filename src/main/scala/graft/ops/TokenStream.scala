@@ -129,19 +129,20 @@ object TokenStream {
         lit("got NULL for position "),
         coalesce(posL.cast("string"), lit("NULL")))))
 
-    // pass 1 (narrow): N fixes the block width
+    // empty selection -> empty window stream (the WRITER refuses
+    // empties; a transform composes)
+    def empty = df.limit(0).select(
+      posL.as("window_id"), col(tokensCol).as("tokens"),
+      lit(null).cast("array<struct<pos:bigint,start:bigint,len:bigint>>")
+        .as("doc_spans"),
+      lit(0L).as("n_tok"), lit(0L).as("n_docs"),
+      posL.as("min_pos"), posL.as("max_pos"))
+    // pass 1 (narrow): N fixes the block width. A `knownN` hint skips
+    // it and is confirmed or refused by pass 2 like any other N.
     val n = knownN.getOrElse(df.agg(count(lit(1))).head().getLong(0))
-    if (n == 0L) {
-      // empty selection -> empty window stream (the WRITER refuses
-      // empties; a transform composes)
-      return df.limit(0).select(
-        posL.as("window_id"), col(tokensCol).as("tokens"),
-        lit(null).cast("array<struct<pos:bigint,start:bigint,len:bigint>>")
-          .as("doc_spans"),
-        lit(0L).as("n_tok"), lit(0L).as("n_docs"),
-        posL.as("min_pos"), posL.as("max_pos"))
-    }
-    val blockSize = (n + blocks - 1) / blocks
+    if (n == 0L && knownN.isEmpty) return empty
+    // at least 1: a hint of 0 must still reach pass 2's check
+    val blockSize = ((n + blocks - 1) / blocks).max(1L)
     val blk = col("_tsb")
     val keyed = df
       .withColumn("_tsp", checkedPos)
@@ -156,11 +157,14 @@ object TokenStream {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).sortBy(_._1)
     val distinct = stats.map(_._3).sum
-    val (gMin, gMax) = (stats.map(_._4).min, stats.map(_._5).max)
+    // an empty input has no range: [0, -1] is exactly the dense [0, 0)
+    val (gMin, gMax) =
+      if (stats.isEmpty) (0L, -1L) else (stats.map(_._4).min, stats.map(_._5).max)
     require(distinct == n && gMin == 0L && gMax == n - 1L,
       s"sliceWindows: '$posCol' is not a dense [0, $n) permutation " +
         s"($distinct distinct positions in [$gMin, $gMax]) — run " +
         "Sample.shuffleRank AFTER the final selection, then slice")
+    if (n == 0L) return empty
     val offsets = stats.map(s => (s._1, s._6))
       .scanLeft((Long.MinValue, 0L)) { case ((_, acc), (b, t)) => (b, acc + t) }
       .sliding(2).collect { case Array((_, off), (b, _)) => (b, off) }.toMap

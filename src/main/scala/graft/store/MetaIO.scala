@@ -110,7 +110,13 @@ object MetaIO {
     * .write` path paid a full Spark job to serialize rows the driver
     * was holding anyway. `template` supplies names + exemplar values
     * for the schema (so an EMPTY rows iterator still writes a typed,
-    * readable file); each row is a value sequence in template order. */
+    * readable file); each row is a value sequence in template order.
+    *
+    * Never rewrites a file in place: the rows go to a fresh tmp file
+    * that is renamed over the old one. Index trees are cloned by hard
+    * links (the gate fixtures' clone helper), so a writer that opened
+    * an existing file for writing would change every linked copy;
+    * every writer into an index tree must keep this rule. */
   def writeRows(conf: Configuration, dir: String,
                 template: Seq[(String, Any)],
                 rows: IterableOnce[Seq[Any]]): Unit =

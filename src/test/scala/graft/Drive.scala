@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.store.{HDFStore, StoreMode}
 
 /** Manual end-to-end drive of the public library surface against the real
   * testdata parquet — run with `sbt "Test/runMain graft.Drive"`. */
 object Drive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GateSession(4, "ERROR")
     import org.apache.spark.sql.functions._
 
     val dir = java.nio.file.Files.createTempDirectory("drive-store").toString

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{DedupIndex, IndexIds, IndexMaintenance, Quantize, Similarity, TextIndex}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class IndexLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.spark.implicits._
+  import TestSpark.jobsDuring
 
   private val words = Seq("alpha", "bravo", "charlie", "delta", "echo",
     "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima", "mike",
@@ -143,36 +143,6 @@ class IndexLifecycleSpec extends AnyFunSuite {
       assert(f.probe(path) == full, s"${f.name}: re-append restores the probe")
       sidecarsPinned()
     }
-  }
-
-  /** Jobs started while `body` runs. Listener delivery is asynchronous,
-    * so the window is fenced by two marker jobs: counting starts once
-    * the first marker is seen and stops at the second. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"lifecycle-fence-${java.util.UUID.randomUUID()}"
-    val fences = new java.util.concurrent.atomic.AtomicInteger()
-    val counted = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          fences.incrementAndGet()
-        else if (fences.get() == 1) counted.incrementAndGet()
-    }
-    def fence(n: Int): Unit = {
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (fences.get() < n && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(fences.get() == n, "listener never saw the fence job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence(1)
-      val r = body
-      fence(2)
-      (r, counted.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("indexHealth runs no Spark job: tombstones counted from parquet footers") {

@@ -3972,6 +3972,23 @@ class OpsSpec extends AnyFunSuite {
     assert(empty.count() == 0L)
   }
 
+  test("sliceWindowsN: a wrong knownN hint is refused by the density check") {
+    val pos = Sample.shuffleRank(Seq(0L -> Seq("a", "b"), 1L -> Seq("c"))
+      .toDF("id", "ts"), "id", "w2", 4)
+    def slice(df: org.apache.spark.sql.DataFrame, n: Option[Long]) =
+      TokenStream.sliceWindowsN(
+        df, "shuffle_pos", "ts", 2, blocks = 4, dropPartial = false, knownN = n)
+    // a hint of 0 on a non-empty input, and of 2 on an empty one
+    for ((df, n) <- Seq(pos -> 0L, pos.filter(lit(false)) -> 2L)) {
+      val e = intercept[IllegalArgumentException](slice(df, Some(n)))
+      assert(e.getMessage.contains(s"not a dense [0, $n) permutation"), e.getMessage)
+    }
+    // a right hint slices as without one; an empty input stays empty
+    assert(slice(pos, Some(2L)).count() == 2L)
+    assert(slice(pos.filter(lit(false)), Some(0L)).count() == 0L)
+    assert(slice(pos.filter(lit(false)), None).count() == 0L)
+  }
+
   test("∀ random corpora: sliceWindows == the reference (seeded sweep, int tokens)") {
     val rng = new scala.util.Random(1601L)
     for (trial <- 0 until 12) {

@@ -5,7 +5,6 @@ import graft.ops.{DedupIndex, IndexMaintenance, Quantize, Similarity, TextIndex}
 import graft.store.{HDFStore, StoreMode}
 import graft.table.HDFTable
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,6 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ReadSchemaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.spark.implicits._
+  import TestSpark.jobsDuring
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
@@ -191,35 +191,6 @@ class ReadSchemaSpec extends AnyFunSuite {
       "(no 'positions' column); rebuild with buildTextIndex to enable phrase probes")
     // the positional tree still serves the same probe
     TextIndex.searchPhrase(spark, built, "alpha bravo", 5).collect()
-  }
-
-  /** Jobs started while `body` runs, fenced by two marker jobs (listener
-    * delivery is asynchronous). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"read-schema-fence-${java.util.UUID.randomUUID()}"
-    val fences = new java.util.concurrent.atomic.AtomicInteger()
-    val counted = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          fences.incrementAndGet()
-        else if (fences.get() == 1) counted.incrementAndGet()
-    }
-    def fence(n: Int): Unit = {
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (fences.get() < n && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(fences.get() == n, "listener never saw the fence job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence(1)
-      val r = body
-      fence(2)
-      (r, counted.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("job counts: positional reads 1, BM25 3, IVF probe 1") {

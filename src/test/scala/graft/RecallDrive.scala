@@ -418,11 +418,7 @@ object RecallDrive {
   }
 
   def main(args: Array[String]): Unit = {
-    val cores = sys.env.getOrElse("RECALL_CORES", "8")
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GateSession(sys.env.getOrElse("RECALL_CORES", "8").toInt, "ERROR")
     if (args.headOption.contains("full")) {
       run(spark, n = 1000000L, nQueries = 50, nTopics = 500, nlist = 1000,
         m = 16, ksub = 256, tau = 1.5, k = 10, r = 100,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.store.{HDFStore, StoreMode}
@@ -10,11 +9,7 @@ import graft.store.{HDFStore, StoreMode}
   * boundary ops ~metadata). Run: `sbt "Test/runMain graft.ScaleDrive"`. */
 object ScaleDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GateSession(8, "ERROR")
     val dir = java.nio.file.Files.createTempDirectory("scale-store").toString
     val st = HDFStore.open(spark, dir, StoreMode.Overwrite)
     val N = 10_000_000L

@@ -17,10 +17,16 @@ def main(sfdir, outdir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-    declared = [d for d in sorted(os.listdir(outdir))
-                if os.path.isdir(os.path.join(outdir, d))]
+    # every gate with output or oracle SQL counts: Verify writes no
+    # directory for a gate that throws, so a gate with oracle SQL but no
+    # output FAILS instead of dropping out of the denominator
+    written = {d for d in os.listdir(outdir)
+               if os.path.isdir(os.path.join(outdir, d))}
+    declared = sorted(written | set(oracle))
     ok = bad = weak = 0
     for name in declared:
+        if name not in written:
+            print(f"[FAIL] {name}: no output directory (gate crashed?)"); bad += 1; continue
         files = glob.glob(os.path.join(outdir, name, "*.parquet"))
         if not files:
             print(f"[FAIL] {name}: no parquet output"); bad += 1; continue
