@@ -74,12 +74,22 @@ final class NDArray private[ndarray] (
   }
 
   /** Hyperslab selection: for each dim `d`, take indices
-    * `offset + k*stride + b` for `k < count`, `b < block`. */
+    * `offset + k*stride + b` for `k < count`, `b < block`. The slab's
+    * cells lie between the linear indices of its first and last corner;
+    * that `_rowid` range is read on the driver when it is within
+    * [[HDFTable.slice]]'s bound (filtered and already in order, so no
+    * Spark job), else the whole array is scanned and sorted. */
   def hyperslab(offsets: Seq[Long], counts: Seq[Long],
-                strides_ : Seq[Long], blocks: Seq[Long]): DataFrame =
-    df.filter(slabConds(offsets, counts, strides_, blocks).reduce(_ && _))
-      .orderBy(RowIds.Col)
+                strides_ : Seq[Long], blocks: Seq[Long]): DataFrame = {
+    val cond = slabConds(offsets, counts, strides_, blocks).reduce(_ && _)
+    val st = strides
+    val first = (0 until rank).map(d => offsets(d) * st(d)).sum
+    val last = (0 until rank).map(d =>
+      (offsets(d) + (counts(d) - 1) * strides_(d) + blocks(d) - 1) * st(d)).sum
+    val local = if (last < table.nrows) table.driverSlice(first, last) else None
+    local.fold(df.filter(cond).orderBy(RowIds.Col))(_.filter(cond))
       .select((dimCols :+ "value").map(col): _*)
+  }
 
   /** `full_output` hyperslab read ≙ `read_hyperslab(..., full_output=true)`
     * (`datasets.nim:1556-1599`): the full-shape array with unselected

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.{Bridge, DriverParquet}
 import org.apache.spark.sql.types._
 
 /**
@@ -349,9 +350,22 @@ object ShardWriter {
       m("num_shards").asInstanceOf[Int], m("budget").asInstanceOf[Long])
   }
 
-  /** The committed per-file manifest of a shard tree. */
-  def loadManifest(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(manifestPath(path))
+  /** The committed per-file manifest of a shard tree, read on the driver
+    * at call time (Spark's parquet decoder, schema from one footer —
+    * [[graft.store.MetaIO.sparkSchemaOf]]): the same columns and rows as
+    * a Spark read of `_manifest`, with no job. */
+  def loadManifest(spark: SparkSession, path: String): DataFrame = {
+    val dir = manifestPath(path)
+    val schema = graft.store.MetaIO.sparkSchemaOf(spark.sparkContext.hadoopConfiguration, dir)
+      .map(Bridge.asNullable(_).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(s"shard tree at $path has no readable _manifest"))
+    val files = fsOf(spark, dir).listStatus(new Path(dir)).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName).toSeq
+    val read = DriverParquet.reader(spark, schema, Nil)
+    DriverParquet.frame(spark, schema, files.flatMap(read(_, _ => true)))
+  }
 
   /** The manifest rows driver-direct ([[graft.store.MetaIO.readRows]]) —
     * the collect-right-after-read sites ([[shardFilesInOrder]],

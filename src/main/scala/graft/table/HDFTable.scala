@@ -1,9 +1,11 @@
 package graft.table
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge.asNullable
+import org.apache.spark.sql.graftx.DriverParquet
+import org.apache.spark.sql.sources.{And, Filter, GreaterThanOrEqual, In, LessThanOrEqual, Or}
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.store.{HDFStore, SegmentMeta, TableMeta}
@@ -20,10 +22,10 @@ import graft.store.{HDFStore, SegmentMeta, TableMeta}
  * prefix sum of earlier segments' row counts (all O(#segments) driver-side
  * metadata). Consequences, by reference operation:
  *
- *  - point/slice read (`nimtables.nim:149-171`): only segments overlapping
+ *  - point/slice read (`nimtables.nim:149-171`): only files overlapping
  *    the range are read, with a local `_rowid BETWEEN` filter pushed to
  *    parquet row-group stats — the analog of `H5TBread_records` walking the
- *    chunk B-tree.
+ *    chunk B-tree. Bounded reads run on the driver with no Spark job.
  *  - append (`nimtables.nim:173-175`): a brand-new segment; zero rewrite.
  *  - delete/insert (`nimtables.nim:202-233`): only segments intersecting
  *    the position are rewritten; every later segment shifts by METADATA
@@ -103,24 +105,26 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     * its bytes and its stored ids. One directory listing, NO per-file
     * footer reads; segments predating `fileRows` (e.g. cross-store copies
     * of old data) fall back to footers once — their rewrite re-records.
-    * Falls back to the whole run if counts disagree with reality (safety). */
-  private def fileRuns(seg: SegmentMeta): Vector[SegmentMeta] = {
+    * Falls back to the whole run if counts disagree with reality (safety).
+    * Each run comes with the parquet files it reads. */
+  private def fileRuns(seg: SegmentMeta): Vector[(SegmentMeta, Seq[FileStatus])] = {
     val p = new Path(store.rootPath, seg.dir)
-    if (store.fs.getFileStatus(p).isFile) return Vector(seg)
+    val st = store.fs.getFileStatus(p)
+    if (st.isFile) return Vector(seg -> Seq(st))
     val files = store.fs.listStatus(p)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    if (files.length <= 1) return Vector(seg)
+      .sortBy(_.getPath.getName).toVector
+    if (files.length <= 1) return Vector(seg -> files)
     val counts: Vector[Long] =
       if (seg.fileRows.size == files.length) seg.fileRows
-      else files.toVector.map(f => parquetRowCount(f.getPath))
+      else files.map(f => parquetRowCount(f.getPath))
     var base = seg.idBase
-    val runs = files.toVector.zip(counts).map { case (f, rows) =>
+    val runs = files.zip(counts).map { case (f, rows) =>
       val sm = SegmentMeta(seg.dir + "/" + f.getPath.getName, rows, base)
       base += rows
-      sm
+      sm -> Seq(f)
     }
-    if (base - seg.idBase == seg.rows) runs.filter(_.rows > 0) else Vector(seg)
+    if (base - seg.idBase == seg.rows) runs.filter(_._1.rows > 0) else Vector(seg -> files)
   }
 
   /** Segment list with every run intersecting `[a, b]` refined to file
@@ -129,7 +133,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     val m = meta
     m.segments.zip(m.offsets).flatMap { case (seg, off) =>
       val hi = off + seg.rows - 1
-      if (hi < a || off > b) Vector(seg) else fileRuns(seg)
+      if (hi < a || off > b) Vector(seg) else fileRuns(seg).map(_._1)
     }.toVector
   }
 
@@ -199,9 +203,89 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
 
   /** Inclusive positional slice `[a, b]` — ≙ `table[a..b]`
     * (`nimtables.nim:159-171`). Segment pruning happens HERE (driver-side
-    * metadata), then the residual local `BETWEEN` is pushed to parquet. */
+    * metadata); the rows are then read on the driver ([[driverRead]]),
+    * or, above its bound, by a lazy Spark scan with the residual local
+    * `BETWEEN` pushed to parquet.
+    *
+    * Snapshot: the segment list is resolved at call time either way, and
+    * a driver read also reads the rows at call time, so its frame keeps
+    * the rows of the call even after a later mutation and `vacuum(0)`,
+    * and a missing file fails here, not at `collect`. A Spark-path frame
+    * reads its files when it is collected. */
   def slice(a: Long, b: Long): DataFrame = {
     checkBounds(a, b)
+    driverSlice(a, b).getOrElse(scanSlice(a, b))
+  }
+
+  /** [[slice]] in `_rowid` order: a driver read is built in that order,
+    * so only the Spark path pays a sort. */
+  private[graft] def sortedSlice(a: Long, b: Long): DataFrame = {
+    checkBounds(a, b)
+    driverSlice(a, b).getOrElse(scanSlice(a, b).sort(Col))
+  }
+
+  /** [[slice]] read on the driver, in `_rowid` order; `None` above the
+    * bound. `[a, b]` must lie inside the table. */
+  private[graft] def driverSlice(a: Long, b: Long): Option[DataFrame] =
+    driverRead(a, b, None)(_ => true)
+
+  /** The rows whose global `_rowid` lies in `[a, b]`, is one of `ids`
+    * when given (sorted, distinct) and passes `keep`, read on the driver
+    * by Spark's own parquet decoder ([[DriverParquet]]) into a
+    * `LocalRelation` frame in `_rowid` order — no Spark job, at read or
+    * at collect. Only the files whose id range meets the request are
+    * opened, and their stored-id ranges (or id lists) are pushed to
+    * row-group statistics and page indexes; the exact predicate is
+    * re-applied per row. `None` — take the lazy Spark path — when more
+    * than [[HDFTable.DriverReadRows]] rows are requested or the touched
+    * files hold more than [[HDFTable.DriverReadBytes]] bytes. */
+  private def driverRead(a: Long, b: Long, ids: Option[Array[Long]])
+                        (keep: Long => Boolean): Option[DataFrame] = {
+    if (ids.fold(b - a + 1)(_.length.toLong) > HDFTable.DriverReadRows) return None
+    // does global [lo, hi] hold a requested row
+    def wanted(lo: Long, hi: Long): Boolean = lo <= hi && ids.forall { s =>
+      val i = java.util.Arrays.binarySearch(s, lo)
+      val from = if (i >= 0) i else -i - 1
+      from < s.length && s(from) <= hi
+    }
+    val m = meta
+    // (files, stored-id bounds, stored → global shift, stored ids) per touched run
+    val touched = m.segments.zip(m.offsets).flatMap { case (seg, off) =>
+      if (!wanted(math.max(a, off), math.min(b, off + seg.rows - 1))) Nil
+      else {
+        val shift = off - seg.idBase
+        fileRuns(seg).flatMap { case (run, files) =>
+          val lo = math.max(a, run.idBase + shift)
+          val hi = math.min(b, run.idBase + shift + run.rows - 1)
+          if (!wanted(lo, hi)) None
+          else Some((files, lo - shift, hi - shift, shift,
+            ids.map(_.filter(i => i >= lo && i <= hi).map(_ - shift))))
+        }
+      }
+    }
+    if (touched.flatMap(_._1).map(_.getLen).sum > HDFTable.DriverReadBytes) return None
+    val schema = asNullable(readSchema).asInstanceOf[StructType]
+    val idx = schema.fieldIndex(Col)
+    // one reader for all runs: it pushes the union of their stored-id
+    // filters, and each run re-applies its own exact predicate
+    val pushed = touched.map { case (_, lo, hi, _, inRun) =>
+      inRun.fold[Filter](And(GreaterThanOrEqual(Col, lo), LessThanOrEqual(Col, hi)))(
+        stored => In(Col, stored.map(i => i: Any)))
+    }.reduceOption(Or)
+    val read = DriverParquet.reader(spark, schema, pushed.toSeq)
+    val rows = touched.flatMap { case (files, lo, hi, shift, inRun) =>
+      files.flatMap(read(_, { r =>
+        val s = r.getLong(idx)
+        s >= lo && s <= hi &&
+          inRun.forall(st => java.util.Arrays.binarySearch(st, s) >= 0) && keep(s + shift)
+      })).map { r => r.setLong(idx, r.getLong(idx) + shift); r }
+    }.sortBy(_.getLong(idx))
+    Some(DriverParquet.frame(spark, schema, rows))
+  }
+
+  /** [[slice]] as a lazy Spark scan: one parquet relation per touched
+    * run, the local `_rowid` range pushed to parquet. */
+  private[graft] def scanSlice(a: Long, b: Long): DataFrame = {
     val m = meta
     val parts = m.segments.zip(m.offsets).flatMap { case (seg, off) =>
       val hi = off + seg.rows - 1
@@ -228,15 +312,17 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
   /** Strided positional selection — the 1-D hyperslab
     * (offset/count/stride/block) of `read_hyperslab`
     * (`nimhdf5/datasets.nim:1601-1645`) on the record dimension, expressed
-    * as a pure pushdown-friendly predicate (SURVEY §2.2 P4). */
+    * as a pure pushdown-friendly predicate (SURVEY §2.2 P4). A driver
+    * read ([[slice]]) applies the stride on the driver. */
   def hyperslab(offset: Long, count: Long, stride: Long, block: Long): DataFrame = {
     require(offset >= 0 && count > 0 && stride >= 1 && block >= 1 && block <= stride,
       s"bad hyperslab off=$offset count=$count stride=$stride block=$block")
     val last = offset + (count - 1) * stride + block - 1
     checkBounds(offset, last)
-    val rel = col(Col) - lit(offset)
-    slice(offset, last)
-      .filter(rel % lit(stride) < lit(block))
+    driverRead(offset, last, None)(i => (i - offset) % stride < block).getOrElse {
+      val rel = col(Col) - lit(offset)
+      scanSlice(offset, last).filter(rel % lit(stride) < lit(block))
+    }
   }
 
   /** Strided positional WRITE — the record-dimension counterpart of
@@ -274,14 +360,19 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
   }
 
   /** Coordinate-list selection ≙ `select_elements` reads
-    * (`nimhdf5/datasets.nim:806-860`). Small lists inline into an `IN`
-    * predicate (pushed to parquet); large ones become a broadcast
-    * semi-join so the driver never ships a huge literal. */
+    * (`nimhdf5/datasets.nim:806-860`). Small lists are read on the driver
+    * from the files that hold them ([[slice]]'s read and snapshot rule),
+    * else inline into an `IN` predicate (pushed to parquet); large ones
+    * become a broadcast semi-join so the driver never ships a huge
+    * literal. */
   def selectRows(ids: Seq[Long]): DataFrame = {
     ids.foreach(i => checkBounds(i, i))
     val distinctIds = ids.distinct // set semantics on BOTH paths
-    if (distinctIds.size <= 1000) df.filter(col(Col).isin(distinctIds: _*))
-    else {
+    if (distinctIds.size <= 1000) {
+      val sorted = distinctIds.sorted.toArray
+      sorted.headOption.flatMap(lo => driverRead(lo, sorted.last, Some(sorted))(_ => true))
+        .getOrElse(df.filter(col(Col).isin(distinctIds: _*)))
+    } else {
       val idsDf = broadcast(
         spark.createDataset(distinctIds)(org.apache.spark.sql.Encoders.scalaLong).toDF(Col))
       df.join(idsDf, Col)
@@ -603,6 +694,13 @@ object HDFTable {
     * `parquetRowCount`) — test instrumentation for the "mutations are
     * footer-free" invariant. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Most rows a positional read answers on the driver — the selection
+    * size below which `writeHyperslab` already runs as one task. */
+  private[graft] val DriverReadRows = 65536L
+
+  /** Most bytes of parquet files a driver-side positional read opens. */
+  private[graft] val DriverReadBytes = 64L << 20
 }
 
 /**
@@ -622,16 +720,17 @@ final class TypedTable[T <: Product](val table: HDFTable)(implicit enc: Encoder[
     * sort; use [[toSeq]] for ordered driver materialization. */
   def ds: Dataset[T] = table.dataDf.selectExpr(fieldCols: _*).as[T](enc)
 
+  /** Rows of `d`, already in `_rowid` order, as `T`s. */
   private def decode(d: DataFrame): Seq[T] =
-    d.sort(Col).selectExpr(fieldCols: _*).as[T](enc).collect().toSeq
+    d.selectExpr(fieldCols: _*).as[T](enc).collect().toSeq
 
   /** Full scan ≙ `toSeq` (`nimtables.nim:140-147`). */
-  def toSeq: Seq[T] = decode(table.df)
+  def toSeq: Seq[T] = decode(table.df.sort(Col))
 
   /** `table[i]` */
-  def apply(i: Long): T = decode(table.point(i)).head
+  def apply(i: Long): T = apply(i, i).head
   /** `table[a..b]` (inclusive) */
-  def apply(a: Long, b: Long): Seq[T] = decode(table.slice(a, b))
+  def apply(a: Long, b: Long): Seq[T] = decode(table.sortedSlice(a, b))
   def apply(r: Range): Seq[T] = { require(r.step == 1 && r.isInclusive); apply(r.start.toLong, r.end.toLong) }
   /** `table[^i]` — i-th from the end, 1-based like Nim's BackwardsIndex. */
   def fromEnd(i: Long): T = apply(nrows - i)

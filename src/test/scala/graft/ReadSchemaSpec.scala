@@ -1,11 +1,12 @@
 package graft
 
 import graft.ndarray.NDArray
-import graft.ops.{DedupIndex, IndexMaintenance, Quantize, Similarity, TextIndex}
+import graft.ops.{DedupIndex, IndexMaintenance, Quantize, ShardWriter, Similarity, TextIndex}
 import graft.store.{HDFStore, StoreMode}
 import graft.table.HDFTable
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Reads plan from metadata the store already holds: table segments are
   * read with the catalog schema, index trees with the schema of one of
   * their own footers. Each must be exactly the schema Spark would infer,
-  * and a positional read or index probe must run only its data jobs. */
+  * and a positional read or index probe must run only its data jobs —
+  * none for a bounded positional read, which is answered on the driver
+  * with the same rows the Spark scan returns. */
 class ReadSchemaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.spark.implicits._
@@ -100,6 +103,113 @@ class ReadSchemaSpec extends AnyFunSuite {
     nd.resize(Seq(6L, 5L))
     checkSegments(st, nd.table, "ndarray resize")
     st.close()
+  }
+
+  /** Rows of every type a read must decode the same way on both paths:
+    * VLEN arrays (null arrays and null elements), decimals,
+    * `timestamp_ntz`, dates, null scalars and strings. */
+  private def typedRows(from: Int, n: Int): DataFrame =
+    (from until from + n).map { i =>
+      (i.toLong, if (i % 7 == 3) None else Some(i * 0.25),
+        if (i % 5 == 2) null else s"s$i",
+        if (i % 11 == 4) null else Seq(Some(i), if (i % 3 == 0) None else Some(-i)),
+        BigDecimal(i) / 8,
+        java.time.LocalDate.of(2020, 1, 1).plusDays(i.toLong),
+        java.time.LocalDateTime.of(2021, 6, 1, 0, 0).plusSeconds(i * 3607L))
+    }.toDF("k", "v", "s", "tags", "amt", "day", "ts")
+      .withColumn("amt", col("amt").cast("decimal(12,3)"))
+
+  /** Point, slice, hyperslab and `selectRows` reads of `t` — at every
+    * segment seam and 10-row file seam, and over the whole table — are
+    * driver reads equal row for row, in `_rowid` order and with the same
+    * schema, to the rows of the Spark scan `t.df`. */
+  private def checkDriverReads(t: HDFTable, step: String): Unit = {
+    val n = t.nrows
+    val scan = t.df
+    val all = scan.collect().sortBy(_.getAs[Long]("_rowid")).toSeq
+    assert(all.map(_.getAs[Long]("_rowid")) == (0L until n), step)
+    def same(local: DataFrame, want: Long => Boolean, what: String): Unit = {
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"$step, $what: not a driver read")
+      assert(local.schema == scan.schema, s"$step, $what: ${local.schema} vs ${scan.schema}")
+      val got = local.collect().toSeq
+      val expect = all.filter(r => want(r.getAs[Long]("_rowid")))
+      assert(got == expect, s"$step, $what:\n$got\nvs\n$expect")
+    }
+    val seams = (t.meta.offsets.filter(_ > 0) ++ (10L until n by 10L)).distinct.sorted
+    (Seq(0L, n - 1) ++ seams.flatMap(o => Seq(o - 1, o))).distinct.foreach { i =>
+      same(t.point(i), _ == i, s"point $i")
+    }
+    seams.foreach { o =>
+      val (a, b) = (math.max(0L, o - 2), math.min(n - 1, o + 2))
+      same(t.slice(a, b), i => i >= a && i <= b, s"slice [$a, $b]")
+    }
+    same(t.slice(0, n - 1), _ => true, "whole-table slice")
+    assert(t.scanSlice(0, n - 1).collect().sortBy(_.getAs[Long]("_rowid")).toSeq == all,
+      s"$step: the Spark slice path")
+    val count = (n - 2) / 3
+    same(t.hyperslab(1, count, 3, 2),
+      i => i >= 1 && i <= 3 * count - 1 && (i - 1) % 3 < 2, "hyperslab")
+    val ids = ((0L until n by 7L) ++ seams :+ (n - 1)).distinct
+    same(t.selectRows(ids.reverse), ids.toSet, "selectRows")
+  }
+
+  test("driver reads equal the Spark scan row for row after every write path") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("rs-driver"), StoreMode.Overwrite)
+    st.put("t", typedRows(0, 40), chunkSize = Some(10L))
+    val t = st.table("t")
+    checkDriverReads(t, "put")
+    t.append(typedRows(40, 5).select(col("ts"), col("tags"), col("s"),
+      col("k").cast("int").as("k"), col("day"), col("v"), col("amt")))
+    checkDriverReads(t, "reordered Int-keyed append")
+    t.update(3, typedRows(100, 4))
+    checkDriverReads(t, "update")
+    t.insert(12, typedRows(200, 3))
+    checkDriverReads(t, "insert")
+    t.delete(5, 8)
+    checkDriverReads(t, "delete")
+    t.writeHyperslab(0, 3, 4, 1, typedRows(300, 3).withColumn("pos", col("k") - 300))
+    checkDriverReads(t, "writeHyperslab")
+    t.compactSmallRuns(1000L)
+    checkDriverReads(t, "compactSmallRuns")
+    (0 until 33).foreach(i => t.append(typedRows(1000 + i, 1)))
+    assert(t.meta.segments.size > 32)
+    checkDriverReads(t, "past 32 segments (multi-path read)")
+    st.close()
+  }
+
+  test("a driver-read slice keeps the rows of its call through update and vacuum(0)") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("rs-snapshot"), StoreMode.Overwrite)
+    st.put("t", rows(0, 30), chunkSize = Some(10L))
+    val t = st.table("t")
+    val before = t.slice(5, 14)
+    val lazyScan = t.scanSlice(5, 14)
+    t.update(8, rows(500, 4))
+    st.vacuum(0L)
+    // the lazy Spark frame reads at collect, and its files are gone
+    intercept[Exception](lazyScan.collect())
+    assert(before.collect().map(_.getAs[String]("s")).toSeq == (5 until 15).map(i => s"s$i"))
+    assert(t.slice(5, 14).collect().map(_.getAs[String]("s")).toSeq ==
+      ((5 until 8) ++ (500 until 504) ++ (12 until 15)).map(i => s"s$i"))
+    st.close()
+  }
+
+  test("loadManifest: the Spark read's columns and rows, with no job") {
+    val path = s"${TestSpark.tmpDir("rs-shards")}/tree"
+    val df = (0L until 200L).map(i => (i, s"s${i % 3}", 1000L - i, 1L + i % 7))
+      .toDF("doc_id", "source", "score", "n_tok")
+    ShardWriter.writeShardRecipe(df, "source", "doc_id", "score", "n_tok",
+      budget = 300L, numShards = 3, path = path, salt = "m", buckets = 4,
+      maxRowsPerFile = 16L)
+    val (man, jobs) = jobsDuring {
+      val m = ShardWriter.loadManifest(spark, path)
+      (m.schema, m.collect().toSeq)
+    }
+    assert(jobs == 0, s"loadManifest fired $jobs jobs")
+    val viaSpark = spark.read.parquet(s"$path/_manifest")
+    assert(man._1 == viaSpark.schema)
+    assert(man._2 == viaSpark.collect().toSeq)
+    assert(ShardWriter.verifyShards(spark, path).head().getAs[Boolean]("ok"))
   }
 
   private val words = Seq("alpha", "bravo", "charlie", "delta", "echo",
@@ -193,7 +303,7 @@ class ReadSchemaSpec extends AnyFunSuite {
     TextIndex.searchPhrase(spark, built, "alpha bravo", 5).collect()
   }
 
-  test("job counts: positional reads 1, BM25 3, IVF probe 1") {
+  test("job counts: positional reads 0 within the driver-read bound, 1 above it, BM25 3, IVF probe 1") {
     val st = HDFStore.open(spark, TestSpark.tmpDir("rs-jobs"), StoreMode.Overwrite)
     st.put("t", rows(0, 60), chunkSize = Some(20L))
     val t = st.table("t")
@@ -201,15 +311,30 @@ class ReadSchemaSpec extends AnyFunSuite {
     assert(t.meta.segments.size >= 2)
     val (pt, pointJobs) = jobsDuring(t.point(42).collect())
     assert(pt.map(_.getAs[Long]("k")).toSeq == Seq(42L))
-    assert(pointJobs == 1, s"point fired $pointJobs jobs")
+    assert(pointJobs == 0, s"point fired $pointJobs jobs")
     val (sl, sliceJobs) = jobsDuring(t.slice(55, 64).collect())
     assert(sl.map(_.getAs[Long]("k")).sorted.toSeq == (55L to 64L))
-    assert(sliceJobs == 1, s"slice fired $sliceJobs jobs")
+    assert(sliceJobs == 0, s"slice fired $sliceJobs jobs")
+    val (hs, slabJobs) = jobsDuring(t.hyperslab(50, 5, 4, 2).collect())
+    assert(hs.map(_.getAs[Long]("k")).toSeq ==
+      (0L until 5L).flatMap(i => Seq(50 + 4 * i, 51 + 4 * i)))
+    assert(slabJobs == 0, s"hyperslab fired $slabJobs jobs")
     val ids = (0L until 100L by 5L).toSeq
     assert(ids.size == 20)
     val (sel, selJobs) = jobsDuring(t.selectRows(ids).collect())
     assert(sel.map(_.getAs[Long]("k")).sorted.toSeq == ids)
-    assert(selJobs == 1, s"selectRows fired $selJobs jobs")
+    assert(selJobs == 0, s"selectRows fired $selJobs jobs")
+
+    // one row past the row bound takes the Spark path; at the bound it
+    // is still a driver read
+    st.put("big", spark.range(0L, HDFTable.DriverReadRows + 10L).toDF("k"))
+    val big = st.table("big")
+    val (atBound, atJobs) = jobsDuring(big.slice(0L, HDFTable.DriverReadRows - 1L).collect())
+    assert(atBound.length == HDFTable.DriverReadRows && atJobs == 0,
+      s"slice at the bound fired $atJobs jobs")
+    val (above, aboveJobs) = jobsDuring(big.slice(0L, HDFTable.DriverReadRows).collect())
+    assert(above.length == HDFTable.DriverReadRows + 1L)
+    assert(aboveJobs == 1, s"slice above the bound fired $aboveJobs jobs")
     st.close()
 
     val base = TestSpark.tmpDir("rs-jobs-idx")
