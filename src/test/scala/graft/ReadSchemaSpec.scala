@@ -303,7 +303,7 @@ class ReadSchemaSpec extends AnyFunSuite {
     TextIndex.searchPhrase(spark, built, "alpha bravo", 5).collect()
   }
 
-  test("job counts: positional reads 0 within the driver-read bound, 1 above it, BM25 3, IVF probe 1") {
+  test("job counts: positional reads within the driver-read bound fire 0 jobs") {
     val st = HDFStore.open(spark, TestSpark.tmpDir("rs-jobs"), StoreMode.Overwrite)
     st.put("t", rows(0, 60), chunkSize = Some(20L))
     val t = st.table("t")
@@ -325,16 +325,28 @@ class ReadSchemaSpec extends AnyFunSuite {
     assert(sel.map(_.getAs[Long]("k")).sorted.toSeq == ids)
     assert(selJobs == 0, s"selectRows fired $selJobs jobs")
 
-    // one row past the row bound takes the Spark path; at the bound it
-    // is still a driver read
+    // at the row bound a slice is still a driver read
     st.put("big", spark.range(0L, HDFTable.DriverReadRows + 10L).toDF("k"))
     val big = st.table("big")
     val (atBound, atJobs) = jobsDuring(big.slice(0L, HDFTable.DriverReadRows - 1L).collect())
     assert(atBound.length == HDFTable.DriverReadRows && atJobs == 0,
       s"slice at the bound fired $atJobs jobs")
-    val (above, aboveJobs) = jobsDuring(big.slice(0L, HDFTable.DriverReadRows).collect())
+    st.close()
+  }
+
+  test("job counts: positional reads 1, BM25 3, IVF probe 1") {
+    // positional reads past the driver-read row bound take the Spark path
+    // and cost one job
+    val st = HDFStore.open(spark, TestSpark.tmpDir("rs-jobs-big"), StoreMode.Overwrite)
+    st.put("big", spark.range(0L, HDFTable.DriverReadRows + 10L).toDF("k"))
+    val big = st.table("big")
+    val (above, sliceJobs) = jobsDuring(big.slice(0L, HDFTable.DriverReadRows).collect())
     assert(above.length == HDFTable.DriverReadRows + 1L)
-    assert(aboveJobs == 1, s"slice above the bound fired $aboveJobs jobs")
+    assert(sliceJobs == 1, s"slice above the bound fired $sliceJobs jobs")
+    val (hs, slabJobs) = jobsDuring(big.hyperslab(0L, 2L, HDFTable.DriverReadRows, 2L).collect())
+    assert(hs.map(_.getAs[Long]("k")).sorted.toSeq ==
+      Seq(0L, 1L, HDFTable.DriverReadRows, HDFTable.DriverReadRows + 1L))
+    assert(slabJobs == 1, s"hyperslab above the bound fired $slabJobs jobs")
     st.close()
 
     val base = TestSpark.tmpDir("rs-jobs-idx")
