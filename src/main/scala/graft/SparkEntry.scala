@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.ndarray.NDArray
 import graft.store.{HDFStore, StoreMode}
-import graft.table.HDFTable
+import graft.table.{HDFTable, RowIds}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline extensions), each with a DuckDB
@@ -31,11 +31,11 @@ object SparkEntry {
     s"WITH base AS (SELECT *, row_number() OVER (ORDER BY $LI_ORDER) - 1 AS _rowid FROM lineitem)"
 
   /** Full-row output projection: timestamps become strings so Spark/DuckDB
-    * hash identically. */
+    * hash identically. In `_rowid` order; a driver-read frame is ordered
+    * on the driver ([[RowIds.sorted]]). */
   private def liOut(df: DataFrame): DataFrame =
-    df.select(col("_rowid") +: LI.init.map(col) :+
-      date_format(col("l_shipdate"), "yyyy-MM-dd").as("l_shipdate"): _*)
-      .orderBy("_rowid")
+    RowIds.sorted(df.select(col("_rowid") +: LI.init.map(col) :+
+      date_format(col("l_shipdate"), "yyyy-MM-dd").as("l_shipdate"): _*))
   private val LI_OUT_SQL =
     "_rowid, " + LI.init.mkString(", ") + ", strftime(l_shipdate, '%Y-%m-%d') AS l_shipdate"
 
@@ -271,15 +271,14 @@ object SparkEntry {
       val t = mutCopy(s, d, "update") { t =>
         t.update(10, t.slice(0, 4))
       }
-      t.slice(5, 19).select("_rowid", "l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
-        .orderBy("_rowid")
+      RowIds.sorted(
+        t.slice(5, 19).select("_rowid", "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"))
     }),
 
     // M3: delete rows [10..19]; dense renumber
     "m3_delete" -> ((s, d) => {
       val t = mutCopy(s, d, "delete") { t => t.delete(10, 19) }
-      t.slice(5, 24).select("_rowid", "l_orderkey", "l_partkey", "l_quantity")
-        .orderBy("_rowid")
+      RowIds.sorted(t.slice(5, 24).select("_rowid", "l_orderkey", "l_partkey", "l_quantity"))
     }),
 
     // M4: insert copies of rows [0..4] at position 15

@@ -5,6 +5,7 @@ import java.net.URI
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftx.DriverParquet
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.schema.SchemaUtil
@@ -192,7 +193,10 @@ final class HDFStore private (
   /** Write one parquet segment (df must already carry a dense LOCAL
     * `_rowid`, ordered within partitions) and return its metadata.
     * chunkSize → `maxRecordsPerFile`: the row-group/file analog of the
-    * HDF5 chunk (`nimtables.nim:60`). */
+    * HDF5 chunk (`nimtables.nim:60`). A local frame (rows already on the
+    * driver, within [[HDFTable.DriverReadRows]]) is written on the driver
+    * by Spark's own parquet writer ([[DriverParquet.write]]), with no
+    * Spark job; any other frame by a Spark write. */
   private[graft] def writeSegment(
       name: String, df: DataFrame,
       chunkSize: Option[Long], codec: Option[String]): SegmentMeta = {
@@ -200,22 +204,28 @@ final class HDFStore private (
     val segRel = "tables/" + encode(name) +
       f"/seg-${System.currentTimeMillis()}%013d-${segCounter.getAndIncrement()}%04d"
     val segPath = new Path(rootPath, segRel)
-    var w = df.write.mode("overwrite")
-    chunkSize.orElse(defaultChunkSize).foreach(n => w = w.option("maxRecordsPerFile", n))
-    codec.orElse(defaultCodec).foreach(c => w = w.option("compression", c))
-    w.parquet(segPath.toString)
-    // Record per-file row counts NOW (footers of the files just written,
-    // read in parallel) so no later mutation ever re-reads a footer: the
-    // manifest carries the counts, refinement needs one dir listing only.
-    val files = fs.listStatus(segPath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fileRows = java.util.Arrays.stream(files).parallel().mapToLong { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.toArray.toVector
+    val chunk = chunkSize.orElse(defaultChunkSize)
+    val cod = codec.orElse(defaultCodec)
+    // Per-file row counts go into the manifest NOW, so no later mutation
+    // ever re-reads a footer: refinement needs one dir listing only.
+    val fileRows = DriverParquet.localRows(df, HDFTable.DriverReadRows) match {
+      case Some(rows) => DriverParquet.write(spark, segPath, df.schema, rows, chunk, cod)
+      case None =>
+        var w = df.write.mode("overwrite")
+        chunk.foreach(n => w = w.option("maxRecordsPerFile", n))
+        cod.foreach(c => w = w.option("compression", c))
+        w.parquet(segPath.toString)
+        // counts from the footers of the files just written, read in parallel
+        val files = fs.listStatus(segPath)
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .sortBy(_.getPath.getName)
+        val conf = spark.sparkContext.hadoopConfiguration
+        java.util.Arrays.stream(files).parallel().mapToLong { f =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getRecordCount finally r.close()
+        }.toArray.toVector
+    }
     SegmentMeta(segRel, fileRows.sum, 0L,
       if (fileRows.size > 1) fileRows else Vector.empty)
   }
@@ -295,7 +305,7 @@ final class HDFStore private (
     // an incoming _rowid column defines the order EXPLICITLY (a multi-file
     // scan's partition order is size-packed, not positional)
     val withIds =
-      if (df.columns.contains(RowIds.Col)) RowIds.attach(df.sort(RowIds.Col).drop(RowIds.Col))
+      if (df.columns.contains(RowIds.Col)) RowIds.attach(RowIds.sorted(df).drop(RowIds.Col))
       else RowIds.attach(df)
     val seg = writeSegment(n, withIds, chunkSize, codec)
     ensureParentGroups(n)

@@ -396,10 +396,14 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     * NOT file order (Spark packs splits by size), so relying on read
     * order would scramble positions. Without `_rowid`, the DataFrame's
     * own deterministic partition order is the contract (createDataset /
-    * freshly sorted inputs). */
+    * freshly sorted inputs). A local frame gets its ids, and its sort,
+    * on the driver ([[RowIds]]), and stays a `LocalRelation` frame. */
   private def withLocalIds(data: DataFrame): DataFrame =
-    if (data.columns.contains(Col)) RowIds.attach(conform(data.sort(Col).drop(Col)))
+    if (data.columns.contains(Col)) RowIds.attach(conform(RowIds.sorted(data).drop(Col)))
     else RowIds.attach(conform(data))
+
+  /** The rows of a [[withLocalIds]] frame when they are on the driver. */
+  private def localRows(d: DataFrame) = DriverParquet.localRows(d, HDFTable.DriverReadRows)
 
   private def swapSegments(newSegs: Vector[SegmentMeta]): Unit = {
     val b = baseName
@@ -458,12 +462,16 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
   /** Append + arbitrary catalog-entry update in ONE atomic manifest
     * commit — e.g. an N-D shape bump rides the same commit as its data, so
     * a crash can't leave appended rows visible beyond the recorded shape.
-    * `expectRows` validates the block's size BEFORE the commit (a failed
-    * check leaves only an unreferenced segment dir for vacuum). */
+    * `expectRows` validates the block's size BEFORE the commit: for a
+    * local frame before any file is written, otherwise after the write
+    * (a failed check leaves only an unreferenced segment dir for vacuum). */
   private[graft] def appendWithMeta(data: DataFrame, expectRows: Option[Long],
                                     metaFn: TableMeta => TableMeta): Unit = {
     store.checkWritable()
-    val seg = store.writeSegment(baseName, withLocalIds(data), meta.chunkSize, meta.codec)
+    val ided = withLocalIds(data)
+    for (rows <- localRows(ided); n <- expectRows)
+      require(rows.size == n, s"append block has ${rows.size} rows, expected $n")
+    val seg = store.writeSegment(baseName, ided, meta.chunkSize, meta.codec)
     expectRows.foreach(n => require(seg.rows == n,
       s"append block has ${seg.rows} rows, expected $n"))
     val b = baseName
@@ -475,11 +483,13 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
 
   /** Positional overwrite of `k = data.count` rows starting at `at` —
     * ≙ `table[i] = rec` / `table[a..b] = recs` (`nimtables.nim:177-200`).
-    * Only segments intersecting `[at, at+k)` are rewritten. */
+    * Only segments intersecting `[at, at+k)` are rewritten. Local rows
+    * give `k` on the driver; any other frame is cached and counted. */
   def update(at: Long, data: DataFrame): Unit = {
     store.checkWritable()
-    val repl = withLocalIds(data).withColumn(Col, col(Col) + lit(at)).cache()
-    val k = repl.count()
+    val ided = withLocalIds(data)
+    val repl = ided.withColumn(Col, col(Col) + lit(at))
+    val k = localRows(ided).fold(repl.cache().count())(_.size.toLong)
     if (k == 0) { repl.unpersist(); return }
     val b = at + k - 1
     checkBounds(at, b)
@@ -695,8 +705,9 @@ object HDFTable {
     * footer-free" invariant. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Most rows a positional read answers on the driver — the selection
-    * size below which `writeHyperslab` already runs as one task. */
+  /** Most rows a positional read answers on the driver, and most rows of
+    * a local frame a write takes ids for and writes on the driver — the
+    * selection size below which `writeHyperslab` already runs as one task. */
   private[graft] val DriverReadRows = 65536L
 
   /** Most bytes of parquet files a driver-side positional read opens. */

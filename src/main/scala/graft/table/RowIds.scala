@@ -1,6 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftx.{Bridge, DriverParquet}
 
 /**
  * Dense, deterministic 0-based row-id assignment — the load-bearing design
@@ -19,13 +20,31 @@ import org.apache.spark.sql.DataFrame
  * one task and is exactly what this module exists to avoid. Data is then
  * written ordered by `_rowid`, so parquet row-group min/max stats prune
  * positional predicates (the chunk-B-tree analog of `H5TBread_records`).
+ * Rows already on the driver (a `LocalRelation` within
+ * [[HDFTable.DriverReadRows]]) get their ids on the driver, with no job.
  */
 object RowIds {
   val Col = "_rowid"
 
   /** Attach `_rowid` following the DataFrame's existing deterministic
     * partition order (e.g. a `createDataset(seq)` keeps seq order; a
-    * parquet read keeps sorted-file order). */
+    * parquet read keeps sorted-file order). A local frame gets its ids
+    * on the driver and comes back as a `LocalRelation` frame. */
   def attach(df: DataFrame, startAt: Long = 0L): DataFrame =
-    org.apache.spark.sql.graftx.Bridge.zipWithRowIds(df, Col, startAt)
+    DriverParquet.localRows(df, HDFTable.DriverReadRows) match {
+      case Some(rows) => Bridge.localRowIds(df.sparkSession, df.schema, rows, Col, startAt)
+      case None => Bridge.zipWithRowIds(df, Col, startAt)
+    }
+
+  /** `df` ordered by `_rowid`: a local frame's rows are sorted on the
+    * driver into a `LocalRelation` frame (a `Sort` over one would plan an
+    * exchange and run jobs); any other plan gets `.sort(_rowid)`. */
+  def sorted(df: DataFrame): DataFrame =
+    DriverParquet.localRows(df, HDFTable.DriverReadRows) match {
+      case Some(rows) =>
+        val i = df.schema.fieldIndex(Col)
+        DriverParquet.frame(df.sparkSession, df.schema,
+          rows.sortBy(r => if (r.isNullAt(i)) Long.MinValue else r.getLong(i)))
+      case None => df.sort(Col)
+    }
 }

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters — the
   * supported way for an external library to surface native Catalyst
@@ -30,21 +32,36 @@ object Bridge {
     * that buffer must copy, and Spark's all do). */
   def zipWithRowIds(df: org.apache.spark.sql.DataFrame, colName: String,
                     startAt: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val schema = StructType(df.schema.fields :+
-      StructField(colName, LongType, nullable = false))
-    val rdd = df.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
-      val proj = UnsafeProjection.create(schema)
-      val joined = new JoinedRow
-      val idRow = new GenericInternalRow(1)
-      it.map { case (row, i) =>
-        idRow.update(0, i + startAt)
-        proj(joined(row, idRow)): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
+    val schema = withIdColumn(df.schema, colName)
+    val rdd = df.queryExecution.toRdd.zipWithIndex().mapPartitions(appendIds(schema, startAt))
     session.internalCreateDataFrame(rdd, schema)
+  }
+
+  /** [[zipWithRowIds]] over `rows` (laid out as `schema`) already on the
+    * driver: the same ids, with no job, as a `LocalRelation` frame. */
+  def localRowIds(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+                  rows: Seq[InternalRow], colName: String,
+                  startAt: Long): org.apache.spark.sql.DataFrame = {
+    val out = withIdColumn(schema, colName)
+    val indexed = rows.iterator.zipWithIndex.map { case (r, i) => (r, i.toLong) }
+    DriverParquet.frame(spark, out, appendIds(out, startAt)(indexed).map(_.copy()).toVector)
+  }
+
+  private def withIdColumn(schema: StructType, colName: String): StructType =
+    StructType(schema.fields :+ StructField(colName, LongType, nullable = false))
+
+  /** Each (row, index) as one `UnsafeRow` of `schema` with the id
+    * `index + startAt` appended; the emitted row is reused. */
+  private def appendIds(schema: StructType, startAt: Long)
+                       (it: Iterator[(InternalRow, Long)]): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(schema)
+    val joined = new JoinedRow
+    val idRow = new GenericInternalRow(1)
+    it.map { case (row, i) =>
+      idRow.update(0, i + startAt)
+      proj(joined(row, idRow))
+    }
   }
 
   /** Eagerly free the materialized blocks behind a `localCheckpoint`ed
