@@ -194,7 +194,7 @@ final class HDFStore private (
     * `_rowid`, ordered within partitions) and return its metadata.
     * chunkSize → `maxRecordsPerFile`: the row-group/file analog of the
     * HDF5 chunk (`nimtables.nim:60`). A local frame (rows already on the
-    * driver, within [[HDFTable.DriverReadRows]]) is written on the driver
+    * driver, [[RowIds.localRows]]) is written on the driver
     * by Spark's own parquet writer ([[DriverParquet.write]]), with no
     * Spark job; any other frame by a Spark write. */
   private[graft] def writeSegment(
@@ -208,7 +208,7 @@ final class HDFStore private (
     val cod = codec.orElse(defaultCodec)
     // Per-file row counts go into the manifest NOW, so no later mutation
     // ever re-reads a footer: refinement needs one dir listing only.
-    val fileRows = DriverParquet.localRows(df, HDFTable.DriverReadRows) match {
+    val fileRows = RowIds.localRows(df) match {
       case Some(rows) => DriverParquet.write(spark, segPath, df.schema, rows, chunk, cod)
       case None =>
         var w = df.write.mode("overwrite")

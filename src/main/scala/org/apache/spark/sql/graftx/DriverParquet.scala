@@ -7,7 +7,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -60,14 +60,26 @@ object DriverParquet {
   }
 
   /** The rows of `df` when its optimized plan is a batch `LocalRelation`
-    * of at most `maxRows` rows — rows already on the driver, in `df`'s
-    * column order. `None` for every other plan: nothing is ever collected
-    * from a distributed one. */
-  def localRows(df: DataFrame, maxRows: Long): Option[Seq[InternalRow]] =
+    * — rows already on the driver, in `df`'s column order. `None` for
+    * every other plan: nothing is ever collected from a distributed one. */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] =
     df.queryExecution.optimizedPlan match {
-      case r: LocalRelation if !r.isStreaming && r.data.size <= maxRows => Some(r.data)
+      case r: LocalRelation if !r.isStreaming => Some(r.data)
       case _ => None
     }
+
+  /** Whether `rows` (laid out as `schema`) take at most `maxBytes` bytes
+    * as `UnsafeRow`s. The sum stops at the first row past the bound, so a
+    * check converts at most `maxBytes` of rows, and it converts them with
+    * the interpreted projection, so checking a few rows costs no codegen. */
+  def fitsBytes(schema: StructType, rows: Seq[InternalRow], maxBytes: Long): Boolean = {
+    lazy val unsafe = InterpretedUnsafeProjection.createProjection(schema.fields.toSeq
+      .zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+    rows.iterator.map {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case r => unsafe(r).getSizeInBytes.toLong
+    }.scanLeft(0L)(_ + _).forall(_ <= maxBytes)
+  }
 
   /** Write `rows` (laid out as `schema`) into the directory `dir` with
     * the writer a Spark write task runs: `ParquetFileFormat.prepareWrite`
@@ -75,8 +87,10 @@ object DriverParquet {
     * row-metadata key, timestamp type, rebase modes), `codec` as the
     * write's `compression` option. A new file starts every `chunkRows`
     * rows (else every `spark.sql.files.maxRecordsPerFile`, as a Spark
-    * write would), named `part-00000-<uuid>-c000<ext>`, `-c001`, … so
-    * that name order is row order. No rows still write one empty file,
+    * write would), named `part-00000-<uuid>-c000<ext>`, `-c001`, … with
+    * the counter zero-padded to the width of the last one (`-c0000` …
+    * `-c1000` for 1,001 files), so that name order is row order for any
+    * number of files. No rows still write one empty file,
     * as a Spark write does. Returns each file's row count, in name
     * order. Files go straight to `dir`: the caller makes them visible by
     * its own commit. */
@@ -98,8 +112,11 @@ object DriverParquet {
       val per = chunkRows.orElse(Some(conf.maxRecordsPerFile)).filter(_ > 0)
         .fold(Int.MaxValue)(n => math.min(n, Int.MaxValue.toLong).toInt)
       val chunks = if (rows.isEmpty) Iterator(Seq.empty[InternalRow]) else rows.grouped(per)
+      val last = (rows.size.toLong - 1).max(0L) / per
+      val counter = s"%0${math.max(3, last.toString.length)}d"
       chunks.zipWithIndex.map { case (chunk, i) =>
-        val w = factory.newInstance(new Path(dir, f"part-00000-$uuid-c$i%03d$ext").toString, schema, ctx)
+        val file = s"part-00000-$uuid-c${counter.format(i)}$ext"
+        val w = factory.newInstance(new Path(dir, file).toString, schema, ctx)
         try chunk.foreach(w.write) finally w.close()
         chunk.size.toLong
       }.toVector

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.store.{HDFStore, MetaIO, StoreMode}
-import graft.table.{HDFTable, RowIds}
+import graft.table.RowIds
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -59,7 +59,7 @@ class DriverWriteSpec extends AnyFunSuite {
 
   test("a driver write equals a Spark write: footer, codec, _rowid statistics, rows") {
     val local = RowIds.attach(typedRows(120))
-    val rows = DriverParquet.localRows(local, HDFTable.DriverReadRows)
+    val rows = RowIds.localRows(local)
     assert(rows.exists(_.size == 120), "ids of a local frame are attached on the driver")
     Seq(None, Some("gzip"), Some("zstd")).foreach { codec =>
       val root = TestSpark.tmpDir("dw-eq")
@@ -123,6 +123,44 @@ class DriverWriteSpec extends AnyFunSuite {
     val eFiles = parquetFiles(new Path(st.rootPath, eSeg.dir).toString)
     assert(e.nrows == 0 && eFiles.size == 1 && footer(eFiles.head)(_.getRecordCount) == 0L)
     assert(e.schema == typedRows(0).schema && e.df.count() == 0L)
+    st.close()
+  }
+
+  test("more than 1,000 chunk files keep name order equal to id order") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("dw-many"), StoreMode.Overwrite)
+    st.put("t", (0 until 1001).map(i => (i.toLong, s"s$i")).toDF("k", "s"), chunkSize = Some(1L))
+    val t = st.table("t")
+    val seg = t.meta.segments.head
+    assert(seg.fileRows == Vector.fill(1001)(1L))
+    assert(parquetFiles(new Path(st.rootPath, seg.dir).toString)
+      .map(_.getPath.getName.replaceAll(".*-c(\\d+)\\..*", "$1")) == (0 until 1001).map(i => f"$i%04d"))
+    def ks(d: DataFrame) = d.select("_rowid", "k").as[(Long, Long)].collect().sortBy(_._1).toSeq
+    assert(ks(t.slice(995, 1000)) == (995L to 1000L).map(i => (i, i)))
+    t.delete(99, 101)
+    t.delete(500)
+    val want = ((0L until 99L) ++ (102L until 503L) ++ (504L to 1000L)).zipWithIndex
+      .map { case (k, i) => (i.toLong, k) }
+    assert(ks(t.slice(990, 996)) == want.slice(990, 997))
+    assert(ks(t.df) == want)
+    st.close()
+  }
+
+  test("an incoming _rowid of another type orders a local put by a Spark sort") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("dw-intid"), StoreMode.Overwrite)
+    st.put("t", Seq((5, "c"), (-1, "a"), (2, "b")).toDF(RowIds.Col, "s"))
+    assert(st.table("t").df.select(RowIds.Col, "s").as[(Long, String)].collect().sortBy(_._1).toSeq ==
+      Seq((0L, "a"), (1L, "b"), (2L, "c")))
+    st.close()
+  }
+
+  test("a local frame past the byte bound takes the Spark path") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("dw-bytes"), StoreMode.Overwrite)
+    val wide = (0 until 400).map(i => (i.toLong, s"$i-" + "x" * 12000)).toDF("k", "s")
+    assert(RowIds.localRows(wide).isEmpty && RowIds.localRows(wide.limit(300)).nonEmpty)
+    assert(jobsDuring(st.put("small", wide.limit(300)))._2 == 0, "3.6 MB: all on the driver")
+    assert(jobsDuring(st.put("t", wide))._2 == 2, "4.8 MB: the id job and the write job")
+    assert(st.table("t").slice(397, 399).select("k").as[Long].collect().toSeq == Seq(397L, 398L, 399L))
+    assert(st.table("t").df.select(RowIds.Col, "k").as[(Long, Long)].collect().forall { case (i, k) => i == k })
     st.close()
   }
 
