@@ -2,7 +2,7 @@ package graft.store
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftx.DriverParquet
@@ -216,9 +216,8 @@ final class HDFStore private (
         cod.foreach(c => w = w.option("compression", c))
         w.parquet(segPath.toString)
         // counts from the footers of the files just written, read in parallel
-        val files = fs.listStatus(segPath)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
+        val files = HDFStore.inIdOrder(fs.listStatus(segPath).toSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))).toArray
         val conf = spark.sparkContext.hadoopConfiguration
         java.util.Arrays.stream(files).parallel().mapToLong { f =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
@@ -510,6 +509,19 @@ final class HDFStore private (
 }
 
 object HDFStore {
+  private val PartFile = """part-(\d+)-.*-c(\d+)(\..*)?""".r
+
+  /** A segment's parquet files in id order. A write task names its files
+    * `part-<task>-<uuid>-c<counter><ext>` with the counter padded to only
+    * three digits, so past 999 files of one task name order is not write
+    * order (`c1000` sorts before `c101`): the task and counter numbers
+    * compare as numbers. Other names follow, by name. */
+  private[graft] def inIdOrder(files: Seq[FileStatus]): Seq[FileStatus] =
+    files.sortBy(f => f.getPath.getName match {
+      case PartFile(task, counter, _) => (task.toLong, counter.toLong, "")
+      case name => (Long.MaxValue, Long.MaxValue, name)
+    })
+
   /** ≙ `openHDFStore(filename, mode, chunkSize, compression)`
     * (`nimtables.nim:60-89`). */
   def open(

@@ -99,8 +99,8 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
 
   /** Split a directory run into one run PER PARQUET FILE (row counts from
     * the manifest's `fileRows` — recorded at write time — with id bases by
-    * prefix sum; file name order is partition order is id order for our
-    * sorted writes). This is what makes mutations file-granular: only
+    * prefix sum; file order by task, then counter, [[HDFStore.inIdOrder]],
+    * is partition order is id order for our sorted writes). This is what makes mutations file-granular: only
     * files intersecting the mutated range rewrite; every other file keeps
     * its bytes and its stored ids. One directory listing, NO per-file
     * footer reads; segments predating `fileRows` (e.g. cross-store copies
@@ -111,9 +111,8 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     val p = new Path(store.rootPath, seg.dir)
     val st = store.fs.getFileStatus(p)
     if (st.isFile) return Vector(seg -> Seq(st))
-    val files = store.fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).toVector
+    val files = HDFStore.inIdOrder(store.fs.listStatus(p).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))).toVector
     if (files.length <= 1) return Vector(seg -> files)
     val counts: Vector[Long] =
       if (seg.fileRows.size == files.length) seg.fileRows

@@ -87,10 +87,9 @@ object DriverParquet {
     * row-metadata key, timestamp type, rebase modes), `codec` as the
     * write's `compression` option. A new file starts every `chunkRows`
     * rows (else every `spark.sql.files.maxRecordsPerFile`, as a Spark
-    * write would), named `part-00000-<uuid>-c000<ext>`, `-c001`, … with
-    * the counter zero-padded to the width of the last one (`-c0000` …
-    * `-c1000` for 1,001 files), so that name order is row order for any
-    * number of files. No rows still write one empty file,
+    * write would), named as one Spark write task names its files:
+    * `part-00000-<uuid>-c000<ext>`, `-c001`, …, the counter in row order.
+    * No rows still write one empty file,
     * as a Spark write does. Returns each file's row count, in name
     * order. Files go straight to `dir`: the caller makes them visible by
     * its own commit. */
@@ -112,11 +111,8 @@ object DriverParquet {
       val per = chunkRows.orElse(Some(conf.maxRecordsPerFile)).filter(_ > 0)
         .fold(Int.MaxValue)(n => math.min(n, Int.MaxValue.toLong).toInt)
       val chunks = if (rows.isEmpty) Iterator(Seq.empty[InternalRow]) else rows.grouped(per)
-      val last = (rows.size.toLong - 1).max(0L) / per
-      val counter = s"%0${math.max(3, last.toString.length)}d"
       chunks.zipWithIndex.map { case (chunk, i) =>
-        val file = s"part-00000-$uuid-c${counter.format(i)}$ext"
-        val w = factory.newInstance(new Path(dir, file).toString, schema, ctx)
+        val w = factory.newInstance(new Path(dir, f"part-00000-$uuid-c$i%03d$ext").toString, schema, ctx)
         try chunk.foreach(w.write) finally w.close()
         chunk.size.toLong
       }.toVector

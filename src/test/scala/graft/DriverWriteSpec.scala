@@ -126,22 +126,25 @@ class DriverWriteSpec extends AnyFunSuite {
     st.close()
   }
 
-  test("more than 1,000 chunk files keep name order equal to id order") {
+  test("more than 1,000 chunk files of one write keep id order, on the driver and in one Spark task") {
     val st = HDFStore.open(spark, TestSpark.tmpDir("dw-many"), StoreMode.Overwrite)
-    st.put("t", (0 until 1001).map(i => (i.toLong, s"s$i")).toDF("k", "s"), chunkSize = Some(1L))
-    val t = st.table("t")
-    val seg = t.meta.segments.head
-    assert(seg.fileRows == Vector.fill(1001)(1L))
-    assert(parquetFiles(new Path(st.rootPath, seg.dir).toString)
-      .map(_.getPath.getName.replaceAll(".*-c(\\d+)\\..*", "$1")) == (0 until 1001).map(i => f"$i%04d"))
-    def ks(d: DataFrame) = d.select("_rowid", "k").as[(Long, Long)].collect().sortBy(_._1).toSeq
-    assert(ks(t.slice(995, 1000)) == (995L to 1000L).map(i => (i, i)))
-    t.delete(99, 101)
-    t.delete(500)
-    val want = ((0L until 99L) ++ (102L until 503L) ++ (504L to 1000L)).zipWithIndex
-      .map { case (k, i) => (i.toLong, k) }
-    assert(ks(t.slice(990, 996)) == want.slice(990, 997))
-    assert(ks(t.df) == want)
+    val local = (0 until 1001).map(i => (i.toLong, s"s$i")).toDF("k", "s")
+    val oneTask = spark.range(0, 1001, 1, 1).select(col("id").as("k"), concat(lit("s"), col("id")).as("s"))
+    for ((name, df) <- Seq("local" -> local, "spark" -> oneTask)) {
+      st.put(name, df, chunkSize = Some(1L))
+      val t = st.table(name)
+      val seg = t.meta.segments.head
+      assert(seg.fileRows == Vector.fill(1001)(1L), name)
+      assert(parquetFiles(new Path(st.rootPath, seg.dir).toString).count(_.getPath.getName.contains("-c1000.")) == 1)
+      def ks(d: DataFrame) = d.select("_rowid", "k").as[(Long, Long)].collect().sortBy(_._1).toSeq
+      assert(ks(t.slice(995, 1000)) == (995L to 1000L).map(i => (i, i)), name)
+      t.delete(99, 101)
+      t.delete(500)
+      val want = ((0L until 99L) ++ (102L until 503L) ++ (504L to 1000L)).zipWithIndex
+        .map { case (k, i) => (i.toLong, k) }
+      assert(ks(t.slice(990, 996)) == want.slice(990, 997), name)
+      assert(ks(t.df) == want, name)
+    }
     st.close()
   }
 
