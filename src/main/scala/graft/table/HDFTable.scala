@@ -99,8 +99,9 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
 
   /** Split a directory run into one run PER PARQUET FILE (row counts from
     * the manifest's `fileRows` — recorded at write time — with id bases by
-    * prefix sum; file order by task, then counter, [[HDFStore.inIdOrder]],
-    * is partition order is id order for our sorted writes). This is what makes mutations file-granular: only
+    * prefix sum; file order by task, then counter,
+    * [[HDFStore.inIdOrder]], is partition order is id order for our
+    * sorted writes). This is what makes mutations file-granular: only
     * files intersecting the mutated range rewrite; every other file keeps
     * its bytes and its stored ids. One directory listing, NO per-file
     * footer reads; segments predating `fileRows` (e.g. cross-store copies
