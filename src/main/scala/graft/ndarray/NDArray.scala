@@ -1,8 +1,10 @@
 package graft.ndarray
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.store.HDFStore
 import graft.table.{HDFTable, RowIds}
@@ -107,54 +109,38 @@ final class NDArray private[ndarray] (
   /** Strided hyperslab WRITE ≙ `write_hyperslab` (`datasets.nim:1451-1528`):
     * `values` holds the new cell values in row-major order of the
     * SELECTION (position `pos`, column `value`). The update set is built
-    * distributed — `pos` decomposes into per-dim selection coordinates via
-    * mixed-radix arithmetic, never on the driver — then only intersecting
-    * segments rewrite (file-granular copy-on-write). */
+    * where `values` lives — `pos` decomposes into per-dim selection
+    * coordinates via mixed-radix arithmetic — then [[HDFTable.applyUpdates]]
+    * checks its size and rewrites only intersecting files (file-granular
+    * copy-on-write) from one evaluation of `values`. */
   def writeHyperslabDF(offsets: Seq[Long], counts: Seq[Long],
                        strides_ : Seq[Long], blocks: Seq[Long],
                        values: DataFrame): Unit = {
     slabConds(offsets, counts, strides_, blocks) // validate bounds
     val selSizes = (0 until rank).map(d => counts(d) * blocks(d))
-    val total = selSizes.product
-    // Pin the input so validation and the update read the SAME evaluation:
-    // a non-deterministic `values` could otherwise pass the count check yet
-    // write different (pos, value) rows in the update pass. Parallelism is
-    // size-adaptive (the selection size is exact) — see adaptiveParts.
-    val pinned =
-      (if (adaptiveParts(total) == 1) values.coalesce(1) else values).cache()
-    try {
-      require(pinned.count() == total,
-        s"writeHyperslab: selection has $total elements")
-      val selRadix = selSizes.scanRight(1L)(_ * _).tail
-      val st = strides
-      val valueType = table.schema("value").dataType
-      val iCols = (0 until rank).map { d =>
-        // selection coordinate s_d, then i_d = off + (s_d div blk)*stride + s_d mod blk
-        val s = s"((pos div ${selRadix(d)}) % ${selSizes(d)})"
-        expr(s"${offsets(d)} + ($s div ${blocks(d)}) * ${strides_(d)} + $s % ${blocks(d)}").as(s"i$d")
-      }
-      val coords = pinned.select(iCols :+ col("value").cast(valueType).as("value"): _*)
-      val withId = coords.withColumn(RowIds.Col,
-        (0 until rank).map(d => col(s"i$d") * st(d)).reduce(_ + _))
-      table.applyUpdates(withId)
-    } finally pinned.unpersist()
+    val selRadix = selSizes.scanRight(1L)(_ * _).tail
+    val st = strides
+    val valueType = table.schema("value").dataType
+    val iCols = (0 until rank).map { d =>
+      // selection coordinate s_d, then i_d = off + (s_d div blk)*stride + s_d mod blk
+      val s = s"((pos div ${selRadix(d)}) % ${selSizes(d)})"
+      expr(s"${offsets(d)} + ($s div ${blocks(d)}) * ${strides_(d)} + $s % ${blocks(d)}").as(s"i$d")
+    }
+    val coords = values.select(iCols :+ col("value").cast(valueType).as("value"): _*)
+    table.applyUpdates(coords.withColumn(RowIds.Col,
+      (0 until rank).map(d => col(s"i$d") * st(d)).reduce(_ + _)), Some(selSizes.product))
   }
 
   /** Driver-side convenience for small slab writes (mirrors the
-    * reference's flat `seq[T]` argument). */
+    * reference's flat `seq[T]` argument): the values become a local
+    * frame, so a small write's update set stays on the driver. */
   def writeHyperslab(offsets: Seq[Long], counts: Seq[Long],
                      strides_ : Seq[Long], blocks: Seq[Long],
                      values: Seq[Any]): Unit = {
     val valuesDf = store.spark.createDataFrame(
-      store.spark.sparkContext.parallelize(
-        values.zipWithIndex.map { case (v, p) =>
-          org.apache.spark.sql.Row(p.toLong, v)
-        }.toList, adaptiveParts(values.size.toLong)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("value",
-          table.schema("value").dataType, false))))
+      values.zipWithIndex.map { case (v, p) => Row(p.toLong, v) }.asJava,
+      StructType(Seq(StructField("pos", LongType, false),
+        StructField("value", table.schema("value").dataType, false))))
     writeHyperslabDF(offsets, counts, strides_, blocks, valuesDf)
   }
 
@@ -234,15 +220,10 @@ final class NDArray private[ndarray] (
     val st = strides
     val rows = points.map { p =>
       val id = p.zip(st).map { case (x, s) => x * s }.sum
-      org.apache.spark.sql.Row.fromSeq(p :+ value(id) :+ id)
+      Row.fromSeq(p :+ value(id) :+ id)
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      table.schema.fields :+ org.apache.spark.sql.types.StructField(
-        RowIds.Col, org.apache.spark.sql.types.LongType, false))
-    val updates = store.spark.createDataFrame(
-      store.spark.sparkContext.parallelize(rows.toList,
-        adaptiveParts(rows.size.toLong)), schema)
-    table.applyUpdates(updates)
+    table.applyUpdates(store.spark.createDataFrame(rows.asJava,
+      StructType(table.schema.fields :+ StructField(RowIds.Col, LongType, false))))
   }
 
   /** Broadcast write along one axis — set every element whose `dim`-index

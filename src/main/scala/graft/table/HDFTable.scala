@@ -243,11 +243,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
                         (keep: Long => Boolean): Option[DataFrame] = {
     if (ids.fold(b - a + 1)(_.length.toLong) > HDFTable.DriverReadRows) return None
     // does global [lo, hi] hold a requested row
-    def wanted(lo: Long, hi: Long): Boolean = lo <= hi && ids.forall { s =>
-      val i = java.util.Arrays.binarySearch(s, lo)
-      val from = if (i >= 0) i else -i - 1
-      from < s.length && s(from) <= hi
-    }
+    def wanted(lo: Long, hi: Long): Boolean = lo <= hi && ids.forall(HDFTable.idsIn(_, lo, hi).nonEmpty)
     val m = meta
     // (files, stored-id bounds, stored → global shift, stored ids) per touched run
     val touched = m.segments.zip(m.offsets).flatMap { case (seg, off) =>
@@ -259,7 +255,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
           val hi = math.min(b, run.idBase + shift + run.rows - 1)
           if (!wanted(lo, hi)) None
           else Some((files, lo - shift, hi - shift, shift,
-            ids.map(_.filter(i => i >= lo && i <= hi).map(_ - shift))))
+            ids.map(HDFTable.idsIn(_, lo, hi).map(_ - shift))))
         }
       }
     }
@@ -332,9 +328,9 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     * selection position `pos` (row-major over the slab, `0 until
     * count*block`) plus FULL replacement data columns; the position
     * arithmetic maps each pos to its global `_rowid` distributed, then
-    * [[applyUpdates]] rewrites only intersecting segments (file-granular
-    * copy-on-write). The input is pinned so count-validation and the
-    * update read one evaluation. */
+    * [[applyUpdates]] checks the count and rewrites only the intersecting
+    * file runs (file-granular copy-on-write) from one evaluation of the
+    * input. */
   def writeHyperslab(offset: Long, count: Long, stride: Long, block: Long,
                      values: DataFrame): Unit = {
     store.checkWritable()
@@ -342,21 +338,10 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
       s"bad hyperslab off=$offset count=$count stride=$stride block=$block")
     val last = offset + (count - 1) * stride + block - 1
     checkBounds(offset, last)
-    val total = count * block
-    // size-adaptive parallelism: the selection size is known exactly, so
-    // a 20-row slab write must not fan its validation count + update
-    // passes into one near-empty task per core
-    val sized =
-      if (total <= 65536L) values.coalesce(1) else values
-    val pinned = sized.cache()
-    try {
-      require(pinned.count() == total, s"writeHyperslab: selection has $total rows")
-      val dataCols = schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
-      val withId = pinned.select(
-        (lit(offset) + expr(s"pos div $block") * lit(stride) + expr(s"pos % $block"))
-          .cast(org.apache.spark.sql.types.LongType).as(Col) +: dataCols: _*)
-      applyUpdates(withId)
-    } finally pinned.unpersist()
+    val dataCols = schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
+    applyUpdates(values.select(
+      (lit(offset) + expr(s"pos div $block") * lit(stride) + expr(s"pos % $block"))
+        .cast(LongType).as(Col) +: dataCols: _*), Some(count * block))
   }
 
   /** Coordinate-list selection ≙ `select_elements` reads
@@ -478,144 +463,149 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     store.commit()
   }
 
-  /** Positional overwrite of `k = data.count` rows starting at `at` —
-    * ≙ `table[i] = rec` / `table[a..b] = recs` (`nimtables.nim:177-200`).
-    * Only segments intersecting `[at, at+k)` are rewritten. Local rows
-    * give `k` on the driver; any other frame is cached and counted. */
+  /** The one rewrite loop of every positional mutation: refine the runs
+    * meeting global `[lo, hi]` to file runs, keep each run outside it or
+    * rejected by `touches(off, end)`, replace every other by `f(run, off)`
+    * (`None` drops it), and commit the list in one manifest swap. Later
+    * runs shift by metadata alone. */
+  private def rewriteRuns(lo: Long, hi: Long, touches: (Long, Long) => Boolean = (_, _) => true)
+                         (f: (SegmentMeta, Long) => Option[SegmentMeta]): Unit = {
+    val refined = refineIntersecting(lo, hi)
+    swapSegments(refined.zip(offsetsOf(refined)).flatMap { case (seg, off) =>
+      val end = off + seg.rows - 1
+      if (end < lo || off > hi || !touches(off, end)) Some(seg) else f(seg, off)
+    })
+  }
+
+  /** One file run rewritten as a new run of `rows` rows in id order: its
+    * stored rows that `kept` keeps, their stored ids renumbered to
+    * run-local ids by `renumber`, plus the `incoming` rows, already in
+    * run-local ids. A written count other than `rows` (duplicate or
+    * out-of-range incoming ids) fails before any commit. */
+  private def rewriteRun(seg: SegmentMeta, rows: Long, incoming: Option[DataFrame] = None)
+                        (kept: DataFrame => DataFrame, renumber: Column => Column): SegmentMeta = {
+    val stored = kept(segDf(seg)).withColumn(Col, renumber(col(Col)))
+    val written = writeSorted(incoming.fold(stored)(stored.unionByName(_)), rows)
+    if (written.rows != rows) throw new IllegalStateException(
+      s"rewrite of ${seg.dir} wrote ${written.rows} rows, expected $rows (duplicate or out-of-range ids?)")
+    written
+  }
+
+  /** `f` of `d` and a summary of its `_rowid`s. Rows on the driver are
+    * summarized there, with no job; any other frame is pinned, summarized
+    * in one pass, and read from the pin by `f`, so it is evaluated once. */
+  private def withIds[T](d: DataFrame)(f: (DataFrame, HDFTable.IdSummary) => T): T =
+    RowIds.localRows(d) match {
+      case Some(rows) =>
+        val i = d.schema.fieldIndex(Col)
+        f(d, HDFTable.scanIds(rows.iterator.map(_.getLong(i))))
+      case None =>
+        val pinned = d.cache()
+        try f(pinned, HDFTable.merge(pinned.select(Col).queryExecution.toRdd
+          .mapPartitions(rows => Iterator(HDFTable.scanIds(rows.map(_.getLong(0))))).collect().toSeq))
+        finally pinned.unpersist()
+    }
+
+  /** Positional overwrite of the rows of `data` starting at `at` —
+    * ≙ `table[i] = rec` / `table[a..b] = recs` (`nimtables.nim:177-200`):
+    * [[applyUpdates]] of `data` with ids counted from `at`. */
   def update(at: Long, data: DataFrame): Unit = {
     store.checkWritable()
-    val ided = withLocalIds(data)
-    val repl = ided.withColumn(Col, col(Col) + lit(at))
-    val k = RowIds.localRows(ided).fold(repl.cache().count())(_.size.toLong)
-    if (k == 0) { repl.unpersist(); return }
-    val b = at + k - 1
-    checkBounds(at, b)
-    val refined = refineIntersecting(at, b)
-    val newSegs = refined.zip(offsetsOf(refined)).map { case (seg, off) =>
-      val hi = off + seg.rows - 1
-      if (hi < at || off > b) seg
-      else {
-        val la = math.max(at, off) - off
-        val lb = math.min(b, hi) - off
-        val kept = segDf(seg)
-          .filter(!col(Col).between(la + seg.idBase, lb + seg.idBase))
-          .withColumn(Col, col(Col) - lit(seg.idBase))
-        val incoming = repl.filter(col(Col).between(off + la, off + lb))
-          .withColumn(Col, col(Col) - lit(off))
-        writeSorted(kept.unionByName(incoming), seg.rows)
-      }
-    }.toVector
-    repl.unpersist()
-    swapSegments(newSegs)
+    applyUpdates(withLocalIds(data).withColumn(Col, col(Col) + lit(at)))
   }
 
   /** Scattered positional overwrite: `updates` carries a GLOBAL `_rowid`
     * plus full replacement data columns for an arbitrary id set — the
     * coordinate-list write (`H5Sselect_elements` writes,
-    * `nimhdf5/datasets.nim:1167-1275`) generalized. Only segments whose id
-    * range intersects the update set are rewritten (anti-join + union);
-    * row counts are unchanged. */
-  def applyUpdates(updates: DataFrame): Unit = {
+    * `nimhdf5/datasets.nim:1167-1275`) generalized. Only the file runs
+    * holding an updated id are rewritten; row counts are unchanged. */
+  def applyUpdates(updates: DataFrame): Unit = applyUpdates(updates, None)
+
+  /** [[applyUpdates]], failing unless `updates` holds `expectRows` rows.
+    * Each rewritten run drops the updated ids from its stored rows: a
+    * range of them by `BETWEEN`; other ids, when at most
+    * [[HDFTable.IdSetCap]], by an id list; only an unknown id set by an
+    * anti-join. */
+  private[graft] def applyUpdates(updates: DataFrame, expectRows: Option[Long]): Unit = {
     store.checkWritable()
-    val u = updates.cache()
-    try {
-      val mm = u.agg(min(col(Col)), max(col(Col))).collect()(0)
-      if (mm.isNullAt(0)) return
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      checkBounds(lo, hi)
-      // Exact per-run touch test when the update set is small (the common
-      // coordinate-write case): a bounding-box test alone would rewrite
-      // every run between min and max id — e.g. updating the two corners
-      // of an array must NOT rewrite the middle.
-      val idSetCap = 100000
-      val sampled = u.select(Col).limit(idSetCap + 1).collect().map(_.getLong(0))
-      val exactIds: Option[Array[Long]] =
-        if (sampled.length <= idSetCap) Some(sampled.sorted) else None
-      def touches(off: Long, segHi: Long): Boolean = exactIds match {
-        case Some(ids) =>
-          val i = java.util.Arrays.binarySearch(ids, off)
-          val from = if (i >= 0) i else -i - 1
-          from < ids.length && ids(from) <= segHi
-        case None => true // fall back to bounding box
-      }
-      val refined = refineIntersecting(lo, hi)
-      val newSegs = refined.zip(offsetsOf(refined)).map { case (seg, off) =>
-        val segHi = off + seg.rows - 1
-        if (segHi < lo || off > hi || !touches(off, segHi)) seg
-        else {
-          val local = u.filter(col(Col).between(off, segHi))
-            .withColumn(Col, col(Col) - lit(off))
-          val base = segDf(seg).withColumn(Col, col(Col) - lit(seg.idBase))
-          val kept = base.join(local.select(Col), Seq(Col), "left_anti")
-          val rewritten = writeSorted(kept.unionByName(conform(local)), seg.rows)
-          if (rewritten.rows != seg.rows)
-            throw new IllegalStateException(
-              s"coordinate update changed segment row count ${seg.rows} -> ${rewritten.rows} (duplicate or out-of-range ids?)")
-          rewritten
+    withIds(conform(updates)) { (u, ids) =>
+      expectRows.foreach(n => require(ids.count == n, s"update set has ${ids.count} rows, expected $n"))
+      for (s <- ids.sorted; i <- 1 until s.length)
+        require(s(i) != s(i - 1), s"update set holds id ${s(i)} twice")
+      if (ids.count > 0) {
+        checkBounds(ids.lo, ids.hi)
+        // with the ids known, only runs holding one are rewritten: the two
+        // corners of an array must not rewrite its middle
+        rewriteRuns(ids.lo, ids.hi, (off, end) => ids.sorted.forall(HDFTable.idsIn(_, off, end).nonEmpty)) {
+          (seg, off) =>
+            val end = off + seg.rows - 1
+            val toStored = seg.idBase - off
+            val incoming = u.filter(col(Col).between(off, end)).withColumn(Col, col(Col) - off)
+            def range(a: Long, b: Long): DataFrame => DataFrame =
+              _.filter(!col(Col).between(a + toStored, b + toStored))
+            val drop: DataFrame => DataFrame = ids.sorted.map(HDFTable.idsIn(_, off, end)) match {
+              case Some(in) if in.last - in.head + 1 == in.length => range(in.head, in.last)
+              case Some(in) => _.filter(!col(Col).isInCollection(in.map(_ + toStored)))
+              case None if ids.dense => range(math.max(ids.lo, off), math.min(ids.hi, end))
+              case None => _.join(incoming.select((col(Col) + seg.idBase).as(Col)), Seq(Col), "left_anti")
+            }
+            Some(rewriteRun(seg, seg.rows, Some(incoming))(drop, _ - seg.idBase))
         }
-      }.toVector
-      swapSegments(newSegs)
-    } finally u.unpersist()
+      }
+    }
   }
 
   /** Delete positional range `[a, b]` ≙ `delete(table, a..b)`
-    * (`nimtables.nim:202-227`). Segments fully inside vanish (metadata
-    * only); boundary segments are rewritten with a closed-form renumber
-    * (`id > lb → id - removed`); all later segments shift implicitly. */
+    * (`nimtables.nim:202-227`). Files fully inside vanish (metadata
+    * only); boundary files are rewritten with a closed-form renumber
+    * (`id > lb → id - removed`); all later runs shift implicitly. */
   def delete(a: Long, b: Long): Unit = {
     store.checkWritable()
     checkBounds(a, b)
-    val refined = refineIntersecting(a, b)
-    val newSegs = refined.zip(offsetsOf(refined)).flatMap { case (seg, off) =>
-      val hi = off + seg.rows - 1
-      if (hi < a || off > b) Some(seg)
-      else if (off >= a && hi <= b) None // fully deleted FILE: no I/O at all
+    rewriteRuns(a, b) { (seg, off) =>
+      val end = off + seg.rows - 1
+      if (off >= a && end <= b) None // fully deleted FILE: no I/O at all
       else {
         val la = math.max(a, off) - off + seg.idBase // stored coordinates
-        val lb = math.min(b, hi) - off + seg.idBase
+        val lb = math.min(b, end) - off + seg.idBase
         val removed = lb - la + 1
-        val kept = segDf(seg).filter(!col(Col).between(la, lb))
-          .withColumn(Col,
-            when(col(Col) > lb, col(Col) - removed).otherwise(col(Col)) - lit(seg.idBase))
-        Some(writeSorted(kept, seg.rows - removed))
+        Some(rewriteRun(seg, seg.rows - removed)(_.filter(!col(Col).between(la, lb)),
+          id => when(id > lb, id - removed).otherwise(id) - seg.idBase))
       }
-    }.toVector
-    swapSegments(newSegs)
+    }
   }
 
   def delete(i: Long): Unit = delete(i, i)
 
   /** Insert rows at position `at` ≙ `insert(table, i, data)`
-    * (`nimtables.nim:229-233`). An insert at a segment boundary (incl. 0
-    * and nrows) is PURE METADATA — a new segment spliced into the list;
-    * mid-segment inserts rewrite exactly one segment. */
+    * (`nimtables.nim:229-233`). Whether `at` is a file-run boundary
+    * (incl. 0 and nrows) is read from the manifest before anything is
+    * written. At a boundary the rows become one new segment spliced into
+    * the list — PURE METADATA for every stored row; inside a file they
+    * are spliced into the one rewrite of that file. No rows, no write. */
   def insert(at: Long, data: DataFrame): Unit = {
     store.checkWritable()
     require(at >= 0 && at <= nrows, s"insert position $at out of [0, $nrows]")
     val m = meta
-    val newSeg = store.writeSegment(baseName, withLocalIds(data), m.chunkSize, m.codec)
-    if (newSeg.rows == 0) return
     // refine around the insert point so a mid-SEGMENT insert that lands on
     // a FILE boundary is still pure metadata
-    val segs = if (at == 0 || at == nrows) m.segments
-      else refineIntersecting(math.max(at - 1, 0), at)
+    val segs = if (at == 0 || at == nrows) m.segments else refineIntersecting(at - 1, at)
     val offs = offsetsOf(segs)
-    val boundaryIdx = segs.indices.find(i => offs(i) == at)
-      .orElse(if (at == nrows) Some(segs.size) else None)
-    boundaryIdx match {
-      case Some(i) =>
-        swapSegments((segs.take(i) :+ newSeg) ++ segs.drop(i))
+    val ided = withLocalIds(data)
+    segs.indices.find(i => offs(i) < at && at < offs(i) + segs(i).rows) match {
       case None =>
-        val i = segs.indices.find(j => offs(j) < at && at <= offs(j) + segs(j).rows - 1).get
-        val seg = segs(i); val off = offs(i)
-        val local = at - off
-        val k = newSeg.rows
-        val shifted = segDf(seg).withColumn(Col,
-          when(col(Col) >= local + seg.idBase, col(Col) + k).otherwise(col(Col)) - lit(seg.idBase))
-        val incoming = segDf(newSeg).withColumn(Col, col(Col) + lit(local))
-        val rewritten = writeSorted(shifted.unionByName(incoming),
-          seg.rows + newSeg.rows)
-        swapSegments((segs.take(i) :+ rewritten) ++ segs.drop(i + 1))
+        if (RowIds.localRows(ided).exists(_.isEmpty)) return
+        val seg = store.writeSegment(baseName, ided, m.chunkSize, m.codec)
+        if (seg.rows > 0) swapSegments(segs.patch(offs.count(_ < at), Seq(seg), 0))
+        else store.fs.delete(new Path(store.rootPath, seg.dir), true) // never committed
+      case Some(i) =>
+        val (seg, local) = (segs(i), at - offs(i))
+        val from = local + seg.idBase
+        withIds(ided) { (in, ids) =>
+          if (ids.count > 0) swapSegments(segs.updated(i, rewriteRun(seg, seg.rows + ids.count,
+            Some(in.withColumn(Col, col(Col) + local)))(identity,
+            id => when(id >= from, id + ids.count).otherwise(id) - seg.idBase)))
+        }
     }
   }
 
@@ -683,7 +673,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
         // through the flat multi-path scan — a unionByName chain here
         // cost O(group size) in ANALYSIS time (129 s for a 1000-segment
         // group, ~1.4 s multi-path)
-        val offs = g.scanLeft(0L)(_ + _.rows).init
+        val offs = offsetsOf(g)
         val merged = multiPathRead(g, offs).getOrElse {
           g.zip(offs).map { case (seg, off) =>
             segDf(seg).withColumn(Col, col(Col) + lit(off - seg.idBase))
@@ -716,6 +706,46 @@ object HDFTable {
     * (3 MB) put in 220 ms on the driver and 252 ms by Spark, and 65,536
     * such rows (24 MB) in 873 ms and 693 ms. */
   private[graft] val DriverWriteBytes = 4L << 20
+
+  /** Most incoming ids a mutation keeps on the driver to drop them by an
+    * id list and to rewrite only the runs that hold one. */
+  private val IdSetCap = 100000
+
+  /** The `_rowid`s of a mutation's incoming rows: their count, min and
+    * max, whether they are known to be exactly `[lo, hi]`, and all of
+    * them, sorted, when at most [[IdSetCap]]. */
+  private[table] final case class IdSummary(count: Long, lo: Long, hi: Long, dense: Boolean,
+                                            sorted: Option[Array[Long]])
+
+  /** [[IdSummary]] of `ids` in one pass; dense means strictly ascending
+    * without a gap, as `RowIds.attach` numbers each partition. */
+  private def scanIds(ids: Iterator[Long]): IdSummary = {
+    var (n, lo, hi, ascending) = (0L, Long.MaxValue, Long.MinValue, true)
+    val kept = Array.newBuilder[Long]
+    ids.foreach { i =>
+      if (n < IdSetCap) kept += i
+      ascending &&= n == 0 || i > hi
+      lo = math.min(lo, i); hi = math.max(hi, i); n += 1
+    }
+    IdSummary(n, lo, hi, ascending && hi - lo + 1 == n,
+      if (n <= IdSetCap) Some(kept.result().sorted) else None)
+  }
+
+  /** One [[IdSummary]] of the per-partition summaries `parts`: dense when
+    * every part is and they abut. */
+  private def merge(parts: Seq[IdSummary]): IdSummary = {
+    val live = parts.filter(_.count > 0).sortBy(_.lo)
+    val n = live.map(_.count).sum
+    IdSummary(n, live.headOption.fold(0L)(_.lo), live.map(_.hi).maxOption.getOrElse(-1L),
+      live.forall(_.dense) && live.zip(live.drop(1)).forall { case (p, q) => p.hi + 1 == q.lo },
+      if (n <= IdSetCap) Some(live.flatMap(_.sorted.get).toArray.sorted) else None)
+  }
+
+  /** The ids of `s` (sorted, distinct) that lie in `[a, b]`. */
+  private def idsIn(s: Array[Long], a: Long, b: Long): Array[Long] = {
+    def from(x: Long) = { val i = java.util.Arrays.binarySearch(s, x); if (i >= 0) i else -i - 1 }
+    s.slice(from(a), from(b + 1))
+  }
 }
 
 /**

@@ -91,12 +91,19 @@ def code_lines(src: str) -> int:
     return n + line_has_code
 
 
+def is_commit(rev: str) -> bool:
+    return rev == "WORKTREE" or subprocess.run(
+        ["git", "rev-parse", "--verify", "--quiet", rev + "^{commit}"], cwd=ROOT,
+        capture_output=True).returncode == 0
+
+
 def main() -> int:
-    if len(sys.argv) not in (2, 3):
+    revs = sys.argv[1:]
+    if len(revs) not in (1, 2) or not all(is_commit(r) for r in revs):
         print(__doc__.strip().splitlines()[2], file=sys.stderr)
         return 2
-    base = sys.argv[1]
-    head = sys.argv[2] if len(sys.argv) == 3 else "HEAD"
+    base = revs[0]
+    head = revs[1] if len(revs) == 2 else "HEAD"
     totals = {r: [0, 0] for r in ROOTS}
     rows = []
     for path in sorted(files_at(base) | files_at(head)):
