@@ -271,11 +271,9 @@ object ShardWriter {
         case _ => ()
       }
     }
-    // driver-direct manifest write when the id column's min/max are
-    // MetaIO-supported scalars (the common long/string/double ids) —
-    // the rows are already checkpointed driver-near and bounded at
-    // shards × files, so the old coalesce(1) Spark write paid a whole
-    // job to serialize them; exotic id types keep the Spark path
+    // driver-direct manifest write: the rows are already checkpointed
+    // driver-near and bounded at shards × files, so a Spark write would
+    // pay a whole job to serialize them
     val manifestDf = perFile.drop("_n_bad", "_n_distinct")
       .withColumn("salt", lit(salt))
       .withColumn("buckets", lit(buckets))
@@ -286,29 +284,8 @@ object ShardWriter {
       // can re-derive every stat without being told the schema
       .withColumn("id_col", lit(idCol))
       .withColumn("token_col", lit(tokenCol))
-    def metaIoSupported(v: Any): Boolean = v match {
-      case null | _: Long | _: Int | _: Double | _: Boolean | _: String |
-           _: java.math.BigDecimal => true
-      case _ => false
-    }
-    val mrows = manifestDf.collect()
-    val idExemplar: Option[Any] =
-      mrows.iterator.flatMap(r => Seq(r.getAs[Any]("min_id"),
-        r.getAs[Any]("max_id"))).find(_ != null)
-    if (idExemplar.forall(metaIoSupported)) {
-      val names = manifestDf.columns.toSeq
-      val template = names.map {
-        case c @ ("file" | "salt" | "id_col" | "token_col") => c -> ("": Any)
-        case c @ ("buckets" | "num_shards") => c -> (0: Any)
-        case c @ ("min_id" | "max_id") => c -> idExemplar.getOrElse(0L)
-        case c => c -> (0L: Any)
-      }
-      graft.store.MetaIO.writeRows(spark.sparkContext.hadoopConfiguration,
-        manifestPath(tmp), template,
-        mrows.iterator.map(r => names.map(nm => r.getAs[Any](nm))))
-    } else
-      manifestDf.coalesce(1).write.mode("overwrite")
-        .parquet(manifestPath(tmp))
+    graft.store.MetaIO.writeRows(spark.sparkContext.hadoopConfiguration,
+      manifestPath(tmp), manifestDf.schema, manifestDf.collect().toSeq)
     perFile.unpersist(); ()
   }
 

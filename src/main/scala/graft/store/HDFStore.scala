@@ -219,11 +219,8 @@ final class HDFStore private (
         val files = HDFStore.inIdOrder(fs.listStatus(segPath).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))).toArray
         val conf = spark.sparkContext.hadoopConfiguration
-        java.util.Arrays.stream(files).parallel().mapToLong { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.toArray.toVector
+        java.util.Arrays.stream(files).parallel()
+          .mapToLong(MetaIO.footer(conf, _)(_.getRecordCount)).toArray.toVector
     }
     SegmentMeta(segRel, fileRows.sum, 0L,
       if (fileRows.size > 1) fileRows else Vector.empty)

@@ -2,275 +2,257 @@ package graft.store
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.api.InitContext
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftx.DriverParquet
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 
 /**
- * Driver-direct parquet I/O for ONE-ROW metadata sidecars (`_meta`,
- * `_idbloom`, freshness stamps): a metadata row is a handful of scalars,
- * but routed through `spark.read.parquet(...).head()` /
- * `df.coalesce(1).write.parquet(...)` each access costs a full
- * distributed job — file listing, schema inference (a footer read),
- * scheduling, the commit protocol — ~100 ms of fixed overhead per call
- * on an idle local cluster and a driver→cluster round trip on a real
- * one. Several such calls ride EVERY index append (streaming
- * micro-batches pay them per batch) and every indexed probe's
- * freshness check. Reading and writing the file directly on the driver
- * turns each into single-digit-ms local I/O, and at 100 TB it is
- * strictly the right layering: 1-row metadata never needed a cluster
- * job (guide §5 — the driver should do no DATA work; this is not data).
+ * Driver-direct parquet I/O for small metadata sidecars (`_meta`,
+ * `_codebook`, `_idbloom`, tombstones, shard manifests, sketch cells,
+ * freshness stamps): a metadata row is a handful of scalars, but routed
+ * through `spark.read.parquet(...).head()` / `df.coalesce(1).write
+ * .parquet(...)` each access costs a full distributed job — file listing,
+ * schema inference, scheduling, the commit protocol — ~100 ms of fixed
+ * overhead per call on an idle local cluster and a driver→cluster round
+ * trip on a real one. Several such calls ride every index append and
+ * every indexed probe's freshness check; on the driver each is a few ms
+ * of local I/O. 1-row metadata never needed a cluster job.
  *
- * Files stay ordinary parquet in an ordinary directory (one
- * `part-00000...parquet`), bit-compatible with `spark.read.parquet`
- * and DuckDB `read_parquet` — both directions are spec-tested, and
- * every site keeps its old on-disk contract (a tree written by an old
- * build reads fine: [[readRow]] accepts any single-row parquet dir
- * regardless of writer).
+ * There is one parquet codec, Spark's own: rows are encoded by the writer
+ * a Spark write task runs ([[DriverParquet.write]], uncompressed) and
+ * decoded by the record materializer a Spark scan runs
+ * (`ParquetReadSupport`), then converted to Scala values the way
+ * `Dataset.collect` converts them. Files are ordinary parquet in an
+ * ordinary directory, readable by `spark.read.parquet` and DuckDB, and
+ * any writer's file reads back (Spark's, DuckDB's, or the hand-built
+ * layout of older builds of this class). Every file is opened through
+ * [[open]], with read options built from the caller's conf — an open
+ * with default options re-parses Hadoop's XML defaults each time.
  *
- * Type mapping (write — values are plain JVM types):
- * `Long`→int64, `Int`→int32, `Double`→double, `Boolean`→boolean,
- * `String`→binary(UTF8), `Array[Byte]`→binary,
- * `java.math.BigDecimal`→FLBA(16) DECIMAL(38, scale) (Spark's own
- * layout for precision > 18). Read maps the same encodings back.
+ * Type mapping of a template exemplar (values are plain JVM types):
+ * `Long`→long, `Int`→int, `Double`→double, `Boolean`→boolean,
+ * `String`→string, `Array[Byte]`→binary, `java.math.BigDecimal`→
+ * decimal(38, its scale) (FLBA(16) on disk), and a `Seq` of `Double`,
+ * `Long`, `Int` or `Float`→an array with nullable elements (a 3-level
+ * LIST). Every column is nullable. Reads give the same classes back
+ * (arrays as immutable `Seq`s); other parquet types read as a Spark
+ * collect gives them.
  *
- * Crash semantics on overwrite match the replaced Spark path: the part
- * file is written under a temp name and renamed into place, then stale
- * part files are removed — a torn write leaves either the old row or
- * the new one readable, never a half-row (parquet footers make a
- * truncated file unreadable, which every caller already treats as
- * "missing, degrade loudly/softly per its contract").
+ * Crash semantics on overwrite: the new file is written into a hidden
+ * staging directory under `dir` and renamed into place, then stale data
+ * files are removed — a torn write leaves either the old rows or the new
+ * ones readable, never half of them (parquet footers make a truncated
+ * file unreadable, which every caller treats as "missing").
  */
 object MetaIO {
 
-  private def schemaOf(fields: Seq[(String, Any)]): MessageType = {
-    val b = Types.buildMessage()
-    fields.foreach { case (name, v) =>
-      val t: Type = v match {
-        case _: Long    => Types.optional(INT64).named(name)
-        case _: Int     => Types.optional(INT32).named(name)
-        case _: Double  => Types.optional(DOUBLE).named(name)
-        case _: Boolean => Types.optional(BOOLEAN).named(name)
-        case _: String  => Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(name)
-        case _: Array[Byte] => Types.optional(BINARY).named(name)
-        case d: java.math.BigDecimal => Types.optional(FIXED_LEN_BYTE_ARRAY)
-          .length(16)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, 38)).named(name)
-        case s: Seq[_] =>
-          // Spark's 3-level LIST layout (the shape [[readRows]] already
-          // decodes): optional group (LIST) { repeated group list
-          // { optional <element> } } — scalar elements only, the
-          // template exemplar's first element fixes the type
-          val el = s.headOption.getOrElse(throw new IllegalArgumentException(
-            s"MetaIO: Seq exemplar for '$name' needs one element to fix " +
-              "the element type"))
-          val lb = Types.optionalList()
-          (el match {
-            case _: Double => lb.optionalElement(DOUBLE)
-            case _: Long   => lb.optionalElement(INT64)
-            case _: Int    => lb.optionalElement(INT32)
-            case _: Float  => lb.optionalElement(FLOAT)
-            case other => throw new IllegalArgumentException(
-              s"MetaIO: unsupported list element ${other.getClass} for '$name'")
-          }).named(name)
+  /** The Spark type a template exemplar maps to (see the class doc). */
+  private def sparkType(name: String, v: Any): DataType = v match {
+    case _: Long    => LongType
+    case _: Int     => IntegerType
+    case _: Double  => DoubleType
+    case _: Boolean => BooleanType
+    case _: String  => StringType
+    case _: Array[Byte] => BinaryType
+    case d: java.math.BigDecimal => DecimalType(38, d.scale)
+    case s: Seq[_] =>
+      // the exemplar's first element fixes the element type
+      val el = s.headOption.getOrElse(throw new IllegalArgumentException(
+        s"MetaIO: Seq exemplar for '$name' needs one element to fix " +
+          "the element type"))
+      ArrayType(el match {
+        case _: Double => DoubleType
+        case _: Long   => LongType
+        case _: Int    => IntegerType
+        case _: Float  => FloatType
         case other => throw new IllegalArgumentException(
-          s"MetaIO.writeRow: unsupported type ${other.getClass} for '$name'")
-      }
-      b.addField(t)
-    }
-    b.named("meta")
-  }
-
-  /** 16-byte big-endian two's-complement of the unscaled value — the
-    * FLBA(16) DECIMAL layout Spark writes for precision > 18. */
-  private def decimalBytes(d: java.math.BigDecimal): Array[Byte] = {
-    val unscaled = d.unscaledValue().toByteArray
-    require(unscaled.length <= 16,
-      s"MetaIO: decimal $d exceeds 16-byte unscaled representation")
-    val out = new Array[Byte](16)
-    val sign: Byte = if (d.signum() < 0) -1 else 0
-    java.util.Arrays.fill(out, 0, 16 - unscaled.length, sign)
-    System.arraycopy(unscaled, 0, out, 16 - unscaled.length, unscaled.length)
-    out
+          s"MetaIO: unsupported list element $other for '$name'")
+      }, containsNull = true)
+    case other => throw new IllegalArgumentException(
+      s"MetaIO.writeRow: unsupported type ${other.getClass} for '$name'")
   }
 
   /** Write many rows of the SAME scalar schema as one parquet file at
     * `dir` (overwrite) — for small, already-driver-local tables (sketch
-    * cells, BPE merge lists) whose old `createDataFrame(...).coalesce(1)
-    * .write` path paid a full Spark job to serialize rows the driver
-    * was holding anyway. `template` supplies names + exemplar values
+    * cells, BPE merge lists). `template` supplies names + exemplar values
     * for the schema (so an EMPTY rows iterator still writes a typed,
     * readable file); each row is a value sequence in template order.
+    * Every value must have its exemplar's class, or be null: a bare
+    * `Seq(longVal, doubleVal)` unifies to `Seq[Double]` in Scala, and is
+    * refused rather than written widened. Nothing is written when a row
+    * is refused.
     *
-    * Never rewrites a file in place: the rows go to a fresh tmp file
-    * that is renamed over the old one. Index trees are cloned by hard
-    * links (the gate fixtures' clone helper), so a writer that opened
-    * an existing file for writing would change every linked copy;
-    * every writer into an index tree must keep this rule. */
+    * Never rewrites a file in place: the rows go to a fresh file that is
+    * renamed over the old one. Index trees are cloned by hard links (the
+    * gate fixtures' clone helper), so a writer that opened an existing
+    * file for writing would change every linked copy; every writer into
+    * an index tree must keep this rule. */
   def writeRows(conf: Configuration, dir: String,
                 template: Seq[(String, Any)],
-                rows: IterableOnce[Seq[Any]]): Unit =
-    writeGroups(conf, dir, template, rows)
+                rows: IterableOnce[Seq[Any]]): Unit = {
+    val schema = StructType(template.map { case (n, v) => StructField(n, sparkType(n, v)) })
+    def sameClass(v: Any, ex: Any): Boolean = (v, ex) match {
+      case (null, _) => true
+      // List, Vector and ArraySeq are all the same array column
+      case (s: Seq[_], e: Seq[_]) => s.forall(x => x == null || x.getClass == e.head.getClass)
+      case _ => v.getClass == ex.getClass
+    }
+    val checked = rows.iterator.map { values =>
+      require(values.length == template.length,
+        s"MetaIO.writeRows: row arity ${values.length} != schema ${template.length}")
+      template.lazyZip(values).foreach { case ((n, ex), v) =>
+        if (!sameClass(v, ex)) throw new IllegalArgumentException(
+          s"MetaIO.writeRows: column '$n' declared ${ex.getClass.getSimpleName} " +
+            s"but row holds ${v.getClass.getSimpleName} ($v) — ascribe the " +
+            "row Seq[Any] so Scala cannot numerically widen it")
+      }
+      Row.fromSeq(values)
+    }.toVector
+    writeRows(conf, dir, schema, checked)
+  }
 
   /** Write `fields` as a one-row parquet dir at `dir` (overwrite). */
-  def writeRow(conf: Configuration, dir: String,
-               fields: Seq[(String, Any)]): Unit =
-    writeGroups(conf, dir, fields, Iterator.single(fields.map(_._2)))
+  def writeRow(conf: Configuration, dir: String, fields: Seq[(String, Any)]): Unit =
+    writeRows(conf, dir, fields, Iterator.single(fields.map(_._2)))
 
-  private def writeGroups(conf: Configuration, dir: String,
-                          template: Seq[(String, Any)],
-                          rows: IterableOnce[Seq[Any]]): Unit = {
-    val fields = template
+  /** Write `rows` (laid out as `schema`) as the one data file of `dir`
+    * (overwrite), the same way as the exemplar form. */
+  private[graft] def writeRows(conf: Configuration, dir: String,
+                               schema: StructType, rows: Seq[Row]): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val internal = rows.map(r => toCatalyst(r).asInstanceOf[InternalRow])
     val dp = new Path(dir)
     val fs = dp.getFileSystem(conf)
-    fs.mkdirs(dp)
-    val schema = schemaOf(fields)
-    val tmp = new Path(dp, s".part-00000-${java.util.UUID.randomUUID()}.parquet.tmp")
-    val wconf = new Configuration(conf)
-    GroupWriteSupport.setSchema(schema, wconf)
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, wconf))
-      .withConf(wconf)
-      .withType(schema)
-      .build()
+    val staging = new Path(dp, s".staging-${java.util.UUID.randomUUID()}")
     try {
-      val names = fields.map(_._1)
-      rows.iterator.foreach { values =>
-        require(values.length == names.length,
-          s"MetaIO.writeRows: row arity ${values.length} != schema ${names.length}")
-        val g = new SimpleGroup(schema)
-        names.lazyZip(values).lazyZip(fields.map(_._2)).foreach { (n, v, ex) =>
-          // guard against Scala numeric widening at call sites (a bare
-          // Seq(longVal, doubleVal) unifies to Seq[Double]): every value
-          // must match its template exemplar's runtime class, or be null.
-          // Seq values are exempt from the exact-class check (List vs
-          // Vector vs ArraySeq are all the same LIST column); their
-          // elements are type-checked in the write below.
-          if (v != null && !(v.isInstanceOf[Seq[_]] && ex.isInstanceOf[Seq[_]])
-              && v.getClass != ex.getClass)
-            throw new IllegalArgumentException(
-              s"MetaIO.writeRows: column '$n' declared ${ex.getClass.getSimpleName} " +
-                s"but row holds ${v.getClass.getSimpleName} ($v) — ascribe the " +
-                "row Seq[Any] so Scala cannot numerically widen it")
-          v match {
-            case null           => () // optional field: absent value
-            case v: Long        => g.add(n, v)
-            case v: Int         => g.add(n, v)
-            case v: Double      => g.add(n, v)
-            case v: Boolean     => g.add(n, v)
-            case v: String      => g.add(n, v)
-            case v: Array[Byte] => g.add(n, Binary.fromConstantByteArray(v))
-            case v: java.math.BigDecimal =>
-              g.add(n, Binary.fromConstantByteArray(decimalBytes(v)))
-            case v: Seq[_] =>
-              // 3-level LIST: one repeated "list" group per element, a
-              // NULL element = an empty element group (what readRows
-              // maps back to null)
-              val lg = g.addGroup(n)
-              v.foreach { el =>
-                val e = lg.addGroup(0)
-                el match {
-                  case null       => ()
-                  case d: Double  => e.add(0, d)
-                  case l: Long    => e.add(0, l)
-                  case i: Int     => e.add(0, i)
-                  case f: Float   => e.add(0, f)
-                  case other => throw new IllegalArgumentException(
-                    s"MetaIO.writeRows: unsupported list element " +
-                      s"${other.getClass} for '$n'")
-                }
-              }
-            case v => throw new IllegalArgumentException(
-              s"MetaIO.writeRows: unsupported type ${v.getClass} for '$n'")
-          }
-        }
-        writer.write(g)
-      }
-    } finally writer.close()
-    // swap in: move the CURRENT row aside (never delete it before the
-    // new row is in place — a failed swap must leave the previous row
-    // readable), rename the finished file in, then drop the backup and
-    // every other stale data file. Both renames are REQUIRED to succeed
-    // (Hadoop FileSystems signal failure by returning false; proceeding
-    // past a failed swap would delete the only readable row). Readers
-    // racing the swap see old row, new row, or (between rename and
-    // delete) both — resolveFile takes the name-FIRST file, and the
-    // backup name sorts after `fin`, so the new row wins in the "both"
-    // window; a crash leaves at worst old and new side by side, which
-    // the next writeRow cleans.
-    val fin = new Path(dp, "part-00000-meta.parquet")
-    val existing = fs.listStatus(dp).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith(".") && !n.startsWith("_")
-    }.map(_.getPath)
-    val bak = new Path(dp,
-      s"part-00001-meta-old-${java.util.UUID.randomUUID()}.parquet")
-    if (fs.exists(fin))
-      require(fs.rename(fin, bak),
-        s"MetaIO: rename $fin -> $bak failed; previous row left intact")
-    require(fs.rename(tmp, fin),
-      s"MetaIO: rename $tmp -> $fin failed; previous row preserved at " +
-        s"${if (fs.exists(bak)) bak else "(no previous row)"}")
-    (existing.filter(_.getName != fin.getName) :+ bak)
-      .foreach(p => fs.delete(p, false))
+      // one chunk of at most Int.MaxValue rows: always exactly one file
+      DriverParquet.write(SparkSession.active, staging, schema, internal,
+        Some(Long.MaxValue), Some("uncompressed"))
+      val Array(tmp) = fs.listStatus(staging).filter(isDataFile).map(_.getPath)
+      // swap in: move the CURRENT file aside (never delete it before the
+      // new one is in place — a failed swap must leave the previous rows
+      // readable), rename the new file in, then drop the backup and
+      // every other stale data file. Both renames are REQUIRED to succeed
+      // (Hadoop FileSystems signal failure by returning false). Readers
+      // racing the swap see old rows, new rows, or (between rename and
+      // delete) both — a single-row read takes the name-FIRST file, and
+      // the backup name sorts after `fin`, so the new row wins in the
+      // "both" window; a crash leaves at worst old and new side by side,
+      // which the next write cleans.
+      val fin = new Path(dp, "part-00000-meta.parquet")
+      val existing = fs.listStatus(dp).filter(isDataFile).map(_.getPath)
+      val bak = new Path(dp,
+        s"part-00001-meta-old-${java.util.UUID.randomUUID()}.parquet")
+      if (fs.exists(fin))
+        require(fs.rename(fin, bak),
+          s"MetaIO: rename $fin -> $bak failed; previous row left intact")
+      require(fs.rename(tmp, fin),
+        s"MetaIO: rename $tmp -> $fin failed; previous row preserved at " +
+          s"${if (fs.exists(bak)) bak else "(no previous row)"}")
+      (existing.filter(_.getName != fin.getName) :+ bak)
+        .foreach(p => fs.delete(p, false))
+    } finally fs.delete(staging, true)
   }
+
+  /** The one way this library opens a parquet file (Spark's own scans
+    * aside): read options from the caller's conf, so the open re-parses
+    * no Hadoop XML defaults. The caller closes the reader. */
+  private[graft] def open(conf: Configuration, file: FileStatus): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf, file.getPath).build())
+
+  /** One [[open]] of `file`, closed whatever `f` does. */
+  private[graft] def footer[T](conf: Configuration, file: FileStatus)
+                       (f: ParquetFileReader => T): T = {
+    val r = open(conf, file)
+    try f(r) finally r.close()
+  }
+
+  /** The Spark schema of a file: the one Spark recorded under its
+    * row-metadata key, else Spark's parquet→Catalyst conversion of the
+    * file schema (non-Spark writers). */
+  private def sparkSchema(meta: FileMetaData): StructType =
+    Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+
+  /** The rows of the open file `r`, lazily, decoded by Spark's parquet
+    * record materializer as a scan task decodes them and converted to
+    * Scala values as `collect` converts them: `columns` (all when `None`)
+    * of the file's [[sparkSchema]]; a column missing from it throws. */
+  private def decode(conf: Configuration, r: ParquetFileReader,
+                     columns: Option[Seq[String]]): Iterator[Row] = {
+    val meta = r.getFooter.getFileMetaData
+    val full = sparkSchema(meta)
+    val schema = columns.fold(full)(cs => StructType(cs.map(full(_))))
+    val rconf = new Configuration(conf)
+    rconf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    // the keys Spark's schema converter reads, as a scan sets them
+    val sql = SQLConf.get
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+        SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED)
+      .foreach(e => rconf.setBoolean(e.key, sql.getConf(e)))
+    val support = new ParquetReadSupport()
+    val ctx = support.init(new InitContext(rconf,
+      java.util.Collections.emptyMap[String, java.util.Set[String]](), meta.getSchema))
+    val rows = support.prepareForRead(rconf, meta.getKeyValueMetaData, meta.getSchema, ctx)
+    r.setRequestedSchema(ctx.getRequestedSchema)
+    val io = new ColumnIOFactory(meta.getCreatedBy)
+      .getColumnIO(ctx.getRequestedSchema, meta.getSchema, true)
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+      val records = io.getRecordReader(pages, rows)
+      // converted at once: the materializer reuses its current record
+      Iterator.range(0L, pages.getRowCount)
+        .map(_ => toScala(records.read()).asInstanceOf[Row])
+    }
+  }
+
+  /** A decoded row as a name → value map in schema column order. */
+  private def toMap(row: Row): Map[String, Any] =
+    scala.collection.immutable.VectorMap.from(row.schema.fieldNames.iterator.zip(row.toSeq))
 
   /** Top-level column names of the parquet file/dir at `dir` (footer
     * read only); `None` when missing/empty/unreadable. For the "does
     * this sidecar predate column X" checks that used to pay a Spark
     * schema-inference read. */
   def columnsOf(conf: Configuration, dir: String): Option[Seq[String]] =
-    try {
-      resolveFile(conf, dir).map { file =>
-        val s = footer(conf, file)(_.getFooter.getFileMetaData.getSchema)
-        (0 until s.getFieldCount).map(i => s.getType(i).getName)
-      }
-    } catch { case _: Exception => None }
-
-  /** One footer read of `file`, closed whatever `f` does. */
-  private def footer[T](conf: Configuration, file: Path)
-                       (f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, conf))
-    try f(r) finally r.close()
-  }
+    try firstDataFile(conf, dir).map(footer(conf, _) { r =>
+      val s = r.getFooter.getFileMetaData.getSchema
+      (0 until s.getFieldCount).map(i => s.getType(i).getName)
+    })
+    catch { case _: Exception => None }
 
   /** [[readRow]] restricted to `columns` — a projected read: parquet is
     * columnar, so unrequested columns (e.g. a GBs Bloom binary beside
-    * scalar stats) are never materialized. Column order in the result
-    * map is irrelevant; a requested column missing from the file makes
-    * the read fail → `None` (same contract as an unreadable file). */
+    * scalar stats) are never materialized. A requested column missing
+    * from the file makes the read fail → `None` (same contract as an
+    * unreadable file). */
   def readRowColumns(conf: Configuration, dir: String,
                      columns: Seq[String]): Option[Map[String, Any]] =
-    try {
-      resolveFile(conf, dir).flatMap { file =>
-        val full = footer(conf, file)(_.getFooter.getFileMetaData.getSchema)
-        val b = Types.buildMessage()
-        columns.foreach(c => b.addField(full.getType(full.getFieldIndex(c))))
-        val rconf = new Configuration(conf)
-        rconf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-          b.named("meta").toString)
-        readFirstGroup(rconf, file)
-      }
-    } catch { case _: Exception => None }
+    readFirst(conf, dir, Some(columns))
 
   /** Read the single row of the parquet dir (or file) at `dir` as a
     * name → value map in schema column order; `None` when
-    * missing/empty/unreadable. Accepts
-    * any writer's file (Spark's included). Only the first row of the
-    * first data file is read — the sidecar contract. */
+    * missing/empty/unreadable. Accepts any writer's file. Only the first
+    * row of the first data file is read — the sidecar contract. */
   def readRow(conf: Configuration, dir: String): Option[Map[String, Any]] =
-    try resolveFile(conf, dir).flatMap(f => readFirstGroup(conf, f))
+    readFirst(conf, dir, None)
+
+  private def readFirst(conf: Configuration, dir: String,
+                        columns: Option[Seq[String]]): Option[Map[String, Any]] =
+    try firstDataFile(conf, dir).flatMap(footer(conf, _)(decode(conf, _, columns).nextOption()))
+      .map(toMap)
     catch { case _: Exception => None }
 
   /** ALL rows of every data file under `dir`, files in name order — the
@@ -280,21 +262,8 @@ object MetaIO {
     * empty result would mask corruption the callers refuse loudly). */
   def readRows(conf: Configuration, dir: String): Vector[Map[String, Any]] = {
     val dp = new Path(dir)
-    val fs = dp.getFileSystem(conf)
-    fs.getFileStatus(dp) // throws FileNotFoundException when missing
-    dataFiles(fs, dp).flatMap { file =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), file).withConf(conf).build()
-      try {
-        val buf = Vector.newBuilder[Map[String, Any]]
-        var g = reader.read()
-        while (g != null) {
-          buf += groupToMap(g)
-          g = reader.read()
-        }
-        buf.result()
-      } finally reader.close()
-    }
+    dataFiles(dp.getFileSystem(conf), dp)
+      .flatMap(footer(conf, _)(decode(conf, _, None).map(toMap).toVector))
   }
 
   /** Total row count of every data file under `dir`, summed from the
@@ -315,30 +284,11 @@ object MetaIO {
     * count, and the same reader then reads the projected column. */
   def readLongColumn(conf: Configuration, listing: Seq[FileStatus],
                      column: String, maxRows: Long): Option[Vector[Long]] = {
-    val readers = listing.filter(isDataFile).sortBy(_.getPath.getName)
-      .map(s => ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf)))
+    val readers = listing.filter(isDataFile).sortBy(_.getPath.getName).map(open(conf, _))
     try {
       if (readers.map(_.getRecordCount).sum > maxRows) None
-      else Some(readers.toVector.flatMap { r =>
-        val full = r.getFooter.getFileMetaData.getSchema
-        val proj = Types.buildMessage()
-          .addField(full.getType(full.getFieldIndex(column))).named("c")
-        r.setRequestedSchema(proj)
-        val io = new ColumnIOFactory().getColumnIO(proj)
-        val out = Vector.newBuilder[Long]
-        var pages = r.readNextRowGroup()
-        while (pages != null) {
-          val rows = io.getRecordReader(pages, new GroupRecordConverter(proj))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val g = rows.read()
-            if (g.getFieldRepetitionCount(0) > 0) out += g.getLong(0, 0)
-            i += 1
-          }
-          pages = r.readNextRowGroup()
-        }
-        out.result()
-      })
+      else Some(readers.toVector.flatMap(decode(conf, _, Some(Seq(column)))
+        .collect { case row if !row.isNullAt(0) => row.getLong(0) }))
     } finally readers.foreach(_.close())
   }
 
@@ -346,9 +296,7 @@ object MetaIO {
     * read on the driver instead of the Spark job inference runs: the
     * first data file under `dir` (depth first, skipping what Spark's
     * listing skips — `_` and `.` names that are not `k=v` partition
-    * directories), then the schema Spark recorded under its row-metadata
-    * key, else Spark's parquet→Catalyst conversion of the file schema
-    * (non-Spark writers such as [[writeRows]]). Partition columns are not
+    * directories), then its [[sparkSchema]]. Partition columns are not
     * in it; a read still discovers them from the paths. `None` when `dir`
     * holds no data file. */
   def sparkSchemaOf(conf: Configuration, dir: String): Option[StructType] = {
@@ -359,24 +307,15 @@ object MetaIO {
       !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
         n.endsWith("._COPYING_"))
     }
-    def firstFile(p: Path): Option[Path] = {
+    def firstFile(p: Path): Option[FileStatus] = {
       val children =
         try fs.listStatus(p).filter(visible).sortBy(_.getPath.getName)
         catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-      children.find(_.isFile).map(_.getPath).orElse(children.iterator
+      children.find(_.isFile).orElse(children.iterator
         .filter(_.isDirectory).flatMap(s => firstFile(s.getPath)).nextOption())
     }
-    firstFile(root).map(footer(conf, _) { r =>
-      val meta = r.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get)
-          .convert(meta.getSchema))
-    })
+    firstFile(root).map(footer(conf, _)(r => sparkSchema(r.getFooter.getFileMetaData)))
   }
-
-  /** The footer key Spark writes its own schema JSON under. */
-  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
   private def isDataFile(s: FileStatus): Boolean = {
     val n = s.getPath.getName
@@ -385,101 +324,18 @@ object MetaIO {
 
   /** The data files of an existing `dp` in name order (`dp` itself when
     * it IS a file) — hidden and underscore names (`_SUCCESS`, temp
-    * parts) excluded. */
+    * parts, the staging dir) excluded. Throws when `dp` is missing. */
   private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dp: Path): Vector[Path] =
-    if (fs.getFileStatus(dp).isFile) Vector(dp)
-    else fs.listStatus(dp).filter(isDataFile)
-      .map(_.getPath).sortBy(_.getName).toVector
+                        dp: Path): Vector[FileStatus] = {
+    val st = fs.getFileStatus(dp)
+    if (st.isFile) Vector(st)
+    else fs.listStatus(dp).filter(isDataFile).sortBy(_.getPath.getName).toVector
+  }
 
-  /** The dir's first data file (or `dir` itself when it IS a file);
-    * `None` when missing/empty. */
-  private def resolveFile(conf: Configuration, dir: String): Option[Path] = {
+  /** The first data file of `dir` (or `dir` itself when it IS a file);
+    * `None` when empty, and throws when missing. */
+  private def firstDataFile(conf: Configuration, dir: String): Option[FileStatus] = {
     val dp = new Path(dir)
-    val fs = dp.getFileSystem(conf)
-    if (!fs.exists(dp)) None else dataFiles(fs, dp).headOption
-  }
-
-  private def readFirstGroup(conf: Configuration,
-                             file: Path): Option[Map[String, Any]] = {
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), file).withConf(conf).build()
-    try {
-      val g = reader.read()
-      if (g == null) None else Some(groupToMap(g))
-    } finally reader.close()
-  }
-
-  private def groupToMap(g: org.apache.parquet.example.data.Group): Map[String, Any] = {
-    locally {
-      val schema = g.getType.asInstanceOf[MessageType]
-      val m = (0 until schema.getFieldCount).map { i =>
-        val f = schema.getType(i)
-        val name = f.getName
-        val v: Any =
-          if (g.getFieldRepetitionCount(i) == 0) null
-          else if (!f.isPrimitive) {
-            // Spark's 3-level LIST encoding: optional group f (LIST)
-            // { repeated group list { optional <prim> element } } —
-            // read back as Seq[Any] of the element values (null
-            // elements preserved). Only scalar elements supported.
-            val lst = g.getGroup(i, 0)
-            val n = lst.getFieldRepetitionCount(0)
-            val out: Seq[Any] = (0 until n).map { j =>
-              val el = lst.getGroup(0, j)
-              if (el.getFieldRepetitionCount(0) == 0) null
-              else {
-                val ept = el.getType.getType(0).asPrimitiveType()
-                ept.getPrimitiveTypeName match {
-                  case INT64   => el.getLong(0, 0)
-                  case INT32   => el.getInteger(0, 0)
-                  case DOUBLE  => el.getDouble(0, 0)
-                  case FLOAT   => el.getFloat(0, 0)
-                  case BOOLEAN => el.getBoolean(0, 0)
-                  case _ =>
-                    val bin = el.getBinary(0, 0)
-                    ept.getLogicalTypeAnnotation match {
-                      case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-                        bin.toStringUsingUTF8
-                      case _ => bin.getBytes
-                    }
-                }
-              }
-            }
-            out
-          }
-          else {
-            val pt = f.asPrimitiveType()
-            pt.getPrimitiveTypeName match {
-              case INT64 => pt.getLogicalTypeAnnotation match {
-                case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                  java.math.BigDecimal.valueOf(g.getLong(i, 0), dec.getScale)
-                case _ => g.getLong(i, 0)
-              }
-              case INT32 => pt.getLogicalTypeAnnotation match {
-                case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                  java.math.BigDecimal.valueOf(g.getInteger(i, 0).toLong, dec.getScale)
-                case _ => g.getInteger(i, 0)
-              }
-              case DOUBLE  => g.getDouble(i, 0)
-              case FLOAT   => g.getFloat(i, 0)
-              case BOOLEAN => g.getBoolean(i, 0)
-              case BINARY | FIXED_LEN_BYTE_ARRAY =>
-                val bin = g.getBinary(i, 0)
-                pt.getLogicalTypeAnnotation match {
-                  case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-                    bin.toStringUsingUTF8
-                  case dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                    new java.math.BigDecimal(
-                      new java.math.BigInteger(bin.getBytes), dec.getScale)
-                  case _ => bin.getBytes
-                }
-              case INT96 => g.getInt96(i, 0).getBytes
-            }
-          }
-        name -> v
-      }.to(scala.collection.immutable.VectorMap)
-      m
-    }
+    dataFiles(dp.getFileSystem(conf), dp).headOption
   }
 }

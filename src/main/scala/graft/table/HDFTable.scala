@@ -89,12 +89,9 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
   /** Parquet footer row count — metadata read only, no data pass. This is
     * the FALLBACK for segments whose manifest predates `fileRows`; the
     * counter lets tests assert normal mutations never come through here. */
-  private def parquetRowCount(p: Path): Long = {
+  private def parquetRowCount(f: FileStatus): Long = {
     HDFTable.footerReads.incrementAndGet()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(p, spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    graft.store.MetaIO.footer(spark.sparkContext.hadoopConfiguration, f)(_.getRecordCount)
   }
 
   /** Split a directory run into one run PER PARQUET FILE (row counts from
@@ -117,7 +114,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     if (files.length <= 1) return Vector(seg -> files)
     val counts: Vector[Long] =
       if (seg.fileRows.size == files.length) seg.fileRows
-      else files.map(f => parquetRowCount(f.getPath))
+      else files.map(parquetRowCount)
     var base = seg.idBase
     val runs = files.zip(counts).map { case (f, rows) =>
       val sm = SegmentMeta(seg.dir + "/" + f.getPath.getName, rows, base)
@@ -427,19 +424,33 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
 
   /** Append + attribute update in ONE atomic manifest commit — the
     * streaming sink's exactly-once hinge: the data and its replay-guard
-    * watermark become visible together or not at all. */
+    * watermark become visible together or not at all. No rows leave no
+    * segment, and nothing commits unless a segment or the attribute
+    * changed. */
   private[graft] def appendWithAttr(data: DataFrame, attr: Option[(String, Any)]): Unit = {
     store.checkWritable()
-    val seg = store.writeSegment(baseName, withLocalIds(data), meta.chunkSize, meta.codec)
-    val b = baseName
-    store.manifest.tables += b ->
-      store.manifest.tables(b).copy(segments = (meta.segments :+ seg).filter(_.rows > 0))
-    attr.foreach { case (k, v) =>
-      val cur = store.manifest.attrs.getOrElse(name, Map.empty)
-      store.manifest.attrs += name -> (cur + (k -> graft.store.AttrValue.of(v)))
+    val m = meta
+    val added = newSegment(withLocalIds(data), m)
+    val cur = store.manifest.attrs.getOrElse(name, Map.empty)
+    val attrs = attr.map { case (k, v) => cur + (k -> graft.store.AttrValue.of(v)) }.filter(_ != cur)
+    if (added.nonEmpty || attrs.nonEmpty) {
+      val b = baseName
+      store.manifest.tables += b -> store.manifest.tables(b).copy(segments = m.segments ++ added)
+      attrs.foreach(a => store.manifest.attrs += name -> a)
+      store.commit()
     }
-    store.commit()
   }
+
+  /** `ided` written as a new, uncommitted segment; `None` when it holds
+    * no rows: a local frame writes nothing, and the empty segment of a
+    * distributed one is deleted. */
+  private def newSegment(ided: DataFrame, m: TableMeta): Option[SegmentMeta] =
+    if (RowIds.localRows(ided).exists(_.isEmpty)) None
+    else {
+      val seg = store.writeSegment(baseName, ided, m.chunkSize, m.codec)
+      if (seg.rows == 0) store.fs.delete(new Path(store.rootPath, seg.dir), true)
+      Some(seg).filter(_.rows > 0)
+    }
 
   /** Append + arbitrary catalog-entry update in ONE atomic manifest
     * commit — e.g. an N-D shape bump rides the same commit as its data, so
@@ -594,10 +605,7 @@ final class HDFTable private[graft] (val store: HDFStore, val name: String) {
     val ided = withLocalIds(data)
     segs.indices.find(i => offs(i) < at && at < offs(i) + segs(i).rows) match {
       case None =>
-        if (RowIds.localRows(ided).exists(_.isEmpty)) return
-        val seg = store.writeSegment(baseName, ided, m.chunkSize, m.codec)
-        if (seg.rows > 0) swapSegments(segs.patch(offs.count(_ < at), Seq(seg), 0))
-        else store.fs.delete(new Path(store.rootPath, seg.dir), true) // never committed
+        newSegment(ided, m).foreach(seg => swapSegments(segs.patch(offs.count(_ < at), Seq(seg), 0)))
       case Some(i) =>
         val (seg, local) = (segs(i), at - offs(i))
         val from = local + seg.idBase

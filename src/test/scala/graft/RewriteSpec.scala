@@ -75,4 +75,22 @@ class RewriteSpec extends AnyFunSuite {
     }
     st.close()
   }
+
+  test("0-row appends leave no segment directory and commit only a changed attribute") {
+    val st = HDFStore.open(spark, TestSpark.tmpDir("rw-empty-append"), StoreMode.Overwrite)
+    st.put("t", rows(0, 30), chunkSize = Some(10L))
+    val t = st.table("t")
+    val tableDir = new Path(st.rootPath, "tables/t")
+    def segDirs = st.fs.listStatus(tableDir).map(_.getPath.getName).filter(_.startsWith("seg-")).toSet
+    for ((what, data) <- Seq("local" -> rows(300, 0), "distributed" -> distributed(300, 0));
+         attr <- Seq(None, Some("batch" -> s"$what-1"))) {
+      val (dirs, version) = (segDirs, st.version)
+      t.appendWithAttr(data, attr)
+      assert(segDirs == dirs, s"$what append with $attr left ${segDirs -- dirs}")
+      assert(st.version == version + attr.size, s"$what append with $attr")
+      attr.foreach { case (k, v) => assert(st.attr("t", k).contains(graft.store.AttrValue.of(v))) }
+      assert(keys(t) == (0 until 30))
+    }
+    st.close()
+  }
 }

@@ -12,10 +12,11 @@ noise — but treat sub-0.3 s deltas as within host jitter anyway.
 perfbench records (`.bench_build/records/<workload>-s<seed>-t<trace>.json`,
 min_delta in ms, default 20): prints the end-to-end metrics, then the
 per-call COUNTER movers (`jobs`, `tasks` p50 over the run's calls, and
-the store/index gauges) apart from the per-call `ms` p50 movers. Counters
-repeat exactly on one seed, so a counter mover is a code change while an
-ms mover may be host noise. Counters need traced (`-t1`) records on
-both sides.
+the store/index gauges) apart from the per-call `ms` p50 movers and, for
+traced records, the per-call `driver_ms` p50 movers (driver-side self
+time: wall time outside Spark jobs). Counters repeat exactly on one seed,
+so a counter mover is a code change while an ms mover may be host noise.
+Counters and driver_ms need traced (`-t1`) records on both sides.
 """
 import json
 import statistics
@@ -129,12 +130,20 @@ def perfbench_main(old_path, new_path, min_delta_ms=20.0):
         if not moved:
             print("(none)")
 
-    o_old, o_new = old.get("ops_by_call", {}), new.get("ops_by_call", {})
-    print(f"\n## ms movers (p50 per call, |delta| >= {min_delta_ms:g} ms)")
+    print_ms_movers("ms", old.get("ops_by_call", {}),
+                    new.get("ops_by_call", {}), "ms_p50", min_delta_ms)
+    print_ms_movers("driver_ms", c_old, c_new, "driver_ms_p50", min_delta_ms)
+    if not (c_old and c_new):
+        print("(needs traced -t1 records on both sides)")
+
+
+def print_ms_movers(title, per_old, per_new, key, min_delta_ms):
+    """Per-call `key` movers of at least `min_delta_ms`, worst first."""
+    print(f"\n## {title} movers (p50 per call, |delta| >= {min_delta_ms:g} ms)")
     rows = []
-    for name in set(o_old) & set(o_new):
-        a, b = o_old[name]["ms_p50"], o_new[name]["ms_p50"]
-        if abs(b - a) >= min_delta_ms:
+    for name in set(per_old) & set(per_new):
+        a, b = per_old[name].get(key), per_new[name].get(key)
+        if a is not None and b is not None and abs(b - a) >= min_delta_ms:
             rows.append((b - a, a, b, name))
     for d, a, b, name in sorted(rows, reverse=True):
         print(f"{d:+9.1f} ms  {a:9.1f} -> {b:9.1f}  {name}")
